@@ -54,27 +54,10 @@ def _zip_bytes(members: list[tuple[str, str]]) -> bytes:
     return buf.getvalue()
 
 
-def _read_part(blob: bytes, name: str) -> bytes:
-    try:
-        with zipfile.ZipFile(io.BytesIO(blob)) as zf:
-            return zf.read(name)
-    # zipfile escapes more than BadZipFile on hostile bytes: mutated
-    # compression-method fields raise NotImplementedError, an encryption
-    # flag bit RuntimeError, corrupt deflate payloads zlib.error, truncated
-    # members EOFError/struct.error — ALL must become the ValueError error
-    # envelope, never kill the task
-    except (zipfile.BadZipFile, KeyError, OSError, NotImplementedError,
-            RuntimeError, EOFError, zlib.error, struct.error,
-            zipfile.LargeZipFile) as e:
-        raise ValueError(f"not an OOXML container ({name}): {type(e).__name__}") from e
-
-
 class _Container:
-    """One ``ZipFile`` over the blob for multi-part documents: a k-part read
-    through ``_read_part`` pays k central-directory scans. Error envelope is
-    identical — any failure (open or member read) raises the same
-    ``ValueError`` naming the part being read, exactly as the per-part open
-    did (an unreadable container fails on its FIRST requested part)."""
+    """One ``ZipFile`` over the blob for multi-part documents. Any failure
+    (open or member read) raises one ``ValueError`` naming the part being
+    read (an unreadable container fails on its FIRST requested part)."""
 
     __slots__ = ("_blob", "_zf")
 
@@ -87,6 +70,11 @@ class _Container:
             if self._zf is None:
                 self._zf = zipfile.ZipFile(io.BytesIO(self._blob))
             return self._zf.read(name)
+        # zipfile escapes more than BadZipFile on hostile bytes: mutated
+        # compression-method fields raise NotImplementedError, an encryption
+        # flag bit RuntimeError, corrupt deflate payloads zlib.error, truncated
+        # members EOFError/struct.error — ALL must become the ValueError error
+        # envelope, never kill the task
         except (zipfile.BadZipFile, KeyError, OSError, NotImplementedError,
                 RuntimeError, EOFError, zlib.error, struct.error,
                 zipfile.LargeZipFile) as e:

@@ -492,14 +492,14 @@ def minhash_signatures(
 ) -> DataFrame:
     """K min-hashes per doc: Arrow shingle scan + codegen'd hash/min agg.
 
-    hash_j(s) = hash(j || ':' || s); the signature element is the min over
-    shingles — a uniform order statistic. ``hash_fn``:
-
-    - 'md5' (default): engine-portable, the DuckDB oracle computes identical
-      strings — the correctness-checked variant;
-    - 'xxhash64': ~4x faster (no hex string materialization), the 100 TB
-      path; not oracle-checkable, covered by planted-dup recall tests.
+    hash_j(s) = md5(j || ':' || s); the signature element is the min over
+    shingles — a uniform order statistic. 'md5' is the only signature
+    family: engine-portable, the DuckDB oracle computes identical strings.
+    The 'fast' family never builds per-hash signatures (see
+    _fast_band_keys); any other ``hash_fn`` raises ValueError.
     """
+    if hash_fn != "md5":
+        raise ValueError(f"unknown hash_fn {hash_fn!r}")
     df = ensure_parallelism(df)
     # r8 restructure (measured at sf1.0, 40k docs / 2.0M distinct shingles,
     # 32 cores): the former one-pass HOF form (transform each shingle to its
@@ -523,18 +523,10 @@ def minhash_signatures(
         ),
         "_t", "id", k, with_size=False,
     )
-    if hash_fn == "md5":
-        hcols = [
-            F.min(F.md5(F.concat(F.lit(f"{j}:"), F.col("shingle")))).alias(f"_h{j}")
-            for j in range(n_hashes)
-        ]
-    elif hash_fn == "xxhash64":
-        hcols = [
-            F.min(F.xxhash64(F.lit(j), F.col("shingle"))).alias(f"_h{j}")
-            for j in range(n_hashes)
-        ]
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
+    hcols = [
+        F.min(F.md5(F.concat(F.lit(f"{j}:"), F.col("shingle")))).alias(f"_h{j}")
+        for j in range(n_hashes)
+    ]
     return (
         sh.groupBy("id")
         .agg(*hcols)
@@ -575,16 +567,14 @@ def _fast_band_keys(
     """Band keys via ONE base hash per shingle + a vectorized salt-mix family,
     as a single Arrow ``mapInPandas`` kernel.
 
-    The JVM families (md5/xxhash64) compute n_hashes independent hashes PER
-    SHINGLE through higher-order functions — CodegenFallback, so the whole
-    scan runs interpreted and costs O(shingles x n_hashes) hash evaluations
-    (measured ~550 docs/s/core on extracted-turn text at n_hashes=32). The
-    standard practical MinHash (Broder's resemblance sketch as implemented
-    by e.g. the datasketch library) instead hashes each shingle ONCE and
-    derives the K permutations from it with a cheap mixing family; here
-    hash_j(s) = mix64(base(s) ^ salt_j) with base = pandas' deterministic
-    siphash (``pd.util.hash_array``, fixed key, C speed) and mix64 =
-    splitmix64's finalizer. Uniformity of each hash_j follows from the
+    The JVM md5 family computes n_hashes independent hashes PER SHINGLE:
+    O(shingles x n_hashes) hash evaluations. The standard practical MinHash
+    (Broder's resemblance sketch as implemented by e.g. the datasketch
+    library) instead hashes each shingle ONCE and derives the K
+    permutations from it with a cheap mixing family; here hash_j(s) =
+    mix64(base(s) ^ salt_j) with base = pandas' deterministic siphash
+    (``pd.util.hash_array``, fixed key, C speed) and mix64 = splitmix64's
+    finalizer. Uniformity of each hash_j follows from the
     mixer's avalanche; the planted-neardup recall tests pin the quality.
 
     Shingling is byte-identical to ``exploded_shingles`` (split(" ") incl.
@@ -592,9 +582,9 @@ def _fast_band_keys(
     no band keys (such docs can never be near-dup candidates); empty text
     emits the "" shingle, so all-empty docs still collide, matching
     exact-dup semantics. Band hash = mix64 fold over the band's signature
-    rows. Keys are NOT comparable with md5/xxhash64 keys — the stamped
-    ``hash_fn`` on committed band tables (_check_signature_params) refuses
-    cross-family joins.
+    rows. Keys are NOT comparable with md5 keys — the stamped ``hash_fn``
+    on committed band tables (_check_signature_params) refuses cross-family
+    joins.
 
     Plan shape: one narrow MapInPandas (no shuffle, no self-join). Peak
     python memory is bounded by the flush budget, NOT by Arrow batch size
@@ -677,7 +667,7 @@ def minhash_band_keys(
     n_hashes: int = 32,
     bands: int = 8,
     k: int = 5,
-    hash_fn: str = "xxhash64",
+    hash_fn: str = "md5",
 ) -> DataFrame:
     """``(id, band, band_hash)`` LSH band keys — the shared currency of
     one-shot pair mining (minhash_lsh_pairs) AND the committed band table
@@ -685,22 +675,18 @@ def minhash_band_keys(
     they share a ``(band, band_hash)`` key; the key is content-derived, so
     keys computed today and keys committed last month are comparable
     (within one ``hash_fn`` family — the stamp on committed tables refuses
-    cross-family mixing). Families: 'md5' (engine-portable, DuckDB-oracle
-    checked), 'xxhash64' (JVM-only, no Python workers), 'fast' (Arrow
-    kernel, one base hash + salt-mix family — the 100 TB throughput path,
-    see _fast_band_keys)."""
+    cross-family mixing). Families: 'md5' (the default; engine-portable,
+    DuckDB-oracle checked) and 'fast' (Arrow kernel, one base hash +
+    salt-mix family — the 100 TB throughput path, see _fast_band_keys)."""
     rows = n_hashes // bands
     if hash_fn == "fast":
         return _fast_band_keys(df, text_col, id_col, n_hashes, bands, k)
     sigs = minhash_signatures(df, text_col, id_col, n_hashes, k, hash_fn=hash_fn)
 
     def band_hash(b: int):
-        elems = [F.col("sig")[b * rows + r] for r in range(rows)]
-        if hash_fn == "md5":
-            # engine-portable band key: DuckDB computes the identical string
-            # (md5 over '|'-joined signature hex digests) — the oracle path
-            return F.md5(F.concat_ws("|", *elems))
-        return F.xxhash64(*elems)
+        # engine-portable band key: DuckDB computes the identical string
+        # (md5 over '|'-joined signature hex digests) — the oracle path
+        return F.md5(F.concat_ws("|", *[F.col("sig")[b * rows + r] for r in range(rows)]))
 
     return sigs.select(
         "id",
@@ -722,14 +708,13 @@ def minhash_lsh_pairs(
     n_hashes: int = 32,
     bands: int = 8,
     k: int = 5,
-    hash_fn: str = "xxhash64",
+    hash_fn: str = "md5",
 ) -> DataFrame:
     """Candidate near-dup pairs via LSH banding: docs agreeing on ALL rows of
     any band collide. rows_per_band = n_hashes // bands tunes the similarity
-    threshold (~ (1/bands)^(1/rows)). Defaults to xxhash64 (pure JVM — no
-    Python workers needed; this op's output is candidate pairs, verified
-    downstream anyway); pass hash_fn='fast' for the Arrow salt-mix kernel,
-    measured 2.7x faster end-to-end on a 619k-doc corpus at 32 cores."""
+    threshold (~ (1/bands)^(1/rows)). Defaults to md5 (engine-portable,
+    DuckDB-oracle checked); pass hash_fn='fast' for the Arrow salt-mix
+    kernel, the throughput family."""
     banded = minhash_band_keys(df, text_col, id_col, n_hashes, bands, k, hash_fn)
     # one shuffle clusters each band bucket; colliding pairs are enumerated
     # worker-side via two streaming generates (explode_ordered_pairs) instead

@@ -611,9 +611,7 @@ FROM t
 def dedup_minhash_pairs(spark, sf_dir):
     """LSH banding candidates with md5 band keys — the engine-portable
     variant, value-checked against DuckDB computing the IDENTICAL banding
-    (signatures, '|'-joined band digests, equi-join). The xxhash64 fast path
-    (same plan, no hex strings) is what bench.py times and pytest
-    recall-tests."""
+    (signatures, '|'-joined band digests, equi-join)."""
     d = _t(spark, sf_dir, "documents")
     return dedup.minhash_lsh_pairs(d, n_hashes=32, bands=8, k=5, hash_fn="md5")
 
@@ -622,7 +620,7 @@ def dedup_minhash_pairs_fast(spark, sf_dir):
     """LSH banding candidates via the 'fast' Arrow salt-mix family — one
     deterministic siphash per DISTINCT shingle plus a vectorized splitmix64
     salt-mix permutation family inside a single mapInPandas kernel
-    (dedup._fast_band_keys); the family bench.py and the scaling bench time.
+    (dedup._fast_band_keys), the throughput family.
     Value-checked against an independent per-document pure-numpy replay of
     the same published construction (tools/make_fixtures.py
     compute_dedup_minhash_pairs_fast — no flush budget, no reduceat, no

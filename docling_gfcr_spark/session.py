@@ -22,7 +22,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     builder = (

@@ -764,7 +764,7 @@ def main() -> None:
     ap.add_argument(
         "--minhash", default="32,8,5,md5", metavar="N,BANDS,K,FN",
         help="minhash signature params; MUST match a standing band index "
-        "(ingest refuses incomparable keys). fn: md5|xxhash64",
+        "(ingest refuses incomparable keys). fn: md5|fast",
     )
     ap.add_argument("--decontam-k", type=int, default=8)
     ap.add_argument(

@@ -41,29 +41,25 @@ def test_exact_dedup(spark, planted_docs):
     assert kept.where(F.col("doc_id") >= 200).count() == 0
 
 
-def test_minhash_recall_on_planted_neardups(spark, planted_docs):
-    pairs = dedup.minhash_lsh_pairs(planted_docs, n_hashes=32, bands=8, k=3).toPandas()
+@pytest.mark.parametrize("hash_fn", ["md5", "fast"])
+def test_minhash_recall_on_planted_neardups(spark, planted_docs, hash_fn):
+    pairs = dedup.minhash_lsh_pairs(
+        planted_docs, n_hashes=32, bands=8, k=3, hash_fn=hash_fn
+    ).toPandas()
     got = set(map(tuple, pairs[["id_a", "id_b"]].values.tolist()))
     # all 15 planted near-dup pairs (jaccard ~0.9 on 3-shingles) must be found
     want = {(j, 100 + j) for j in range(15)}
-    missing = want - got
-    assert not missing, f"LSH missed planted near-dups: {missing}"
-    # exact dups collide on every band
-    assert all((j, 200 + j) in got for j in range(5))
-
-
-def test_fast_minhash_recall_on_planted_neardups(spark, planted_docs):
-    pairs = dedup.minhash_lsh_pairs(
-        planted_docs, n_hashes=32, bands=8, k=3, hash_fn="fast"
-    ).toPandas()
-    got = set(map(tuple, pairs[["id_a", "id_b"]].values.tolist()))
-    want = {(j, 100 + j) for j in range(15)}
-    assert want - got == set(), f"fast family missed planted near-dups: {want - got}"
+    assert want - got == set(), f"{hash_fn} family missed planted near-dups: {want - got}"
     # exact dups collide on every band
     assert all((j, 200 + j) in got for j in range(5))
     # candidate precision: unrelated random-vocab docs must not explode the
     # candidate set (a bad mixer would collapse band hashes together)
     assert len(got) < 120
+
+
+def test_minhash_rejects_unknown_family(spark, planted_docs):
+    with pytest.raises(ValueError, match="unknown hash_fn"):
+        dedup.minhash_band_keys(planted_docs, hash_fn="xxhash64")
 
 
 def test_fast_minhash_corner_semantics_and_partition_invariance(spark):
@@ -1200,7 +1196,7 @@ def test_incremental_signature_params_stamped_and_validated(spark, tmp_path):
         "n_hashes": "32", "bands": "8", "k": "3", "hash_fn": "md5",
     }
     # mismatched mine: every divergent parameter refuses
-    for kw in ({"n_hashes": 16}, {"bands": 4}, {"k": 5}, {"hash_fn": "xxhash64"}):
+    for kw in ({"n_hashes": 16}, {"bands": 4}, {"k": 5}, {"hash_fn": "fast"}):
         params = {"n_hashes": 32, "bands": 8, "k": 3, "hash_fn": "md5", **kw}
         with pytest.raises(ValueError, match="incomparable"):
             dedup.incremental_minhash_pairs(spark, table, batch, **params)

@@ -97,18 +97,15 @@ def test_minhash_signature_shape(spark):
     """r8 shape: ONE Arrow shingle kernel (MapInPandas, shared with the
     ngram family) feeding codegen'd salted hashes + a partially-aggregated
     min — never a per-row Python UDF, never the interpreted HOF fold
-    (measured 12.1s vs 3.1s at sf1.0 for the xxhash64 band-key scan)."""
+    (measured 12.1s vs 3.1s at sf1.0 for the band-key scan)."""
     from docling_gfcr_spark.operators import dedup
 
     d = spark.read.parquet(f"{SF}/documents.parquet")
     p = plan_of(dedup.minhash_signatures(d, n_hashes=8))
     assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
     assert p.count("MapInPandas") == 1
-    # md5 (string min) falls back to SortAggregate; the bench-hot xxhash64
-    # family (long min) must get the hash aggregate with map-side partials
+    # md5 (string min) falls back to SortAggregate
     assert "Aggregate" in p
-    p2 = plan_of(dedup.minhash_signatures(d, n_hashes=8, hash_fn="xxhash64"))
-    assert "HashAggregate" in p2 and p2.count("MapInPandas") == 1
 
 
 def test_fast_minhash_band_keys_single_map_no_shuffle(spark):
