@@ -130,7 +130,12 @@ class ParquetStorage:
     def read_lineage(self) -> DataFrame | None:
         try:
             return self.spark.read.parquet(self.lineage_dir)
-        except Exception:  # first run: lineage table does not exist yet
+        except AnalysisException as e:
+            # ONLY a missing lineage dir means "first run": swallowing e.g.
+            # a corrupt footer would re-extract every committed part and
+            # skip the n_parts check in committed_parts
+            if not is_missing_input(e):
+                raise
             return None
 
 
@@ -203,7 +208,9 @@ class IcebergStorage:
     def read_lineage(self) -> DataFrame | None:
         try:
             return self.spark.read.table(self.lineage_table)
-        except Exception:  # first run: table not created yet
+        except AnalysisException as e:  # first run: table not created yet
+            if not is_missing_input(e):
+                raise
             return None
 
 
@@ -411,7 +418,9 @@ def upsert_extracted(
         try:
             storage.read_data()
             has_data = True
-        except Exception:
+        except AnalysisException as e:
+            if not is_missing_input(e):
+                raise
             has_data = False
         if has_data:
             raise ValueError(
@@ -478,7 +487,9 @@ def upsert_extracted(
             # schema instead of writing mixed-schema partition dirs)
             try:
                 merged = upd.select(*storage.read_data().columns)
-            except Exception:
+            except AnalysisException as e:
+                if not is_missing_input(e):
+                    raise
                 merged = upd  # table does not exist yet: updates define it
         storage.overwrite_data_partitions(merged.repartition(len(touched), "part_id"))
     finally:

@@ -6,6 +6,18 @@ Python kernel crosses the JVM boundary as Arrow batches), UTC session TZ
 (oracle comparability), shuffle partitions sized to cores locally (on a real
 cluster: 2-3x total executor cores, or rely on AQE coalescing from a higher
 initial value).
+
+The local driver JVM runs with C1-only JIT (``-XX:TieredStopAtLevel=1``):
+HotSpot stops at the cheap C1 tier and never runs C2. Every caller is a
+short-lived local session. Per-thread /proc sampling of one cold
+``corpus_build`` on a 4-core host (OpenJDK 17) gave 42.5 of ~98 CPU-s to
+the JIT compiler threads against 11.2 CPU-s of executor task time; the C2
+code that CPU buys does not pay back before the session ends, and the cap
+cuts the build's CPU by about a third. The flag goes in
+``spark.driver.defaultJavaOptions``, which spark-submit prepends to
+``spark.driver.extraJavaOptions``, so a caller that passes its own
+``extraJavaOptions`` (perfbench does) keeps the cap. Cluster submits do
+not come through here and set their own JVM flags.
 """
 
 from __future__ import annotations
@@ -41,6 +53,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # C1-only JIT, see the module docstring
+        .config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -354,6 +354,32 @@ def test_upsert_refuses_data_without_lineage(spark, tmp_path):
         lineage.upsert_extracted(spark, out, before.limit(1).select(*cols), n_parts=4)
 
 
+def test_resume_refuses_unreadable_lineage(spark, tmp_path):
+    """A lineage table that exists but cannot be read fails the resume. Read
+    as 'first run', it would re-extract every committed part and skip the
+    n_parts refusal in committed_parts."""
+    out = tmp_path / "corrupt"
+    tdf = transcripts.make_transcripts(spark, 12, mean_turns=3, seed=41, parallelism=2)
+    lineage.run_extraction_job(spark, tdf, str(out), n_parts=4, n_waves=2)
+    lineage_files = list((out / "lineage").glob("*.parquet"))
+    assert lineage_files
+    for f in lineage_files:
+        with open(f, "r+b") as fh:
+            fh.truncate(8)  # no footer left
+
+    def snapshot():
+        return {
+            str(p.relative_to(out)): (p.stat().st_size, p.stat().st_mtime_ns)
+            for p in (out / "data").rglob("*")
+        }
+
+    before = snapshot()
+    with pytest.raises(Exception) as err:
+        lineage.run_extraction_job(spark, tdf, str(out), n_parts=8, n_waves=2)
+    assert not isinstance(err.value, ValueError)  # the read failed, not the n_parts check
+    assert snapshot() == before
+
+
 # ---------------------------------------------------------------------------
 # composed corpus-build job (jobs/corpus_build.py) — stage-level resume
 # ---------------------------------------------------------------------------
