@@ -1050,15 +1050,14 @@ def connected_components(
     Iterative-Spark discipline: every round ``localCheckpoint``s the label
     table — without truncation the lineage doubles per round and planning
     time explodes (the classic iterative-join trap); the convergence check
-    is one count per round. At 10^12 edges you'd switch the propagation step
-    to the large-star/small-star variant (Kiveris et al. 2014) — same loop
-    skeleton, fewer rounds on high-degree graphs.
+    is one count per round. Each superseded round's checkpoint is freed, and
+    so is the last one when the loop gives up.
 
     Returns ``(node, comp)`` where comp = min node id in the component.
     Raises ``RuntimeError`` if the loop hits ``max_iter`` without reaching
     the fixpoint — un-converged labels are silently WRONG clusters, and for
     near-dup graphs a diameter > 50 means the input is not what this
-    operator is for (use the large-star/small-star variant).
+    operator is for.
     """
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     und = (
@@ -1090,109 +1089,13 @@ def connected_components(
             break
     _free_local_checkpoint(und)
     if not converged:
+        _free_local_checkpoint(labels)
         raise RuntimeError(
             f"connected_components did not converge within max_iter={max_iter} "
-            "rounds; labels would be wrong — raise max_iter or switch to "
-            "connected_components_star for high-diameter graphs"
+            "rounds; labels would be wrong — raise max_iter for high-diameter "
+            "graphs"
         )
     return labels
-
-
-def connected_components_star(
-    edges: DataFrame, src: str = "id_a", dst: str = "id_b", max_iter: int = 50
-) -> DataFrame:
-    """Connected components via alternating large-star/small-star (Kiveris
-    et al., "Connected Components in MapReduce and Beyond", SoCC 2014) — the
-    10^12-edge upgrade over plain min-label propagation: rounds are
-    O(log^2 n) in expectation regardless of component DIAMETER (propagation
-    is O(diameter)), and each round is two groupBy-min + join passes with no
-    per-node neighbor lists collected anywhere.
-
-    - large-star: every node u points each neighbor v > u at m = min of
-      u's neighborhood (incl. u);
-    - small-star: every node u points its smaller neighbors (and itself) at
-      the min of those.
-
-    At the fixpoint every edge is (component-min, node). Same API and same
-    output contract as ``connected_components``: (node, comp) with comp =
-    min node id in the component; property-tested equal on random graphs.
-    """
-    def canon(e: DataFrame) -> DataFrame:
-        return (
-            e.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-            .where(F.col("a") != F.col("b"))
-            .distinct()
-        )
-
-    raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    e = canon(raw).localCheckpoint()
-    # nodes come from the RAW edge list, BEFORE canon drops self-loops: a
-    # node whose only incident edge is (x, x) must still be labeled (comp=x),
-    # exactly as connected_components labels it — contract parity on any input
-    nodes = (
-        raw.select(F.col("a").alias("node"))
-        .unionByName(raw.select(F.col("b").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def signature(df: DataFrame) -> tuple:
-        # decimal accumulator: summing raw xxhash64 longs overflows int64
-        # (ANSI mode turns that into a job-killing exception)
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")), F.lit(0)
-            ).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    sig = signature(e)
-    converged = False
-    for _ in range(max_iter):
-        # ---- large-star ----
-        und = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        mins = und.groupBy("a").agg(F.min("b").alias("m")).select(
-            "a", F.least("m", F.col("a")).alias("m")
-        )
-        ls = (
-            und.join(mins, "a")
-            .where(F.col("b") > F.col("a"))
-            .select(F.col("b").alias("a"), F.col("m").alias("b"))
-        )
-        e1 = canon(ls).localCheckpoint()
-        _free_local_checkpoint(e)
-        # ---- small-star (edges directed high -> low) ----
-        d = e1.select(F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b"))
-        mins2 = d.groupBy("a").agg(F.min("b").alias("m"))
-        dj = d.join(mins2, "a")
-        ss = dj.select(F.col("b").alias("a"), F.col("m").alias("b")).unionByName(
-            dj.select("a", F.col("m").alias("b"))
-        )
-        e2 = canon(ss).localCheckpoint()
-        _free_local_checkpoint(e1)
-        new_sig = signature(e2)
-        e = e2
-        if new_sig == sig:
-            converged = True
-            break
-        sig = new_sig
-    if not converged:
-        _free_local_checkpoint(e)
-        _free_local_checkpoint(nodes)
-        raise RuntimeError(
-            f"connected_components_star did not converge within max_iter={max_iter}"
-        )
-    # fixpoint: every edge is (comp-min a, member b); roots + self-loop-only
-    # input nodes (dropped by canon, re-introduced via raw nodes) label
-    # themselves
-    labels = nodes.join(
-        e.select(F.col("b").alias("node"), F.col("a").alias("comp")), "node", "left"
-    ).select("node", F.coalesce("comp", F.col("node")).alias("comp"))
-    out = labels.localCheckpoint()
-    _free_local_checkpoint(e)
-    _free_local_checkpoint(nodes)
-    return out
 
 
 def dedup_cluster_members(
@@ -1203,17 +1106,12 @@ def dedup_cluster_members(
     bands: int = 8,
     k: int = 5,
     hash_fn: str = "md5",
-    algo: str = "propagation",
 ) -> DataFrame:
     """MinHash-LSH pairs -> connected components -> full membership table
     (every doc in a >=2-member near-dup cluster, labeled by its cluster's
-    min doc id — the keeper under keep-first policy). ``algo``:
-    'propagation' (O(diameter) rounds) or 'star' (large-star/small-star,
-    O(log^2 n) rounds — the high-diameter/10^12-edge path); identical
-    output either way."""
+    min doc id — the keeper under keep-first policy)."""
     pairs = minhash_lsh_pairs(df, text_col, id_col, n_hashes, bands, k, hash_fn=hash_fn)
-    cc = {"propagation": connected_components, "star": connected_components_star}[algo]
-    comp = cc(pairs)
+    comp = connected_components(pairs)
     return comp.select(F.col("node").alias(id_col), F.col("comp").alias("cluster_id"))
 
 

@@ -7,12 +7,13 @@
   bit-identical to DuckDB's list_cosine_similarity(::DOUBLE[]) — plus
   per-batch top-k, so the final window ranks ~batches x P x k survivors.
   Linear in corpus size, no shuffle or join of the corpus.
-- ``lsh_topk``: the 100 TB path — random-hyperplane LSH bucketing (signs of
-  h dot-products with seed-derived Gaussian hyperplanes), candidates from
-  same-bucket equi-join (+ optional multi-probe), exact re-rank inside
-  buckets. Recall measured against cosine_topk in tests.
-- ``embedding_neardup_pairs``: all pairs above a cosine threshold inside LSH
-  buckets — embedding-space near-duplicate detection.
+- ``ivf_topk``: the approximate path — a spherical-k-means coarse quantizer;
+  each probe re-ranks exactly inside its ``n_probe`` nearest clusters, so it
+  scores ~n_probe/n_centroids of the corpus. Recall measured against
+  cosine_topk in tests.
+- ``embedding_neardup_pairs``: all pairs above a cosine threshold inside
+  random-hyperplane LSH buckets (signs of dot-products with seed-derived
+  Gaussian hyperplanes) — embedding-space near-duplicate detection.
 """
 
 from __future__ import annotations
@@ -40,19 +41,6 @@ def cosine_sim(a, b) -> Column:
     under ANSI mode a zero-norm vector would otherwise throw
     DIVIDE_BY_ZERO and kill the job; NULL is filtered by every ranking."""
     return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
-
-
-@F.pandas_udf(T.DoubleType())
-def cosine_batch_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """numpy-vectorized cosine for the approximate (LSH) paths: ~10x faster
-    than per-element higher-order functions on wide candidate sets. Not
-    bit-identical to the sequential fold (pairwise summation), so only
-    non-oracle paths use it."""
-    ma = np.asarray(a.tolist(), dtype=np.float64)
-    mb = np.asarray(b.tolist(), dtype=np.float64)
-    num = np.einsum("ij,ij->i", ma, mb)
-    den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
-    return pd.Series(num / den)
 
 
 def _seq_sq_norms(m: np.ndarray) -> np.ndarray:
@@ -217,77 +205,12 @@ def make_bucket_udf(dim: int, n_planes: int, seed: int = 42, n_tables: int = 1):
     return bucket
 
 
-def _with_table_buckets(df: DataFrame, id_alias: str, vec_alias: str, bucket, id_col, vec_col):
-    """(id, vec, table, bucket) — one row per hash table."""
-    df = ensure_parallelism(df)
-    return (
-        df.select(
-            F.col(id_col).alias(id_alias),
-            F.col(vec_col).cast("array<double>").alias(vec_alias),
-            F.posexplode(bucket(F.col(vec_col))).alias("table", "bucket"),
-        )
-    )
-
-
-def lsh_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int = 5,
-    n_planes: int = 4,
-    n_tables: int = 8,
-    seed: int = 42,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: candidates from same (table, bucket), exact re-rank.
-
-    At 10^12 vectors the table/bucket columns are precomputed and the corpus
-    is partitioned by them at write time; a probe then scans
-    ~L * corpus / 2^n_planes rows instead of everything.
-    """
-    from pyspark.sql import Window
-
-    bucket = make_bucket_udf(dim, n_planes, seed, n_tables)
-    c = _with_table_buckets(corpus, "neighbor_id", "cv", bucket, id_col, vec_col)
-    p = _with_table_buckets(probes, "probe_id", "pv", bucket, id_col, vec_col)
-    # dedupe collisions on the (small) id pair BEFORE touching vectors —
-    # distinct over the wide vector columns would shuffle dim*8 bytes per
-    # candidate; ids are 16 bytes
-    cand_ids = (
-        c.join(F.broadcast(p.select("probe_id", "table", "bucket")), ["table", "bucket"])
-        .where(F.col("probe_id") != F.col("neighbor_id"))
-        .select("probe_id", "neighbor_id")
-        .distinct()
-    )
-    pv = probes.select(
-        F.col(id_col).alias("probe_id"), F.col(vec_col).cast("array<double>").alias("pv")
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("cv")
-    )
-    scored = (
-        cand_ids.join(F.broadcast(pv), "probe_id")
-        .join(cv, "neighbor_id")
-        .withColumn("cos", cosine_batch_udf(F.col("pv"), F.col("cv")))
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.where(F.col("cos").isNotNull() & ~F.isnan("cos"))
-        # zero-norm vectors: NULL (try_divide) or NaN (numpy 0/0) cosine;
-        # NaN sorts LARGEST in Spark's DESC order — drop, never rank
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("probe_id", "rank", "neighbor_id", F.round("cos", 6).alias("cos"))
-    )
-
-
 def _bucket_pairs_kernel(threshold: float, pair_chunk: int = 200_000):
     """Grouped-map kernel: ALL qualifying pairs within one (table, bucket).
 
-    Enumerates the triangle in numpy, cosine via the same
-    ``einsum('ij,ij->i')`` path as ``cosine_batch_udf`` (bit-identical to the
-    fixture oracle), chunked so peak memory is bounded by ``pair_chunk``
+    Enumerates the triangle in numpy, cosine via the per-pair
+    ``einsum('ij,ij->i')`` arithmetic the fixture oracle uses (bit-identical),
+    chunked so peak memory is bounded by ``pair_chunk``
     rows regardless of bucket size. Only pairs >= threshold leave the
     worker — the threshold filter happens BEFORE any shuffle.
     """
@@ -422,8 +345,8 @@ def spherical_kmeans(m: np.ndarray, n_centroids: int, seed: int = 42, iters: int
     return cent
 
 
-def make_ivf_assign_udf(centroids: np.ndarray, n_probe: int = 1):
-    """Nearest-centroid id(s) per vector: ``n_probe`` clusters, best first.
+def make_ivf_assign_udf(centroids: np.ndarray):
+    """Nearest-centroid id per vector, as a one-element array.
     Argmax/argsort ties resolve to the lowest centroid id (numpy stable
     behaviour) — deterministic across runs and engines.
 
@@ -440,7 +363,7 @@ def make_ivf_assign_udf(centroids: np.ndarray, n_probe: int = 1):
     def _order(m: np.ndarray) -> np.ndarray:
         m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
         sims = m @ cent.T
-        return np.argsort(-sims, axis=1, kind="stable")[:, :n_probe]
+        return np.argsort(-sims, axis=1, kind="stable")[:, :1]
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def assign(vecs: pd.Series) -> pd.Series:
@@ -473,20 +396,17 @@ def ivf_topk(
     iters: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: np.ndarray | None = None,
 ) -> DataFrame:
-    """IVF ANN: corpus rows carry their nearest-centroid cluster (computed
-    once — at real scale at write time, partitioned by cluster exactly like
-    ``write_bucketed_embeddings``); each probe visits its ``n_probe``
-    closest clusters and re-ranks exactly inside them. Scan fraction ≈
-    n_probe / n_centroids of the corpus instead of all of it."""
+    """IVF ANN: every corpus row is assigned its nearest centroid inside the
+    scoring kernel; each probe visits its ``n_probe`` closest clusters and
+    re-ranks exactly inside them. Scored fraction ≈ n_probe / n_centroids
+    of the corpus instead of all of it."""
     from pyspark.sql import Window
 
-    if centroids is None:
-        centroids = train_ivf_centroids(
-            corpus, n_centroids, seed, iters, id_col=id_col, vec_col=vec_col
-        )
-    cent = np.ascontiguousarray(centroids, dtype=np.float64)
+    cent = np.ascontiguousarray(
+        train_ivf_centroids(corpus, n_centroids, seed, iters, id_col=id_col, vec_col=vec_col),
+        dtype=np.float64,
+    )
     dim = cent.shape[1]
     id_type = corpus.schema[id_col].dataType.simpleString()
 
@@ -523,9 +443,9 @@ def ivf_topk(
     def _ivf_kernel(batches):
         """Per Arrow batch: assign rows to their nearest centroid (same
         arithmetic as the former assign UDF), score each row against the
-        probes visiting that cluster with the IDENTICAL per-pair
-        einsum/norm arithmetic ``cosine_batch_udf`` used (stacked pair
-        arrays, so every float matches the fixture oracle bit-for-bit),
+        probes visiting that cluster with the per-pair einsum/norm
+        arithmetic of the fixture oracle (stacked pair arrays, so every
+        float matches it bit-for-bit),
         and emit only each probe's per-batch top-k."""
         empty = pd.DataFrame(
             {"probe_id": pd.Series([], dtype=object),
@@ -558,8 +478,8 @@ def ivf_topk(
                     continue
                 rows = np.flatnonzero(c_assign == c)
                 n_c, m_c = rows.size, pidx.size
-                # stacked per-pair arrays -> same einsum/norm arithmetic as
-                # cosine_batch_udf (bit-identical per pair)
+                # stacked per-pair arrays -> the oracle's einsum/norm
+                # arithmetic (bit-identical per pair)
                 ma = pm[np.tile(pidx, n_c)]
                 mb = cm[np.repeat(rows, m_c)]
                 num = np.einsum("ij,ij->i", ma, mb)
@@ -610,81 +530,6 @@ def ivf_topk(
     )
 
 
-def write_ivf_corpus(
-    corpus: DataFrame,
-    path: str,
-    centroids: np.ndarray | None = None,
-    n_centroids: int = 16,
-    seed: int = 42,
-    iters: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
-    """The IVF twin of ``write_bucketed_embeddings``: nearest-centroid
-    assignment computed ONCE at write time, data physically partitioned by
-    cluster. Returns the centroids — the caller persists them next to the
-    table (a (n_centroids x dim) float array is metadata, not data).
-    Downstream probes (``ivf_topk_bucketed``) then scan only their n_probe
-    cluster directories: ~n_probe/n_centroids of the corpus."""
-    if centroids is None:
-        centroids = train_ivf_centroids(
-            corpus, n_centroids, seed, iters, id_col=id_col, vec_col=vec_col
-        )
-    assign1 = make_ivf_assign_udf(centroids, n_probe=1)
-    (
-        corpus.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-            assign1(F.col(vec_col))[0].alias("cluster"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("cluster")
-        .parquet(path)
-    )
-    return centroids
-
-
-def ivf_topk_bucketed(
-    spark,
-    path: str,
-    probes: DataFrame,
-    centroids: np.ndarray,
-    k: int = 5,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF ANN against a ``write_ivf_corpus`` layout with PARTITION PRUNING:
-    only the probes' n_probe nearest cluster directories are scanned, then
-    exact re-rank inside them — identical results to ``ivf_topk`` with the
-    same centroids (pinned by test)."""
-    from pyspark.sql import Window
-
-    assignp = make_ivf_assign_udf(centroids, n_probe=n_probe)
-    p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).cast("array<double>").alias("pv"),
-        F.explode(assignp(F.col(vec_col))).alias("cluster"),
-    )
-    probe_clusters = sorted({int(r["cluster"]) for r in p.select("cluster").distinct().collect()})
-    corpus = spark.read.parquet(path)
-    # static cluster IN-list -> partition pruning at the scan
-    pruned = corpus.where(F.col("cluster").isin(probe_clusters))
-    cand = (
-        pruned.join(F.broadcast(p), "cluster")
-        .where(F.col("probe_id") != F.col("id"))
-        .select("probe_id", "pv", F.col("id").alias("neighbor_id"), F.col("v").alias("cv"))
-        .withColumn("cos", cosine_batch_udf(F.col("pv"), F.col("cv")))
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        cand.where(F.col("cos").isNotNull() & ~F.isnan("cos"))  # see cosine_topk
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("probe_id", "rank", "neighbor_id", F.round("cos", 6).alias("cos"))
-    )
-
-
 def embedding_neardup_pairs(
     corpus: DataFrame,
     threshold: float = 0.95,
@@ -698,83 +543,15 @@ def embedding_neardup_pairs(
     """Pairs with cosine >= threshold, candidates limited to same
     (table, bucket) — multi-table OR-construction for recall. Skew note: a
     degenerate bucket holding B vectors costs B^2/2 kernel work; the lever
-    is n_planes (bucket count 2^n_planes), chosen at write time at scale."""
+    is n_planes (bucket count 2^n_planes)."""
     bucket = make_bucket_udf(dim, n_planes, seed, n_tables)
-    tb = _with_table_buckets(corpus, "id", "v", bucket, id_col, vec_col)
+    # (id, v, table, bucket): one row per hash table
+    tb = ensure_parallelism(corpus).select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).cast("array<double>").alias("v"),
+        F.posexplode(bucket(F.col(vec_col))).alias("table", "bucket"),
+    )
     return _neardup_from_buckets(tb, threshold)
-
-
-def write_bucketed_embeddings(
-    corpus: DataFrame,
-    path: str,
-    n_planes: int = 6,
-    n_tables: int = 8,
-    seed: int = 42,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """The 100 TB layout: bucket columns computed ONCE at write time, data
-    physically partitioned by (table, bucket). Downstream near-dup runs pay
-    no hashing UDF and read already-clustered groups; probe-style lookups
-    (``lsh_topk_bucketed``) prune to exactly the probes' partitions."""
-    bucket = make_bucket_udf(dim, n_planes, seed, n_tables)
-    tb = _with_table_buckets(corpus, "id", "v", bucket, id_col, vec_col)
-    tb.write.mode("overwrite").partitionBy("table", "bucket").parquet(path)
-
-
-def neardup_from_bucketed(spark, path: str, threshold: float = 0.95) -> DataFrame:
-    """Near-dup pairs over a ``write_bucketed_embeddings`` layout."""
-    return _neardup_from_buckets(spark.read.parquet(path), threshold)
-
-
-def lsh_topk_bucketed(
-    spark,
-    path: str,
-    probes: DataFrame,
-    k: int = 5,
-    n_planes: int = 6,
-    n_tables: int = 8,
-    seed: int = 42,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k against the bucketed layout with PARTITION PRUNING:
-    only the (table, bucket) directories the probes hash into are scanned —
-    ~L * corpus / 2^n_planes rows instead of the full table."""
-    from pyspark.sql import Window
-
-    bucket = make_bucket_udf(dim, n_planes, seed, n_tables)
-    p = _with_table_buckets(probes, "probe_id", "pv", bucket, id_col, vec_col)
-    probe_buckets = [
-        (int(r["table"]), int(r["bucket"]))
-        for r in p.select("table", "bucket").distinct().collect()
-    ]
-    corpus = spark.read.parquet(path)
-    # static (table, bucket) IN-list -> partition pruning at the scan
-    pruned = corpus.where(
-        F.struct(F.col("table"), F.col("bucket")).isin(
-            [F.struct(F.lit(t), F.lit(b)) for t, b in probe_buckets]
-        )
-    )
-    cand = (
-        pruned.join(F.broadcast(p), ["table", "bucket"])
-        .where(F.col("probe_id") != F.col("id"))
-        .select("probe_id", "pv", F.col("id").alias("neighbor_id"), F.col("v").alias("cv"))
-        # dedupe multi-table collisions on the pair KEY (duplicate rows are
-        # byte-identical, so any survivor is correct; never distinct() over
-        # the embedding arrays themselves)
-        .dropDuplicates(["probe_id", "neighbor_id"])
-        .withColumn("cos", cosine_batch_udf(F.col("pv"), F.col("cv")))
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        cand.where(F.col("cos").isNotNull() & ~F.isnan("cos"))  # see cosine_topk
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("probe_id", "rank", "neighbor_id", F.round("cos", 6).alias("cos"))
-    )
 
 
 def semantic_dedup_cluster_kernel(
@@ -875,10 +652,9 @@ def semantic_dedup(
       UDF — Spark recomputes shared lineage, it does not share it). The
       census side aggregates map-side to one row per centroid, so the
       extra cost is one more scan+assign pass, not a shuffle; a pipeline
-      that already materializes assignments (e.g. write_ivf_corpus's
-      cluster-partitioned layout) should pass ``centroids`` and group the
-      stored cluster column instead, paying the census against the
-      materialized table.
+      that already materializes assignments should pass ``centroids`` and
+      group the stored cluster column instead, paying the census against
+      the materialized table.
     """
     cent = (
         np.ascontiguousarray(centroids, dtype=np.float64)
@@ -887,7 +663,7 @@ def semantic_dedup(
             corpus, n_centroids, seed, iters, id_col=id_col, vec_col=vec_col
         )
     )
-    assign = make_ivf_assign_udf(cent, n_probe=1)
+    assign = make_ivf_assign_udf(cent)
     assigned = corpus.select(
         F.col(id_col).cast("long").alias("vec_id"),
         F.col(vec_col).alias("embedding"),
@@ -1195,7 +971,7 @@ def embed_and_assign(
     codebook rides in the UDF closure; dirty rows assign to the -1 sentinel
     cluster, which incremental verdicts pass through KEPT and the index
     append skips)."""
-    assign = make_ivf_assign_udf(np.ascontiguousarray(centroids, dtype=np.float64), n_probe=1)
+    assign = make_ivf_assign_udf(np.ascontiguousarray(centroids, dtype=np.float64))
     emb = make_hashing_embed_udf(dim)(F.col(text_col).cast("string"))
     return docs.select(
         F.col(id_col).cast("string").alias("id"),
@@ -1370,7 +1146,7 @@ def recluster_semantic_index(
     cent = train_ivf_centroids(
         keepers, k, seed=seed, iters=iters, id_col="vec_id", vec_col="embedding"
     )
-    assign = make_ivf_assign_udf(cent, n_probe=1)
+    assign = make_ivf_assign_udf(cent)
     reassigned = keepers.select(
         "id", "vec_id", "embedding",
         F.element_at(assign(F.col("embedding")), 1).alias("cluster"),

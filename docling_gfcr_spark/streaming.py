@@ -441,85 +441,9 @@ def stream_ingest_semantic(
     return writer.start()
 
 
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def tws_available() -> bool:
-    """transformWithStateInPandas needs the ``protobuf`` package (its state
-    server speaks protobuf to the JVM). Absent here — the gated test skips,
-    exactly like the Iceberg storage twin; it runs wherever protobuf exists.
-    """
-    import importlib.util
-
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # no 'google' namespace package at all
-        return False
-
-
-def stateful_turn_progress_tws(stream: DataFrame) -> DataFrame:
-    """Spark 4 ``transformWithStateInPandas`` twin of
-    :func:`stateful_turn_progress` — the new arbitrary-state API (typed
-    ValueState, timers, TTL) that supersedes ``applyInPandasWithState`` for
-    production stateful pipelines. Same contract: per conversation, running
-    (n_turns, max_turn_idx, n_batches) across micro-batches, update mode.
-
-    Requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass = ROCKSDB_PROVIDER``) —
-    which is also the right provider at 100 TB: state lives off-heap/on-disk
-    with changelog checkpointing instead of resident JVM heap — and the
-    ``protobuf`` package (see :func:`tws_available`; this sandbox lacks it,
-    so the equality test is environment-gated like the Iceberg one). The
-    processor logic itself is identical to the applyInPandasWithState twin,
-    which IS fully tested here.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class ConvProgress(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "progress", "n_turns long, max_turn_idx long, n_batches long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n_turns, max_idx, n_batches = (
-                self._state.get() if self._state.exists() else (0, 0, 0)
-            )
-            for pdf in rows:
-                n_turns += len(pdf)
-                if len(pdf):
-                    max_idx = max(max_idx, int(pdf["turn_idx"].max()))
-            n_batches += 1
-            self._state.update((n_turns, max_idx, n_batches))
-            yield pd.DataFrame(
-                {
-                    "conv_id": [key[0]],
-                    "n_turns": [n_turns],
-                    "max_turn_idx": [max_idx],
-                    "n_batches": [n_batches],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy("conv_id").transformWithStateInPandas(
-        statefulProcessor=ConvProgress(),
-        outputStructType="conv_id string, n_turns long, max_turn_idx long, n_batches long",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def stateful_turn_progress(stream: DataFrame, gap_turns: int = 100):
+def stateful_turn_progress(stream: DataFrame):
     """Custom stateful streaming operator (applyInPandasWithState): per
-    conversation, maintain running (n_turns, max_turn_idx, n_errors) across
+    conversation, maintain running (n_turns, max_turn_idx, n_batches) across
     micro-batches — the live-ingest counterpart of the batch lineage metrics.
 
     State: one row per conv_id, updated incrementally; emits the running

@@ -140,3 +140,18 @@ def test_dedup_clusters_sql_twin_matches_union_find_fixture():
         .astype("int64")
     )
     pd.testing.assert_frame_equal(got, fix)
+
+
+def test_query_registry_inventory():
+    """``__spark_entry__`` exposes a fixed query-name set: 88 queries (operator
+    twins may go, their names stay and route to the survivor) and 87 oracles,
+    each keyed by a query name. Needs no JVM: building the registries runs
+    no Spark."""
+    import __spark_entry__ as entry
+
+    names = entry.queries()
+    oracles = entry.oracle_sql()
+    assert len(names) == 88
+    assert "dedup_clusters_star" in names
+    assert len(oracles) == 87
+    assert set(oracles) <= set(names), sorted(set(oracles) - set(names))

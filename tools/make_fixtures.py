@@ -1072,8 +1072,8 @@ def compute_corpus_ingest_semantic() -> pd.DataFrame:
 
 def compute_semantic_dedup() -> pd.DataFrame:
     """Local oracle for queries.semantic_dedup: the trainer's md5-threshold
-    sample rule + shared spherical_kmeans + argmax assignment (n_probe=1 —
-    same first-occurrence tie rule as the Spark assign UDF's stable argsort),
+    sample rule + shared spherical_kmeans + argmax assignment (the same
+    first-occurrence tie rule as the Spark assign UDF's stable argsort),
     then per cluster the IDENTICAL shared greedy kernel
     (similarity.semantic_dedup_cluster_kernel) — bit-identical floats by
     construction."""
