@@ -12,8 +12,8 @@ Layout
                  unit-testable) that preserve the reference's text semantics
                  byte-for-byte (see each module's file:line citations).
 - ``pipeline.py``  the columnar extraction pipeline: route -> fused Arrow pandas
-                 UDF -> optimize -> validate -> metrics, with explicit
-                 partitioning / skew salting and stable turn ordering.
+                 UDF -> optimize -> validate -> metrics, with skew-safe
+                 two-phase assembly and stable turn ordering.
 - ``transcripts.py``  deterministic distributed synthetic transcripts generator.
 - ``lineage.py``  per-partition lineage checkpointing + resume (anti-join).
 - ``operators/``  large-scale training-data ops: dedup (exact / MinHash-LSH /

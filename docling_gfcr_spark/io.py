@@ -4,15 +4,16 @@
   jsonschema before any work (V1, /root/reference/scripts/markdown_agent.py:444);
   here the contract is the input-hint DataFrame schema — fail fast with a
   field-by-field diff instead of a mid-job analysis error.
-- ``write_bucketed`` / ``read_bucketed``: hash-bucketed tables so repeated
-  joins/aggregations on the bucket key are co-located and need NO exchange —
-  the storage-level answer to "don't shuffle the 100 TB side every query"
-  (tests assert the join plan is exchange-free).
+- ``write_bucketed``: hash-bucketed tables (read back with
+  ``spark.table``) so repeated joins/aggregations on the bucket key are
+  co-located and need NO exchange — the storage-level answer to "don't
+  shuffle the 100 TB side every query" (tests assert the join plan is
+  exchange-free).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 INPUT_HINT_SCHEMA: dict[str, str] = {
     "conv_id": "string",
@@ -49,108 +50,6 @@ def validate_input_schema(df: DataFrame) -> DataFrame:
     return df
 
 
-def dir_bytes(spark: SparkSession, path: str) -> int:
-    """Total bytes under ``path`` via the Hadoop FileSystem API (works for
-    any configured filesystem, not just local)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return int(fs.getContentSummary(hpath).getLength())
-
-
-def compact_parquet(
-    spark: SparkSession,
-    src_dir: str,
-    dst_dir: str,
-    target_mb: int = 256,
-    verify: bool = True,
-) -> dict:
-    """Small-file COMPACTION — the standard table-maintenance job: streaming
-    ingest and fine-grained partition overwrites leave thousands of KB-sized
-    files whose per-file open/footer cost dominates scans at 100 TB. Rewrite
-    ``src_dir`` into ``ceil(bytes / target_mb)`` right-sized files at
-    ``dst_dir``.
-
-    - Output file count comes from the ACTUAL byte size (Hadoop
-      ContentSummary), not row counts — the quantity scan cost scales with.
-    - ``coalesce`` (not repartition) when shrinking: merging files needs no
-      shuffle; a scale-out to MORE files than input splits uses repartition
-      with round-robin to keep outputs even.
-    - ``verify=True`` compares an order-insensitive CONTENT digest (count +
-      checksum over every field of every row) of source and destination
-      before reporting — compaction must be provably lossless, not just
-      row-count-preserving, before the catalog pointer swaps (the swap
-      itself is the table format's job: Iceberg RewriteFiles / an atomic
-      catalog repoint; on a raw directory the caller renames).
-
-    Returns ``{"n_rows", "bytes_in", "files_out"}``.
-    """
-    import math
-    import os
-
-    from pyspark.sql import functions as F
-
-    def _canon(p: str) -> str:
-        # fully-qualified Hadoop URI (fills the default scheme/authority, so
-        # 'hdfs://nn/t' vs '/t' vs 'file:/t' compare correctly on any
-        # configured filesystem), plus realpath for local symlink aliases
-        jvm = spark._jvm
-        hp = jvm.org.apache.hadoop.fs.Path(p)
-        fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
-        q = fs.makeQualified(hp).toUri()
-        path = q.getPath()
-        if (q.getScheme() or "file") == "file":
-            path = os.path.realpath(path)
-        return f"{q.getScheme()}://{q.getAuthority() or ''}{path}".rstrip("/")
-
-    # overwrite-mode on the directory being read would delete the source
-    # mid-job; compaction is always rewrite-elsewhere + catalog repoint.
-    # NOTE: src must also be QUIESCENT for the duration — verification
-    # re-reads src after the write, so a concurrent ingest into src_dir
-    # would (correctly) fail the content check rather than lose rows.
-    if _canon(src_dir) == _canon(dst_dir):
-        raise ValueError(
-            f"compact_parquet dst_dir must differ from src_dir ({src_dir!r}): "
-            "overwriting the directory being read deletes the source mid-job"
-        )
-    total = dir_bytes(spark, src_dir)
-    n_files = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
-    df = spark.read.parquet(src_dir)
-    in_splits = df.rdd.getNumPartitions()
-    out = df.coalesce(n_files) if n_files <= in_splits else df.repartition(n_files)
-    out.write.mode("overwrite").parquet(dst_dir)
-    n_rows = None
-    if verify:
-
-        def fingerprint(d):
-            # order-insensitive full-content checksum: every field of every
-            # row rides through to_json into a 64-bit hash (xxhash64, not a
-            # 32-bit crc — collision probability matters for a "provably
-            # lossless" claim); decimal accumulator avoids the ANSI-mode
-            # int64 overflow on summed hashes (CLAUDE.md gotcha). This stays
-            # a JVM-side aggregate — the Python digest-sink scheme would
-            # force an Arrow transfer of the full table; both schemes verify
-            # src==dst with the SAME definition on both sides, which is all
-            # a rewrite check needs.
-            row = d.agg(
-                F.count("*").alias("n"),
-                F.coalesce(
-                    F.sum(F.xxhash64(F.to_json(F.struct(*sorted(d.columns)))).cast("decimal(38,0)")),
-                    F.lit(0).cast("decimal(38,0)"),
-                ).alias("h"),
-            ).collect()[0]
-            return int(row["n"]), int(row["h"])
-
-        src_rows, src_digest = fingerprint(df)
-        n_rows, dst_digest = fingerprint(spark.read.parquet(dst_dir))
-        if (n_rows, dst_digest) != (src_rows, src_digest):
-            raise RuntimeError(
-                f"compaction content mismatch: {src_rows} rows/{src_digest} in vs "
-                f"{n_rows} rows/{dst_digest} out — NOT publishing"
-            )
-    return {"n_rows": n_rows, "bytes_in": total, "files_out": n_files}
-
-
 def write_bucketed(
     df: DataFrame, table: str, path: str, key: str, n_buckets: int = 64,
     mode: str = "overwrite",
@@ -168,7 +67,3 @@ def write_bucketed(
         .format("parquet")
         .saveAsTable(table)
     )
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)

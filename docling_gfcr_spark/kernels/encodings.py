@@ -1,4 +1,4 @@
-"""Encoding-cascade decode + generic fallback (reference S4).
+"""Encoding-cascade decode + the generic-fallback text formats (reference S4).
 
 Reproduces /root/reference/scripts/convert.py:131-152: read utf-8, then retry
 ``latin-1``, ``cp1252``, ``iso-8859-1``; wrap decoded content as
@@ -9,7 +9,6 @@ explanatory string (byte-identical to the reference).
 from __future__ import annotations
 
 ENCODING_CASCADE = ("utf-8", "latin-1", "cp1252", "iso-8859-1")
-TEXT_KINDS = frozenset({".md", ".html", ".xhtml", ".csv", ".xml", ".json", ".adoc", ".asciidoc"})
 
 APOLOGY_FMT = (
     "# {name}\n\nArquivo {ext} não pôde ser processado. Formato não suportado para fallback."
@@ -30,12 +29,3 @@ def decode_cascade(payload: bytes) -> str | None:
         except UnicodeDecodeError:
             continue
     return None
-
-
-def generic_fallback(name: str, ext: str, payload: bytes | str | None) -> str:
-    """S4 semantics over a payload cell instead of a file path."""
-    if ext in TEXT_KINDS and payload is not None:
-        content = payload if isinstance(payload, str) else decode_cascade(payload)
-        if content is not None:
-            return WRAP_FMT.format(name=name, content=content)
-    return APOLOGY_FMT.format(name=name, ext=ext)

@@ -502,9 +502,3 @@ def extract_html(raw: str, engine: str = "fast") -> dict:
         # last-resort: strip tags, squeeze whitespace — degraded but total
         text = _WS_RE.sub(" ", _TAG_STRIP_RE.sub(" ", raw)).strip()
         return {"text": text, "spans": [], "n_nodes": 0, "n_kept": 0, "parse_failed": True}
-
-
-def strip_tags(raw: str) -> str:
-    """SQL-parity tag strip: regexp_replace(text, '<[^>]*>', ' ') + squeeze —
-    the degraded-but-total fallback the extractor uses on parse failure."""
-    return _WS_RE.sub(" ", _TAG_STRIP_RE.sub(" ", raw)).strip()

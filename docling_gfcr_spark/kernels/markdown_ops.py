@@ -5,8 +5,6 @@ reference (``/root/reference``):
 
 - ``optimize_markdown``  <- scripts/markdown_agent.py:162-199 (rules P4a-P4e)
 - ``validate_markdown``  <- scripts/markdown_agent.py:201-259 (A1-A3)
-- ``analyze_payload``    <- scripts/markdown_agent.py:133-160 (A4)
-- ``derive_output_name`` <- scripts/convert.py:61-73          (P1)
 - ``title_wrap``         <- scripts/markdown_agent.py:348     (P3)
 
 They are kept in Python ``re`` (NOT translated to Spark ``regexp_replace``)
@@ -121,24 +119,6 @@ def validate_markdown(content: str) -> ValidationResult:
         metrics=metrics,
         quality_score=max(0, 100 - len(issues) * 20),
     )
-
-
-def analyze_payload(n_bytes: int, kind: str) -> dict:
-    """Pre-analysis of a payload (reference A4, scripts/markdown_agent.py:133-160).
-
-    The reference stats a file; here the payload is a table cell, so ``n_bytes``
-    is the payload byte length and ``kind`` plays the extension's role.
-    """
-    return {
-        "size_bytes": n_bytes,
-        "size_mb": round(n_bytes / (1024 * 1024), 2),
-        "estimated_pages": max(1, n_bytes // 2048) if kind == "pdf" else 1,
-    }
-
-
-def derive_output_name(filename: str) -> str:
-    """Space->underscore stem normalization (reference P1, scripts/convert.py:70)."""
-    return stem_of(filename).replace(" ", "_")
 
 
 def title_wrap(stem: str, text: str) -> str:

@@ -400,10 +400,6 @@ def build_jpeg(width: int, height: int, seed: int = 0) -> bytes:
     )
 
 
-def build_gif(width: int, height: int) -> bytes:
-    return b"GIF89a" + struct.pack("<HH", width, height) + b"\x00\x00\x00\x3b"
-
-
 def build_bmp(width: int, height: int, seed: int = 0) -> bytes:
     row = ((width * 3 + 3) // 4) * 4
     pixels = bytes(((x + seed) & 0xFF) for x in range(row * height))

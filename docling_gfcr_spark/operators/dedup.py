@@ -48,14 +48,6 @@ def exact_dedup_keep(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     return df.join(keepers, id_col, "left_semi")
 
 
-def word_shingles(text_col: str, k: int = 5) -> Column:
-    """Array of word k-gram shingles (JVM-side; truncated tail shingle for
-    texts shorter than k words, matching the DuckDB oracle expression)."""
-    w = F.split(F.col(text_col), " ")
-    n = F.greatest(F.lit(1), F.size(w) - F.lit(k - 1))
-    return F.transform(F.sequence(F.lit(1), n), lambda i: F.concat_ws(" ", F.slice(w, i, k)))
-
-
 def exploded_shingles(
     df: DataFrame,
     text_col: str = "text",
@@ -65,7 +57,7 @@ def exploded_shingles(
 ) -> DataFrame:
     """One ``(id[, sz], shingle)`` row per DISTINCT word-k-gram per doc —
     the exploded-shingle scan shared by the ngram dedup/decontamination
-    family, as ONE Arrow-batched kernel rather than the ``word_shingles``
+    family, as ONE Arrow-batched kernel rather than a ``split``/``transform``
     HOF feeding ``F.explode``: higher-order functions are CodegenFallback,
     so ``explode(transform(...))`` drops the whole stage out of codegen onto
     the interpreted row path — measured 2.4x slower than this mapInPandas at
@@ -858,7 +850,7 @@ def recap_band_index(
     """Table MAINTENANCE: rewrite the standing band index keeping at most
     ``hot_band_cap`` ids per (band, band_hash) GLOBALLY — per-commit caps
     drift upward under append-mode ingest (up to cap x batches per key);
-    run this periodically like small-file compaction. Deterministic
+    run this periodically as table maintenance. Deterministic
     representatives (lowest ids) so reruns are idempotent.
 
     Staged rewrite: the capped copy is fully committed to ``<path>_recap``
@@ -868,7 +860,7 @@ def recap_band_index(
     from the CATALOG (``n_buckets=None``), so maintenance preserves the
     physical layout the exchange-free ingest join was planned around.
     Requires ingest quiescence (an append landing between read and publish
-    would be clobbered) — same contract as compact_parquet."""
+    would be clobbered)."""
     from docling_gfcr_spark import io as gio
 
     if n_buckets is None:

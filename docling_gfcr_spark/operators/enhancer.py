@@ -73,71 +73,6 @@ def enhance_documents(
     return df.mapInPandas(op, schema=schema)
 
 
-DEFAULT_MODEL = "gpt-4o-mini"
-DEFAULT_TEMPERATURE = 0.3
-DEFAULT_MAX_TOKENS = 2000
-
-_PROMPTS = {
-    "enhance": "Improve the structure and markdown formatting of the document below; keep its content intact.",
-    "analyze": "Analyze the document below and return a JSON object describing its structure and quality.",
-    "extract": "Extract the key entities and keywords of the document below as a JSON object.",
-}
-
-
-def build_messages(operation: str, text: str) -> list[dict]:
-    """Chat-completions message list for one call — pure and testable."""
-    if operation not in OPERATIONS:
-        raise ValueError(f"operation must be one of {OPERATIONS}")
-    return [
-        {"role": "system", "content": _PROMPTS[operation]},
-        {"role": "user", "content": text},
-    ]
-
-
-def client_factory_from_env() -> Callable[[], Callable[[str, str], str]]:
-    """Real-client factory seam, mirroring the reference's env contract
-    (/root/reference/scripts/openai_enhancer.py:251-266 create_enhancer_from_env,
-    config :28-30): ``OPENAI_API_KEY`` (required), ``OPENAI_MODEL``,
-    ``OPENAI_TEMPERATURE``, ``OPENAI_MAX_TOKENS``.
-
-    Fails fast on the DRIVER — missing key raises ValueError, missing
-    ``openai`` package raises ImportError — so a misconfigured cluster job
-    dies at submit, not 10k tasks in. The returned factory builds one client
-    per partition (executor-side), exactly the shape
-    ``enhance_documents(client_factory=...)`` expects. No network code runs
-    until a task calls it.
-    """
-    import importlib.util
-    import os
-
-    api_key = os.getenv("OPENAI_API_KEY")
-    if not api_key:
-        raise ValueError("OPENAI_API_KEY not set — the enhancement stage needs a real client")
-    model = os.getenv("OPENAI_MODEL", DEFAULT_MODEL)
-    temperature = float(os.getenv("OPENAI_TEMPERATURE", DEFAULT_TEMPERATURE))
-    max_tokens = int(os.getenv("OPENAI_MAX_TOKENS", DEFAULT_MAX_TOKENS))
-    if importlib.util.find_spec("openai") is None:
-        raise ImportError("the 'openai' package is not installed on this cluster")
-
-    def factory() -> Callable[[str, str], str]:
-        from openai import OpenAI  # per-partition lazy import (executor-side)
-
-        client = OpenAI(api_key=api_key)
-
-        def call(operation: str, text: str) -> str:
-            resp = client.chat.completions.create(
-                model=model,
-                messages=build_messages(operation, text),
-                temperature=temperature,
-                max_tokens=max_tokens,
-            )
-            return resp.choices[0].message.content or ""
-
-        return call
-
-    return factory
-
-
 def fake_client_factory() -> Callable[[str, str], str]:
     """Deterministic stand-in used by tests (and by offline dry-runs):
     enhance = uppercase first line; analyze/extract = JSON envelopes."""

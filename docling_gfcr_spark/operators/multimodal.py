@@ -228,15 +228,6 @@ def transform_media(df: DataFrame, max_side: int = 64, frame_step: int = 4) -> D
     return df.mapInPandas(op, schema=MEDIA_SCHEMA + ", transformed boolean")
 
 
-def media_summary(df: DataFrame) -> DataFrame:
-    """Partition-friendly rollup by modality/mime (plain Catalyst agg)."""
-    return df.groupBy("modality", "mime").agg(
-        F.count("*").alias("n"),
-        F.sum("n_bytes").alias("total_bytes"),
-        F.round(F.avg("n_bytes"), 2).alias("avg_bytes"),
-    )
-
-
 def media_ref_token(payload_b64: str | None) -> str | None:
     """Compact typed ref for a base64 image payload —
     ``<media:{format}:{W}x{H}:{sha256-16}>`` — or ``None`` when the

@@ -154,7 +154,7 @@ def ngram_decontaminate(
     if strategy == "auto":
         strategy = "broadcast" if heldout.count() <= broadcast_max_docs else "shuffle"
     # Both sides shingle through the Arrow-batched kernel (byte-identical to
-    # the word_shingles HOF, whose explode(transform(...)) form is
+    # a split/transform HOF, whose explode(transform(...)) form is
     # CodegenFallback — interpreted; see dedup.exploded_shingles). The
     # heldout side matters too: "heldout" is often a full test SPLIT of the
     # corpus, not just a KB-scale benchmark file.

@@ -25,7 +25,7 @@ import binascii
 import json
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -556,21 +556,6 @@ def with_stable_order(df: DataFrame) -> DataFrame:
     return df.withColumn("rn", F.row_number().over(w))
 
 
-def salt_column(num_salts: int, bucket_turns: int = 64) -> Column:
-    """Salt for skewed mega-conversations: same conv stays grouped per
-    ``bucket_turns``-turn slab, so slabs spread across tasks while per-slab
-    assembly remains local. Per-turn extraction is order-free (the equality
-    invariant is per-turn), so salting is semantically free (SURVEY.md §4.3).
-    """
-    return F.pmod(F.floor(F.col("turn_idx") / bucket_turns), F.lit(num_salts)).cast("int")
-
-
-def salted_repartition(df: DataFrame, num_partitions: int, num_salts: int = 16) -> DataFrame:
-    return df.withColumn("_salt", salt_column(num_salts)).repartition(
-        num_partitions, "conv_id", "_salt"
-    )
-
-
 def _two_phase_assemble(
     df: DataFrame,
     bucket_turns: int,
@@ -676,29 +661,4 @@ def assemble_multimodal_conversations(
                 ";",
             ).alias("media_refs"),
         ),
-    )
-
-
-def partition_metrics(df: DataFrame) -> DataFrame:
-    """Per-physical-partition extraction metrics (north_star: nodes classified,
-    spans emitted, parse failures) — feeds the lineage table."""
-    return (
-        df.withColumn("part_id", F.spark_partition_id())
-        .groupBy("part_id")
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.sum(F.col("n_nodes")).alias("nodes_classified"),
-            F.sum(F.col("n_spans")).alias("spans_emitted"),
-            F.sum(F.col("parse_failed").cast("int")).alias("parse_failures"),
-            F.sum((~F.col("success")).cast("int")).alias("errors"),
-        )
-    )
-
-
-def run_summary(df: DataFrame) -> DataFrame:
-    """Batch summary A5 (markdown_agent.py:471-475): total/success/failed."""
-    return df.agg(
-        F.count("*").alias("total"),
-        F.sum(F.col("success").cast("int")).alias("success"),
-        F.sum((~F.col("success")).cast("int")).alias("failed"),
     )

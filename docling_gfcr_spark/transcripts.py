@@ -11,8 +11,8 @@ alone, generation is reproducible at any parallelism and any scale:
 independently (no shuffle, no driver-side data).
 
 Skew is generated on purpose: every ``mega_every``-th conversation gets
-``skew_factor``x the turns, so the salted-repartition path in the pipeline has
-something real to fix.
+``skew_factor``x the turns, so the pipeline's two-phase slab assembly
+(``pipeline._two_phase_assemble``) has a real hot key to spread.
 """
 
 from __future__ import annotations

@@ -500,9 +500,9 @@ def run_corpus_ingest(
     the job a 100 TB pipeline runs every day after the initial build; the
     build's `dedup_near` full-corpus stage runs exactly once, ever.
 
-    dedup_incr discipline (same as streaming.stream_ingest_neardup, shared
-    kernel `dedup.keep_first_drops`): the batch is signed ONCE, pairs are
-    mined against (committed corpus + the batch itself) via the
+    dedup_incr discipline (keep-first kernel `dedup.keep_first_drops`):
+    the batch is signed ONCE, pairs are mined against (committed corpus +
+    the batch itself) via the
     band_hash-bucketed index join (corpus side exchange-free), keep-first
     drops batch docs duplicating committed docs, and the SURVIVORS' band
     keys are appended to the index so tomorrow's batch dedups against them.

@@ -83,34 +83,41 @@ def run_tool(params: dict) -> dict:
     """Validate params, run the job, build the response envelope. Total:
     never raises — errors come back as {"success": false, "error": ...}
     (the reference's :115-128 shape)."""
-    input_path = params.get("input")
-    output_dir = params.get("output_dir")
-    if not input_path:
-        return {"success": False, "error": "parameter 'input' is required"}
-    if not output_dir:
-        return {"success": False, "error": "parameter 'output_dir' is required"}
-    mode = params.get("mode", "agent")
-    return_content = bool(params.get("return_content", False))
-    content_limit = int(params.get("content_limit", 20))
     spark = None
     try:
+        # every parameter is parsed here, inside the envelope and before
+        # Spark starts: a malformed value is an error response, not a raise
+        input_path = params.get("input")
+        output_dir = params.get("output_dir")
+        if not input_path:
+            return {"success": False, "error": "parameter 'input' is required"}
+        if not output_dir:
+            return {"success": False, "error": "parameter 'output_dir' is required"}
+        mode = params.get("mode", "agent")
+        return_content = bool(params.get("return_content", False))
+        content_limit = int(params.get("content_limit", 20))
+        n_parts = int(params.get("n_parts", 64))
+        local_cores = int(params.get("local_cores", 8))
+        # only override the mode-derived default when the caller sent the
+        # flag explicitly (cli mode without flags must stay raw)
+        optimize = bool(params["optimize"]) if "optimize" in params else None
+        validate = bool(params.get("validate", True))
+
         from docling_gfcr_spark import io, lineage
         from docling_gfcr_spark.session import get_spark
 
-        spark = get_spark(app_name="tool_entry", cores=int(params.get("local_cores", 8)))
+        spark = get_spark(app_name="tool_entry", cores=local_cores)
         input_df = spark.read.parquet(input_path)
         io.validate_input_schema(input_df)
         report = lineage.run_extraction_job(
             spark,
             input_df,
             output_dir,
-            n_parts=int(params.get("n_parts", 64)),
-            n_waves=max(1, int(params.get("n_parts", 64)) // 16),
+            n_parts=n_parts,
+            n_waves=max(1, n_parts // 16),
             mode=mode,
-            # only override the mode-derived default when the caller sent the
-            # flag explicitly (cli mode without flags must stay raw)
-            optimize=bool(params["optimize"]) if "optimize" in params else None,
-            validate=bool(params.get("validate", True)),
+            optimize=optimize,
+            validate=validate,
         )
         result: dict = {
             "success": True,

@@ -39,46 +39,3 @@ def test_bucketed_join_needs_no_exchange(spark, tmp_path):
     assert joined.count() == ex.count()
     spark.sql("DROP TABLE IF EXISTS t_left")
     spark.sql("DROP TABLE IF EXISTS t_right")
-
-
-def test_compact_parquet_merges_small_files(spark, tmp_path):
-    """Compaction: 64 tiny files -> byte-sized-down file count, provably
-    lossless (row count + content digest unchanged)."""
-    from pyspark.sql import functions as F
-
-    from docling_gfcr_spark import io as gio
-    from docling_gfcr_spark import transcripts
-
-    src = str(tmp_path / "fragmented")
-    dst = str(tmp_path / "compacted")
-    tdf = transcripts.make_transcripts(spark, 40, mean_turns=5, seed=17, parallelism=4)
-    tdf.repartition(64).write.parquet(src)
-    import glob
-
-    assert len(glob.glob(src + "/part-*")) == 64
-
-    report = gio.compact_parquet(spark, src, dst, target_mb=256)
-    files_out = glob.glob(dst + "/part-*")
-    assert len(files_out) == report["files_out"] == 1  # tiny corpus -> one file
-    assert report["bytes_in"] > 0
-
-    def digest(path):
-        return (
-            spark.read.parquet(path)
-            .agg(F.sum(F.crc32(F.concat_ws("|", "conv_id", "turn_idx", "text")).cast("decimal(38,0)")))
-            .collect()[0][0]
-        )
-
-    assert spark.read.parquet(dst).count() == tdf.count() == report["n_rows"]
-    assert digest(src) == digest(dst)
-
-
-def test_compact_parquet_refuses_in_place(spark, tmp_path):
-    """mode('overwrite') on the directory being read would delete the source
-    mid-job (round-4 ADVICE finding) — same resolved path must raise."""
-    src = str(tmp_path / "t")
-    spark.range(10).write.parquet(src)
-    with pytest.raises(ValueError, match="differ from src_dir"):
-        io.compact_parquet(spark, src, src)
-    with pytest.raises(ValueError, match="differ from src_dir"):
-        io.compact_parquet(spark, src, "file:" + src + "/")

@@ -1,6 +1,6 @@
 from __future__ import annotations
 
-from docling_gfcr_spark.kernels.html_extract import extract_html, strip_tags
+from docling_gfcr_spark.kernels.html_extract import extract_html
 
 PAGE = """<html><head><title>T</title><style>.x{}</style></head><body>
 <nav class="top-nav"><a href="/">Home</a> <a href="/x">About</a> <a href="/y">Contact</a></nav>
@@ -63,10 +63,6 @@ def test_table_and_code_kept():
             "<pre>code block()</pre></body>")
     t = extract_html(html)["text"]
     assert "cell1" in t and "code block()" in t
-
-
-def test_strip_tags():
-    assert strip_tags("<p>a  b</p><br>c") == "a b c"
 
 
 def test_fast_engine_matches_parser_engine():

@@ -65,20 +65,8 @@ def test_validate_page_marker_issue():
     assert mk.ISSUE_PAGE_MARKERS in r["issues"]
 
 
-def test_derive_output_name_spaces():
-    assert mk.derive_output_name("my report file.pdf") == "my_report_file"
-    assert mk.derive_output_name("a  b.tar.gz") == "a__b.tar"
-
-
 def test_title_wrap():
     assert mk.title_wrap("doc", "body") == "# doc\n\nbody"
-
-
-def test_analyze_payload():
-    a = mk.analyze_payload(4096, "pdf")
-    assert a == {"size_bytes": 4096, "size_mb": 0.0, "estimated_pages": 2}
-    assert mk.analyze_payload(4096, "html")["estimated_pages"] == 1
-    assert mk.analyze_payload(3 * 1024 * 1024, "pdf")["size_mb"] == 3.0
 
 
 # ---- randomized parity vs the reference implementation -------------------

@@ -834,29 +834,6 @@ def test_hll_sketch_mergeable_and_partition_stable(spark):
     assert abs(acd - exact) / exact < 0.05
 
 
-def test_enhancer_env_factory_contract(monkeypatch):
-    """client_factory_from_env mirrors the reference's env contract: missing
-    OPENAI_API_KEY -> ValueError at driver time; with a key but no openai
-    package -> ImportError at driver time (fail fast, not 10k tasks in).
-    build_messages is the pure prompt-envelope builder."""
-    from docling_gfcr_spark.operators import enhancer
-
-    monkeypatch.delenv("OPENAI_API_KEY", raising=False)
-    with pytest.raises(ValueError):
-        enhancer.client_factory_from_env()
-    monkeypatch.setenv("OPENAI_API_KEY", "sk-test")
-    import importlib.util
-
-    if importlib.util.find_spec("openai") is None:
-        with pytest.raises(ImportError):
-            enhancer.client_factory_from_env()
-    msgs = enhancer.build_messages("enhance", "hello doc")
-    assert [m["role"] for m in msgs] == ["system", "user"]
-    assert msgs[1]["content"] == "hello doc"
-    with pytest.raises(ValueError):
-        enhancer.build_messages("bogus", "x")
-
-
 def test_source_mixing_deterministic_and_rate_correct(spark):
     """Data mixing: keep decisions are per-row deterministic (partition-
     invariant) and per-source rates land near their targets; rate>=1.0 keeps
@@ -892,57 +869,6 @@ def test_quality_model_score_no_python_no_shuffle(spark):
     assert (pdf["n_tokens"] > 0).all()
 
 
-def test_zorder_layout_clusters_both_dimensions(spark, tmp_path):
-    """Z-order write: per-file value spans shrink in BOTH clustered
-    dimensions vs a round-robin layout (that's what makes min-max pruning
-    bite on either predicate), and the rewrite is lossless."""
-    import glob
-
-    from docling_gfcr_spark.operators import layout
-
-    ev = spark.read.parquet(f"{SF}/events.parquet").select("event_id", "user_id", "value")
-    zpath = str(tmp_path / "zordered")
-    rpath = str(tmp_path / "roundrobin")
-    layout.zorder_write(ev, zpath, cols=["user_id", "value"], bits=4, n_files=8)
-    ev.repartition(8).write.parquet(rpath)
-
-    def mean_spans(path):
-        spans_u, spans_v = [], []
-        for f in glob.glob(path + "/part-*.parquet"):
-            pdf = spark.read.parquet(f).toPandas()
-            if len(pdf) == 0:
-                continue
-            spans_u.append(pdf["user_id"].max() - pdf["user_id"].min())
-            spans_v.append(pdf["value"].max() - pdf["value"].min())
-        return sum(spans_u) / len(spans_u), sum(spans_v) / len(spans_v)
-
-    zu, zv = mean_spans(zpath)
-    ru, rv = mean_spans(rpath)
-    assert zu < ru * 0.6, f"user_id span not clustered: {zu} vs {ru}"
-    assert zv < rv * 0.8, f"value span not clustered: {zv} vs {rv}"
-    # lossless
-    a = spark.read.parquet(zpath).toPandas().sort_values("event_id").reset_index(drop=True)
-    b = ev.toPandas().sort_values("event_id").reset_index(drop=True)
-    import pandas as pd
-
-    pd.testing.assert_frame_equal(a[["event_id", "user_id", "value"]], b)
-
-
-def test_morton_key_interleaves_bits(spark):
-    from docling_gfcr_spark.operators import layout
-
-    df = spark.createDataFrame([(0b1010, 0b0011)], "a long, b long")
-    key = df.select(
-        layout.morton_key([F.col("a"), F.col("b")], bits=4).alias("k")
-    ).collect()[0]["k"]
-    # bit (i*2) = bit i of a; bit (i*2+1) = bit i of b
-    want = 0
-    for i in range(4):
-        want |= ((0b1010 >> i) & 1) << (2 * i)
-        want |= ((0b0011 >> i) & 1) << (2 * i + 1)
-    assert key == want
-
-
 def test_quality_model_score_cross_engine_exact(spark):
     """The scorer's model_score must hash-match DuckDB exactly — including
     the half-way quotients that rounding used to split (w_sum=157, n=80 was
@@ -974,14 +900,6 @@ def test_quality_model_score_cross_engine_exact(spark):
 
     for a, b in zip(got["model_score"], want["model_score"]):
         assert struct.pack("<d", a) == struct.pack("<d", b)
-
-
-def test_zorder_rejects_reserved_column(spark):
-    from docling_gfcr_spark.operators import layout
-
-    df = spark.range(3).select(F.col("id"), F.lit(1).alias("_zkey"))
-    with pytest.raises(ValueError, match="_zkey"):
-        layout.zorder_write(df, "/tmp/never", cols=["id"])
 
 
 @pytest.mark.parametrize("hash_fn", ["md5", "fast"])

@@ -68,7 +68,12 @@ def test_per_turn_equality_vs_local_oracle(extracted):
 
 
 def test_per_turn_equality_survives_salted_repartition(spark, tdf):
-    salted = pipeline.salted_repartition(tdf, 16, num_salts=4)
+    """Extraction is per-turn, so a skew-salted layout (each conversation's
+    64-turn slabs spread over 4 salts) must not change any turn's text."""
+    from pyspark.sql import functions as F
+
+    salt = F.pmod(F.floor(F.col("turn_idx") / 64), F.lit(4))
+    salted = tdf.withColumn("_salt", salt).repartition(16, "conv_id", "_salt")
     got = (
         pipeline.extract_turns(salted.drop("_salt"), mode="agent")
         .select("conv_id", "turn_idx", "extracted_text")
@@ -121,13 +126,6 @@ def test_error_rows_never_dropped(spark):
     assert len(out) == 2
     assert out.iloc[0]["success"] == False  # noqa: E712 — null payload -> error record
     assert out.iloc[1]["parse_failed"] == True  # noqa: E712 — bad json routed, kept
-
-
-def test_metrics_and_summary(extracted):
-    m = pipeline.partition_metrics(extracted).toPandas()
-    assert m["n_turns"].sum() == extracted.count()
-    s = pipeline.run_summary(extracted).toPandas().iloc[0]
-    assert s["total"] == s["success"] + s["failed"]
 
 
 def test_spans_nonempty_for_html(extracted):

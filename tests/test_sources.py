@@ -166,62 +166,3 @@ def test_datasource_partition_count_and_pipeline_compose(spark):
 
     out = pipeline.extract_turns(df, mode="agent")
     assert out.where("success").count() > 0
-
-
-def test_digest_sink_writer(spark, tmp_path):
-    """Custom Python DataSource WRITER: order-insensitive corpus digest,
-    atomic driver-side manifest commit, identical under any partitioning."""
-    import json
-
-    from docling_gfcr_spark import transcripts
-    from docling_gfcr_spark.sources.digest_sink import local_manifest, register_digest_sink
-
-    register_digest_sink(spark)
-    df = transcripts.make_transcripts(spark, 20, mean_turns=5, seed=13, parallelism=4)
-    out = str(tmp_path / "audit")
-    df.repartition(7).write.format("digestsink").mode("overwrite").option("path", out).save()
-    manifest = json.load(open(out + "/manifest.json"))
-    want = local_manifest(df.collect())
-    assert manifest["n_rows"] == want["n_rows"]
-    assert manifest["digest"] == want["digest"]
-    assert manifest["n_tasks"] == 7
-
-    # partition-invariant: a different layout publishes the same facts
-    df.repartition(3).write.format("digestsink").mode("overwrite").option("path", out).save()
-    m2 = json.load(open(out + "/manifest.json"))
-    assert (m2["n_rows"], m2["digest"]) == (manifest["n_rows"], manifest["digest"])
-    assert m2["n_tasks"] == 3
-
-    # append mode refuses to clobber an existing manifest
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="exists"):
-        df.write.format("digestsink").mode("append").option("path", out).save()
-
-    # a one-row difference changes the digest (the audit actually audits)
-    df.limit(manifest["n_rows"] - 1).write.format("digestsink").mode("overwrite").option(
-        "path", out
-    ).save()
-    m3 = json.load(open(out + "/manifest.json"))
-    assert m3["digest"] != manifest["digest"]
-
-
-def test_digest_sink_serialization_unambiguous():
-    """Regression: field values containing the old '|' delimiter, and None
-    vs '', must produce DIFFERENT digests (the audit can't be fooled by a
-    delimiter shift)."""
-    from docling_gfcr_spark.sources.digest_sink import local_manifest
-
-    a = local_manifest([("a|b", "c")])
-    b = local_manifest([("a", "b|c")])
-    assert a["digest"] != b["digest"]
-    assert local_manifest([(None,)])["digest"] != local_manifest([("",)])["digest"]
-
-
-def test_digest_sink_type_tags_distinguish_values():
-    """int 1 vs str '1' vs bool True (and float) digest differently — a
-    type-degrading rewrite cannot produce an equal audit manifest."""
-    from docling_gfcr_spark.sources.digest_sink import local_manifest
-
-    digests = {local_manifest([(v,)])["digest"] for v in (1, "1", True, 1.0)}
-    assert len(digests) == 4
