@@ -9,11 +9,13 @@
   co-located and need NO exchange — the storage-level answer to "don't
   shuffle the 100 TB side every query" (tests assert the join plan is
   exchange-free).
+- ``local_frame``: the one way the driver builds a small frame it will
+  write (lineage rows, identity stamps, codebooks).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 INPUT_HINT_SCHEMA: dict[str, str] = {
     "conv_id": "string",
@@ -67,3 +69,19 @@ def write_bucketed(
         .format("parquet")
         .saveAsTable(table)
     )
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """``rows`` under the DDL ``schema`` as an Arrow-backed ``LocalRelation``.
+
+    ``createDataFrame`` over a Python list plans a Python RDD, and writing
+    it starts Python workers: a one-row ``coalesce(1)`` append costs ~1.3
+    CPU-s on a 4-core host, against ~0.25 from an Arrow table. A
+    ``pyarrow.Table`` always takes the Arrow path — unlike a pandas frame,
+    it has no fallback to the Python RDD when Arrow is disabled or fails."""
+    import pyarrow as pa
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    cols = [list(c) for c in zip(*rows)]
+    return spark.createDataFrame(pa.table(dict(zip(struct.names, cols))), struct)

@@ -21,10 +21,18 @@ meaningful under the hash scheme that produced them, so resuming the same
 output with a different ``n_parts`` raises instead of silently skipping
 wrong rows.
 
+The output dir is also stamped with the input's fingerprint
+(:func:`batch_fingerprint`) before the first wave writes. Committed part ids
+say nothing about WHICH rows they hold, so a resume with a different input
+raises instead of skipping every committed part and reporting success with
+none of the new rows written. A dir without a stamp (written before stamps
+existed) is adopted: the current input's fingerprint is stamped.
+
 Storage is injected through the small ``ParquetStorage`` interface below
 (``overwrite_data_partitions``, ``append_lineage``, ``read_data``,
-``read_lineage``); the job logic drives storage only through those four
-methods (pinned by the conformance test in test_lineage.py).
+``read_lineage``, ``read_input_fingerprint``, ``stamp_input_fingerprint``);
+the job logic drives storage only through those six methods (pinned by the
+conformance test in test_lineage.py).
 """
 
 from __future__ import annotations
@@ -67,7 +75,7 @@ def is_missing_input(e: Exception) -> bool:
         c in msg for c in MISSING_INPUT_CONDITIONS
     )
 
-from docling_gfcr_spark import pipeline
+from docling_gfcr_spark import io, pipeline
 
 LINEAGE_SCHEMA = (
     "run_id string, part_id int, n_parts int, status string, n_turns long, "
@@ -75,6 +83,22 @@ LINEAGE_SCHEMA = (
     "committed_at double"
 )
 _LINEAGE_COLS = [f.split(" ")[0] for f in LINEAGE_SCHEMA.split(", ")]
+INPUT_IDENTITY_SCHEMA = "fingerprint string"
+
+
+def batch_fingerprint(input_df: DataFrame) -> str:
+    """Order-independent identity of an input batch: row count + an id-set
+    digest (sum of xxhash64(conv_id, turn_idx) accumulated in DECIMAL(38,0)
+    — ANSI-safe). Pure function of the row set, so any partitioning of the
+    same batch fingerprints identically."""
+    row = input_df.select(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.coalesce(
+            F.sum(F.xxhash64("conv_id", "turn_idx").cast("decimal(38,0)")),
+            F.lit(0).cast("decimal(38,0)"),
+        ).alias("digest"),
+    ).collect()[0]
+    return f"{row.n_rows}:{row.digest}"
 
 
 class ParquetStorage:
@@ -85,6 +109,7 @@ class ParquetStorage:
         self.spark = spark
         self.data_dir = f"{out_dir}/data"
         self.lineage_dir = f"{out_dir}/lineage"
+        self.identity_dir = f"{out_dir}/input_identity"
 
     def overwrite_data_partitions(self, df: DataFrame) -> None:
         """Replace exactly the part_id partitions present in ``df``."""
@@ -113,6 +138,22 @@ class ParquetStorage:
             if not is_missing_input(e):
                 raise
             return None
+
+    def read_input_fingerprint(self) -> str | None:
+        try:
+            rows = self.spark.read.schema(INPUT_IDENTITY_SCHEMA).parquet(self.identity_dir).collect()
+        except AnalysisException as e:
+            if not is_missing_input(e):
+                raise
+            return None
+        return rows[0].fingerprint if rows else None
+
+    def stamp_input_fingerprint(self, fingerprint: str) -> None:
+        (
+            io.local_frame(self.spark, [(fingerprint,)], INPUT_IDENTITY_SCHEMA)
+            .write.mode("overwrite")
+            .parquet(self.identity_dir)
+        )
 
 
 def with_part_id(df: DataFrame, n_parts: int) -> DataFrame:
@@ -163,12 +204,16 @@ def run_extraction_job(
     storage: ParquetStorage | None = None,
     optimize: bool | None = None,
     validate: bool = True,
+    input_fingerprint: str | None = None,
 ) -> dict:
     """Wave-committed extraction with resume. Returns a run report dict.
 
     ``optimize``/``validate`` mirror the agent envelope's independent flags
     (pipeline.extract_one); ``fail_after_wave`` is a crash-injection hook
-    for resumability tests.
+    for resumability tests. ``input_fingerprint`` is ``input_df``'s
+    :func:`batch_fingerprint` when the caller already holds it (it costs a
+    full scan of the input); resuming ``out_dir`` with a different input
+    raises ``ValueError`` before anything is written.
     """
     # n_waves=0 would plan no waves and report success with nothing written;
     # n_parts=0 would make every part_id NULL (pmod by zero)
@@ -179,7 +224,18 @@ def run_extraction_job(
     run_id = run_id or uuid.uuid4().hex[:12]
     storage = storage or ParquetStorage(spark, out_dir)
 
+    fingerprint = input_fingerprint or batch_fingerprint(input_df)
+    stamped = storage.read_input_fingerprint()
+    if stamped is not None and stamped != fingerprint:
+        raise ValueError(
+            f"output dir {out_dir!r} holds the extraction of a different input "
+            f"(stamped fingerprint {stamped}, this input {fingerprint}) — "
+            "resuming would skip every committed part and write none of this "
+            "input's rows. Use a fresh output directory per input."
+        )
     done = committed_parts(storage, n_parts)
+    if stamped is None:
+        storage.stamp_input_fingerprint(fingerprint)
     todo = [p for p in range(n_parts) if p not in done]
     src = with_part_id(input_df, n_parts)
 
@@ -221,7 +277,7 @@ def run_extraction_job(
             else None
         )
         # empty parts must still commit (else they would be retried forever)
-        wave_parts = spark.createDataFrame([(p,) for p in wave], "part_id int")
+        wave_parts = io.local_frame(spark, [(p,) for p in wave], "part_id int")
         if agg is None:
             wave_parts = (
                 wave_parts.withColumn("n_turns", F.lit(0).cast("long"))

@@ -917,8 +917,11 @@ def save_semantic_centroids(spark, path: str, centroids: np.ndarray) -> None:
     codebook is trained ONCE at bootstrap and reused by every later batch —
     retraining is a maintenance operation (like recap_band_index) because a
     new codebook re-partitions the whole keeper space."""
+    from docling_gfcr_spark import io as gio
+
     cent = np.ascontiguousarray(centroids, dtype=np.float64)
-    spark.createDataFrame(
+    gio.local_frame(
+        spark,
         [(int(i), [float(x) for x in row]) for i, row in enumerate(cent)],
         "cluster int, vector array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(path)

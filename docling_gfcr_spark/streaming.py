@@ -15,12 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-EVENTS_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double, props string"
-)
-
-
 def sessionized_user_activity(
     events: DataFrame, gap: str = "20 minutes", watermark: str = "1 hour"
 ) -> DataFrame:

@@ -36,7 +36,15 @@ extraction is one ArrowEvalPython with zero shuffles, near-dup pair
 enumeration is worker-side (no blocking self-join), the heldout set is
 broadcast (no corpus shuffle), packing has no global sort. Stage outputs are
 parquet dirs (Iceberg tables in production via the same Storage seam
-lineage.py documents); the stage-lineage append is the only serial step.
+lineage.py documents).
+
+A stage commit costs its data write plus one small append: the stage's row
+count (``n_out``) is observed on the write itself (``DataFrame.observe``),
+not re-read from the written files, and the one-row lineage frame is an
+Arrow-backed local relation (``io.local_frame``), so committing runs no
+Python workers. The next stage reads the written dir with the schema this
+run wrote, skipping the Parquet schema-inference job; a resumed stage
+infers it.
 """
 
 from __future__ import annotations
@@ -44,8 +52,9 @@ from __future__ import annotations
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 STAGES: tuple[str, ...] = (
     "extract",
@@ -113,11 +122,14 @@ def _commit_stage(
     spark: SparkSession, out_dir: str, run_id: str, stage: str, n_out: int,
     stages: tuple[str, ...] = STAGES,
 ) -> None:
-    row = spark.createDataFrame(
+    from docling_gfcr_spark import io
+
+    row = io.local_frame(
+        spark,
         [(run_id, stage, stages.index(stage), "committed", n_out, time.time())],
         STAGE_LINEAGE_SCHEMA,
     )
-    row.coalesce(1).write.mode("append").parquet(_stage_lineage_dir(out_dir))
+    row.write.mode("append").parquet(_stage_lineage_dir(out_dir))
 
 
 def stage_dir(out_dir: str, stage: str) -> str:
@@ -126,21 +138,6 @@ def stage_dir(out_dir: str, stage: str) -> str:
 
 def _batch_identity_path(out_dir: str) -> str:
     return f"{out_dir}/batch_identity"
-
-
-def batch_fingerprint(input_df: DataFrame) -> str:
-    """Order-independent identity of an input batch: row count + an id-set
-    digest (sum of xxhash64(conv_id, turn_idx) accumulated in DECIMAL(38,0)
-    — ANSI-safe). Pure function of the row set, so any partitioning of the
-    same batch fingerprints identically."""
-    row = input_df.select(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.coalesce(
-            F.sum(F.xxhash64("conv_id", "turn_idx").cast("decimal(38,0)")),
-            F.lit(0).cast("decimal(38,0)"),
-        ).alias("digest"),
-    ).collect()[0]
-    return f"{row.n_rows}:{row.digest}"
 
 
 # -- stage bodies shared by the full build and the daily ingest -------------
@@ -194,10 +191,16 @@ def _pack_docs(docs: DataFrame, budget: int) -> DataFrame:
 
 class _StageRunner:
     """Shared stage scaffolding for the build and ingest jobs: read a
-    committed stage, publish one stage's output (land parquet, count the
-    WRITTEN files — the committed truth — then append the lineage row),
-    honor the injected-crash test hook. One implementation so the two jobs'
-    resume discipline cannot drift."""
+    committed stage, publish one stage's output (land parquet with its row
+    count observed on the write, then append the lineage row), honor the
+    injected-crash test hook. One implementation so the two jobs' resume
+    discipline cannot drift.
+
+    ``n_out`` comes from an ``Observation`` on the frame being written: the
+    count is taken as the write's tasks run, and Spark merges the observed
+    accumulator only from the successful attempt of each task, so it equals
+    a re-read count of the written files (pinned by the crash matrices and
+    a task-retry test) without the re-read's jobs."""
 
     def __init__(self, spark, out_dir, run_id, stages, fail_after_stage,
                  fail_before_commit_stage=None):
@@ -209,6 +212,10 @@ class _StageRunner:
         self.fail_before_commit = fail_before_commit_stage
         self.done = committed_stages(spark, out_dir)
         self.ran: list[str] = []
+        self.n_out: dict[str, int] = {}
+        # schemas of the frames this run wrote; read() skips inference for them
+        self.written: dict[str, StructType] = {}
+        self.fingerprint: str | None = None
 
     def check_batch_identity(self, input_df: DataFrame) -> None:
         """Stamp the input batch's fingerprint on first run; on resume
@@ -224,9 +231,9 @@ class _StageRunner:
         committed_stages is keyed by stage name only. A legacy dir missing
         either stamp is adopted (re-stamped with the current values) rather
         than refused."""
-        from docling_gfcr_spark import lineage
+        from docling_gfcr_spark import io, lineage
 
-        fp = batch_fingerprint(input_df)
+        fp = self.fingerprint = lineage.batch_fingerprint(input_df)
         chain = "|".join(self.stages)
         path = _batch_identity_path(self.out_dir)
         stamped = stamped_chain = None
@@ -254,16 +261,18 @@ class _StageRunner:
                 "use a fresh --output."
             )
         if stamped is None or stamped_chain is None:
-            self.spark.createDataFrame(
-                [(fp, chain)], "fingerprint string, stage_chain string"
-            ).coalesce(1).write.mode("overwrite").parquet(path)
+            io.local_frame(
+                self.spark, [(fp, chain)], "fingerprint string, stage_chain string"
+            ).write.mode("overwrite").parquet(path)
 
     @property
     def skipped(self) -> list[str]:
         return [s for s in self.stages if s in self.done]
 
     def read(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(stage_dir(self.out_dir, stage))
+        schema = self.written.get(stage)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(stage_dir(self.out_dir, stage))
 
     def committed(self, stage: str, n_out: int) -> None:
         if self.fail_before_commit == stage:
@@ -274,23 +283,31 @@ class _StageRunner:
         _commit_stage(
             self.spark, self.out_dir, self.run_id, stage, n_out, stages=self.stages
         )
+        self.n_out[stage] = n_out
         self.ran.append(stage)
         if self.fail_after == stage:
             raise RuntimeError(f"injected crash after stage {stage}")
 
     def publish(self, stage: str, df: DataFrame, after=None) -> None:
-        df.write.mode("overwrite").parquet(stage_dir(self.out_dir, stage))
-        n_out = self.read(stage).count()
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("n_out")).write.mode("overwrite").parquet(
+            stage_dir(self.out_dir, stage)
+        )
+        self.written[stage] = df.schema
+        n_out = obs.get["n_out"]
         if after is not None:
             after()
         self.committed(stage, n_out)
 
     def report(self) -> dict:
+        last = self.stages[-1]
+        # a fully resumed run committed nothing itself: count the files
+        packed = self.n_out[last] if last in self.n_out else self.read(last).count()
         return {
             "run_id": self.run_id,
             "stages_run": self.ran,
             "stages_skipped_on_resume": self.skipped,
-            "packed_rows": self.read(self.stages[-1]).count(),
+            "packed_rows": packed,
         }
 
 
@@ -305,7 +322,10 @@ def _run_head_stages(r: _StageRunner, input_df: DataFrame, n_parts, n_waves, mod
         lineage.run_extraction_job(
             r.spark, input_df, stage_dir(r.out_dir, "extract"),
             n_parts=n_parts, n_waves=n_waves, mode=mode, run_id=r.run_id,
+            input_fingerprint=r.fingerprint,
         )
+        # the one stage whose n_out is a re-read: parts committed by an
+        # earlier, crashed run count too, and only the files hold them all
         n_out = lineage.read_extracted(r.spark, stage_dir(r.out_dir, "extract")).count()
         r.committed("extract", n_out)
     if "assemble" not in r.done:

@@ -4,12 +4,14 @@
 Submit:
     spark-submit --py-files dist/docling_gfcr_spark.zip jobs/extract_job.py \
         --input  <parquet dir or Iceberg table of transcripts> \
-        --output <job output root (data/ + lineage/)> \
+        --output <job output root (data/ + lineage/ + input_identity/)> \
         --n-parts 4096 --waves 64 --mode agent [--run-id r42]
 
 The session comes from spark-submit (no master override here); cluster sizing
 lives in --conf / --num-executors. On restart with the same --output, parts
-already committed to lineage are skipped (docling_gfcr_spark/lineage.py).
+already committed to lineage are skipped (docling_gfcr_spark/lineage.py); a
+restart with a different input refuses, since the output is stamped with
+its input's fingerprint.
 Local smoke: add --local-cores N --synth-convs M to run on synthetic data.
 """
 

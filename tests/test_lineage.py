@@ -64,6 +64,38 @@ def test_completed_job_is_noop_on_rerun(spark, tmp_path):
     assert set(lineage.read_lineage(spark, out).toPandas()["run_id"]) == {"a"}
 
 
+def test_extraction_resume_refuses_a_different_input(spark, tmp_path):
+    """Committed part ids say nothing about which rows they hold: input B
+    resumed into input A's output would skip every committed part and
+    report success with none of B's rows written. The output is stamped
+    with its input's fingerprint and a different input raises before any
+    write; an output without a stamp is adopted by the same input."""
+    out = tmp_path / "two_inputs"
+    a = transcripts.make_transcripts(spark, 6, mean_turns=3, seed=1, parallelism=2)
+    b = transcripts.make_transcripts(spark, 6, mean_turns=3, seed=2, parallelism=2)
+    assert lineage.batch_fingerprint(a) != lineage.batch_fingerprint(b)
+    lineage.run_extraction_job(spark, a, str(out), n_parts=4, n_waves=2, run_id="a")
+    want = sorted(tuple(r) for r in lineage.read_extracted(spark, str(out)).collect())
+
+    files = lambda: sorted(str(p) for p in out.rglob("*.parquet"))  # noqa: E731
+    before = files()
+    with pytest.raises(ValueError, match="different input"):
+        lineage.run_extraction_job(spark, b, str(out), n_parts=4, n_waves=2, run_id="b")
+    assert files() == before
+    assert sorted(tuple(r) for r in lineage.read_extracted(spark, str(out)).collect()) == want
+
+    # an unstamped dir (written before stamps existed) is adopted
+    import shutil
+
+    shutil.rmtree(out / "input_identity")
+    r = lineage.run_extraction_job(spark, a, str(out), n_parts=4, n_waves=2, run_id="a2")
+    assert r["parts_processed"] == []
+    storage = lineage.ParquetStorage(spark, str(out))
+    assert storage.read_input_fingerprint() == lineage.batch_fingerprint(a)
+    with pytest.raises(ValueError, match="different input"):
+        lineage.run_extraction_job(spark, b, str(out), n_parts=4, n_waves=2)
+
+
 @pytest.mark.parametrize("n_parts,n_waves", [(0, 2), (-1, 2), (4, 0), (4, -3)])
 def test_extraction_job_rejects_bad_partition_counts(spark, n_parts, n_waves):
     """n_waves < 1 would plan no waves and report success with nothing
@@ -91,6 +123,8 @@ def test_storage_interface_conformance(spark, tmp_path):
         "append_lineage",
         "read_data",
         "read_lineage",
+        "read_input_fingerprint",
+        "stamp_input_fingerprint",
     ]
 
     # a recording proxy proves the job touches nothing outside the contract
@@ -214,15 +248,24 @@ def test_resume_refuses_unreadable_lineage(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_corpus_build_stage_resume_and_idempotence(spark, tmp_path):
+def test_corpus_build_stage_resume_and_idempotence(spark, tmp_path, monkeypatch):
     """The composed extract->dedup->decontaminate->scrub->mix->pack job:
     run1 crashes after dedup_exact; run2 must skip exactly the committed
     stages and finish; a third run with everything committed is a no-op
-    that still reports the packed table. (The VALUE check — per-stage
-    counts + packed digest vs a pure-Python/DuckDB replay — is the
-    corpus_build_end_to_end driver-gate query.)"""
+    that still reports the packed table. Each run fingerprints its input
+    once (a full scan), shared by the build and its extraction stage. (The
+    VALUE check — per-stage counts + packed digest vs a pure-Python/DuckDB
+    replay — is the corpus_build_end_to_end driver-gate query.)"""
     from jobs import corpus_build
 
+    fingerprints = []
+    real_fingerprint = lineage.batch_fingerprint
+
+    def counting_fingerprint(df):
+        fingerprints.append(1)
+        return real_fingerprint(df)
+
+    monkeypatch.setattr(lineage, "batch_fingerprint", counting_fingerprint)
     out = str(tmp_path / "cbuild")
     tdf = transcripts.make_transcripts(spark, 12, mean_turns=4, seed=21, parallelism=2)
     held = spark.createDataFrame([("no overlap with anything here at all ok",)], "text string")
@@ -231,12 +274,14 @@ def test_corpus_build_stage_resume_and_idempotence(spark, tmp_path):
         corpus_build.run_corpus_build(
             spark, tdf, held, out, run_id="r1", fail_after_stage="dedup_exact", **kwargs
         )
+    assert len(fingerprints) == 1  # the run that ran extraction too
     r2 = corpus_build.run_corpus_build(spark, tdf, held, out, run_id="r2", **kwargs)
     assert r2["stages_skipped_on_resume"] == ["extract", "assemble", "dedup_exact"]
     assert r2["stages_run"] == ["dedup_near", "decontaminate", "scrub", "mix", "pack"]
     assert r2["packed_rows"] > 0
     # fully-committed rerun: nothing recomputed, same packed table
     r3 = corpus_build.run_corpus_build(spark, tdf, held, out, run_id="r3", **kwargs)
+    assert len(fingerprints) == 3
     assert r3["stages_run"] == []
     assert len(r3["stages_skipped_on_resume"]) == len(corpus_build.STAGES)
     assert r3["packed_rows"] == r2["packed_rows"]
@@ -429,6 +474,19 @@ def _packed_rows(spark, out):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _assert_n_out_matches_files(spark, out, stages):
+    """Every committed stage's lineage n_out equals a count of the rows its
+    directory holds."""
+    from jobs import corpus_build
+
+    n_out = {r.stage: r.n_out for r in corpus_build.read_stage_lineage(spark, out).collect()}
+    assert set(n_out) == set(stages)
+    for s in stages:
+        d = corpus_build.stage_dir(out, s)
+        n = (lineage.read_extracted(spark, d) if s == "extract" else spark.read.parquet(d)).count()
+        assert n_out[s] == n, (out, s, n_out[s], n)
+
+
 def _matrix_input(spark, n, seed):
     """Small corpus with a planted whole-conversation exact dup so the dedup
     stages do real work across the crash walk (cli mode: extraction is
@@ -475,6 +533,8 @@ def test_corpus_build_crash_matrix_every_boundary(spark, tmp_path):
         lin = corpus_build.read_stage_lineage(spark, out).toPandas()
         assert sorted(lin.stage) == sorted(corpus_build.STAGES), window
         assert set(lin.status) == {"committed"}
+        # each row was committed by a different run of the walk
+        _assert_n_out_matches_files(spark, out, corpus_build.STAGES)
 
 
 def test_corpus_ingest_crash_matrix_every_boundary(spark, tmp_path):
@@ -525,12 +585,126 @@ def test_corpus_ingest_crash_matrix_every_boundary(spark, tmp_path):
             assert committed == set(corpus_build.INGEST_STAGES[:n_done]), (window, stage)
         run(out, table, path, run_id="fin")
         assert _packed_rows(spark, out) == want, window
+        _assert_n_out_matches_files(spark, out, corpus_build.INGEST_STAGES)
         # duplicate band rows (at-least-once append) never change the index
         # CONTENT: distinct rows match the no-crash index exactly
         got_bands = sorted(tuple(r) for r in spark.table(table).distinct().collect())
         assert got_bands == base_bands, window
         spark.sql(f"DROP TABLE IF EXISTS {table}")
     spark.sql("DROP TABLE IF EXISTS t_cm_base")
+
+
+def test_stage_publish_job_budget(spark, tmp_path, monkeypatch):
+    """One stage publish costs two Spark jobs: the data write, whose row
+    count is observed as it runs, and the lineage append. A re-read count
+    after the write (schema inference + count) would add jobs. A lineage
+    frame built from a Python list would not add a job, but its write
+    would start Python workers (~1.3 CPU-s per commit): every such frame,
+    and a pandas frame that silently falls back from Arrow, goes through
+    SparkContext.parallelize, which is made to fail here."""
+    import uuid
+
+    from pyspark import SparkContext
+    from pyspark.sql.types import StructType
+
+    from jobs import corpus_build
+
+    def python_rdd(*a, **kw):
+        raise AssertionError("a driver-built frame went through a Python RDD")
+
+    monkeypatch.setattr(SparkContext, "parallelize", python_rdd)
+    out = str(tmp_path / "budget")
+    r = corpus_build._StageRunner(spark, out, "budget", corpus_build.STAGES, None)
+    docs = spark.range(40).select(
+        F.format_string("conv-%d", "id").alias("conv_id"), (F.col("id") % 3).alias("n")
+    )
+    sc = spark.sparkContext
+    group = f"publish-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one stage publish")
+    try:
+        r.publish("assemble", docs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+
+    d = corpus_build.stage_dir(out, "assemble")
+    assert r.n_out == {"assemble": 40}
+    assert spark.read.parquet(d).count() == 40
+    # the next stage's read uses the written schema, equal to inference
+    assert r.read("assemble").schema == spark.read.parquet(d).schema
+    lin = corpus_build.read_stage_lineage(spark, out)
+    assert lin.schema == StructType.fromDDL(corpus_build.STAGE_LINEAGE_SCHEMA)
+    row = lin.collect()[0]
+    assert (row.run_id, row.stage, row.stage_idx, row.status, row.n_out) == (
+        "budget", "assemble", 1, "committed", 40
+    )
+
+
+_RETRY_SCRIPT = """
+import json, sys
+sys.path.insert(0, sys.argv[2])
+from pyspark import TaskContext
+from pyspark.sql import functions as F
+from docling_gfcr_spark.session import get_spark
+from jobs import corpus_build
+
+# local[2,2]: two cores, and a failed task gets one retry
+spark = get_spark(app_name="publish_retry", cores=2,
+                  extra_conf={"spark.master": "local[2,2]"})
+
+@F.udf("long")
+def fail_first_attempt(x):
+    # partition 0 (ids 0..999) dies on its LAST row, after the rows before
+    # it have crossed the observed count
+    ctx = TaskContext.get()
+    if ctx.partitionId() == 0 and ctx.attemptNumber() == 0 and x == 999:
+        raise RuntimeError("injected first-attempt failure")
+    return x
+
+out = sys.argv[1]
+r = corpus_build._StageRunner(spark, out, "retry", corpus_build.STAGES, None)
+docs = spark.range(0, 2000, 1, 2).select(
+    F.format_string("conv-%d", "id").alias("conv_id"), fail_first_attempt("id").alias("n")
+)
+sc = spark.sparkContext
+sc.setJobGroup("publish-retry", "publish with a failed task attempt")
+r.publish("assemble", docs)
+failed = sum(
+    sc.statusTracker().getStageInfo(st).numFailedTasks
+    for j in sc.statusTracker().getJobIdsForGroup("publish-retry")
+    for st in sc.statusTracker().getJobInfo(j).stageIds
+)
+lin = corpus_build.read_stage_lineage(spark, out).collect()
+print(json.dumps({
+    "failed_tasks": failed,
+    "n_out": [row.n_out for row in lin],
+    "reread": spark.read.parquet(corpus_build.stage_dir(out, "assemble")).count(),
+}))
+spark.stop()
+"""
+
+
+def test_stage_publish_n_out_survives_task_retry(tmp_path):
+    """A write task whose first attempt fails after counting rows is
+    retried; the observed n_out must count the successful attempt only and
+    equal a re-read of the files. The shared session runs local[8] with no
+    task retries, so this runs in its own local[2,2] session."""
+    import json
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    script = tmp_path / "publish_retry.py"
+    script.write_text(_RETRY_SCRIPT)
+    root = Path(__file__).resolve().parent.parent
+    proc = subprocess.run(
+        [sys.executable, str(script), str(tmp_path / "out"), str(root)],
+        capture_output=True, text=True, timeout=600, cwd=root,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got["failed_tasks"] >= 1, got
+    assert got == {"failed_tasks": got["failed_tasks"], "n_out": [2000], "reread": 2000}
 
 
 def test_corpus_jobs_refuse_reused_output_for_new_batch(spark, tmp_path):

@@ -8,6 +8,12 @@ from pyspark.sql import functions as F
 
 from docling_gfcr_spark import pipeline, streaming, transcripts
 
+# the events table the session-window stream==batch tests write and stream
+EVENTS_SCHEMA = (
+    "event_id long, ts timestamp, user_id long, event_type string, "
+    "value double, props string"
+)
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -52,7 +58,7 @@ def test_session_window_stream_equals_batch(spark, tmp_path):
     )
     ev.unionByName(sentinel).write.mode("overwrite").parquet(src)
 
-    stream = spark.readStream.schema(streaming.EVENTS_SCHEMA).format("parquet").load(src)
+    stream = spark.readStream.schema(EVENTS_SCHEMA).format("parquet").load(src)
     agg = streaming.sessionized_user_activity(stream, gap="20 minutes", watermark="10 minutes")
     q = agg.writeStream.outputMode("append").format("memory").queryName("sess_eq_t").start()
     q.processAllAvailable()
@@ -79,7 +85,7 @@ def test_stream_static_enrichment_join(spark, tmp_path):
     dim = spark.createDataFrame(
         [(i, f"tier-{i % 3}") for i in range(150)], "user_id long, tier string"
     )
-    stream = spark.readStream.schema(streaming.EVENTS_SCHEMA).format("parquet").load(src)
+    stream = spark.readStream.schema(EVENTS_SCHEMA).format("parquet").load(src)
     j = stream.join(F.broadcast(dim), "user_id").select("event_id", "user_id", "tier")
     q = j.writeStream.outputMode("append").format("memory").queryName("enrich_t").start()
     q.processAllAvailable()
