@@ -425,20 +425,22 @@ def build_webp(width: int, height: int) -> bytes:
     return b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk
 
 
-def build_wav(n_frames: int, sample_rate: int = 8000, channels: int = 1, seed: int = 0) -> bytes:
-    block_align = channels * 2  # 16-bit PCM
+def build_wav(n_frames: int, sample_rate: int = 8000, seed: int = 0) -> bytes:
+    """Mono 16-bit PCM WAV."""
+    block_align = 2
     data = bytes(((i * 13 + seed) & 0xFF) for i in range(n_frames * block_align))
-    fmt = struct.pack("<HHIIHH", 1, channels, sample_rate, sample_rate * block_align, block_align, 16)
+    fmt = struct.pack("<HHIIHH", 1, 1, sample_rate, sample_rate * block_align, block_align, 16)
     body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt + b"data" + struct.pack("<I", len(data)) + data
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def build_mp4(duration_s: float, timescale: int = 1000, seed: int = 0) -> bytes:
+def build_mp4(duration_s: float, seed: int = 0) -> bytes:
+    """MP4 with a millisecond-timescale mvhd."""
     ftyp = b"isom\x00\x00\x02\x00isommp41"
     mvhd_payload = (
         b"\x00\x00\x00\x00"  # version 0 + flags
         + struct.pack(">II", 0, 0)  # creation/modification (fixed: determinism)
-        + struct.pack(">II", timescale, int(round(duration_s * timescale)))
+        + struct.pack(">II", 1000, int(round(duration_s * 1000)))
         + b"\x00" * 80  # rate/volume/matrix/predefines/next_track (zeroed)
     )
     mvhd = struct.pack(">I4s", 8 + len(mvhd_payload), b"mvhd") + mvhd_payload

@@ -37,7 +37,7 @@ def pdf_bytes_to_pages(blob: bytes) -> list[str]:
     corpus (one line per show op, latin-1 default decode)."""
     from docling_gfcr_spark.kernels import pdf_doc
 
-    return pdf_doc.parse_pdf_pages(blob, strict=True)
+    return pdf_doc.parse_pdf_pages(blob)
 
 
 def build_pdf(pages: list[list[str]], compress: bool = False, encrypt: bool = False) -> bytes:

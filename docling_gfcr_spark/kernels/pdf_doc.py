@@ -24,10 +24,9 @@ by docling at /root/reference/scripts/convert.py:113-128 into
   images (``BI..ID..EI``), and never drops a string because a bracket or
   nested paren confused a regex (round-4 ADVICE finding).
 
-Failure contract: ``ValueError`` for anything structurally broken (the
-pipeline's error envelope); ``parse_pdf_pages(strict=False)`` additionally
-degrades PER-PAGE failures to empty text so one bad page cannot void a
-189-page document (the golden-artifact mode).
+Failure contract: ``ValueError`` for anything structurally broken, a
+single broken page or a dangling page reference included (the pipeline's
+error envelope, never a silently shorter document).
 
 This module is a driver-side kernel invoked inside Arrow-batched UDFs; it
 holds no Spark state and parses one document per call.
@@ -1013,11 +1012,11 @@ class PdfDocument:
 
     # -- document structure -------------------------------------------------
 
-    def pages(self, strict: bool = True) -> list[tuple[dict, dict]]:
-        """[(page dict, inherited attrs)] in tree order. ``strict`` raises
-        on /Kids entries that resolve to nothing (a broken object graph must
-        become an error envelope, not a silently shorter document —
-        round-4 contract); lenient mode skips them best-effort."""
+    def pages(self) -> list[tuple[dict, dict]]:
+        """[(page dict, inherited attrs)] in tree order. Raises on /Kids
+        entries that resolve to nothing (a broken object graph must become
+        an error envelope, not a silently shorter document — round-4
+        contract)."""
         root = self.resolve(self.trailer.get("Root"))
         pages_ref = root.get("Pages") if isinstance(root, dict) else None
         top = self.resolve(pages_ref)
@@ -1037,10 +1036,8 @@ class PdfDocument:
             ref = node
             node = self.resolve(node)
             if not isinstance(node, dict):
-                if strict:
-                    num = ref.num if isinstance(ref, Ref) else "?"
-                    raise ValueError(f"missing page object {num}")
-                return
+                num = ref.num if isinstance(ref, Ref) else "?"
+                raise ValueError(f"missing page object {num}")
             if len(out) >= _MAX_PAGES:
                 return
             inh = dict(inherited)
@@ -1125,12 +1122,10 @@ class PdfDocument:
         return _interpret_content(data, fonts, do_xobject)
 
 
-def parse_pdf_pages(blob: bytes, strict: bool = True) -> list[str]:
+def parse_pdf_pages(blob: bytes) -> list[str]:
     """Real PDF bytes -> per-page extracted text (one line per text-showing
-    operator, fonts decoded). ``strict=True`` raises ``ValueError`` on any
-    broken page (the pipeline error-envelope contract); ``strict=False``
-    degrades individual page failures to empty strings so one bad page
-    cannot void a large document.
+    operator, fonts decoded). Raises ``ValueError`` on any broken page (the
+    pipeline error-envelope contract).
 
     Error contract: ValueError ONLY. The grammar caps nesting depth and the
     predictors validate geometry, but as the module boundary this also
@@ -1138,7 +1133,7 @@ def parse_pdf_pages(blob: bytes, strict: bool = True) -> list[str]:
     into ValueError so the pipeline's error envelope always catches it."""
     try:
         doc = PdfDocument(blob)
-        pages = doc.pages(strict=strict)
+        pages = doc.pages()
     except (RecursionError, MemoryError) as e:
         raise ValueError(f"pdf parse failed: {type(e).__name__}") from None
     out: list[str] = []
@@ -1146,7 +1141,5 @@ def parse_pdf_pages(blob: bytes, strict: bool = True) -> list[str]:
         try:
             out.append(doc.page_text(page, inh))
         except (ValueError, RecursionError, MemoryError) as e:
-            if strict:
-                raise ValueError(f"pdf page parse failed: {e}") from None
-            out.append("")
+            raise ValueError(f"pdf page parse failed: {e}") from None
     return out

@@ -1,15 +1,16 @@
 """As-of join — an operator Spark lacks natively, built from pure Catalyst.
 
 Semantics: for each left row, attach the latest right row of the same ``by``
-key with right.on < left.on (strict predecessor by default, matching DuckDB's
-``ASOF JOIN ... ON l.on > r.on``). Inner join: left rows with no predecessor
-are dropped; null ``on`` values never match. Among right rows tied on ``on``,
+key with right.on < left.on (strict predecessor, matching DuckDB's
+``ASOF JOIN ... ON l.on > r.on``). Right columns other than ``by`` come back
+with a ``_right`` suffix. Inner join: left rows with no predecessor are
+dropped; null ``on`` values never match. Among right rows tied on ``on``,
 the winner is the max under (on, <remaining right columns>) — deterministic
 across partitionings and runs.
 
 Implementation (all JVM, no Python workers): union the two sides into one
-ordered stream per key — left rows flagged to sort AFTER same-timestamp right
-rows only when exact matches are allowed — and take
+ordered stream per key — right rows flagged to sort AFTER same-timestamp left
+rows, so an exact-time match is invisible — and take
 ``last(right_struct, ignorenulls)`` over the preceding window frame. That is
 one shuffle + one sort, fully whole-stage-codegen'd either side of the
 window. (A cogrouped ``pd.merge_asof`` version was ~10x slower end-to-end:
@@ -17,9 +18,9 @@ per-group pandas dispatch costs ~2-6 ms, which dwarfs the actual merge for
 the thousands-of-small-keys shape this operator usually sees.)
 
 Skew: a key with 10^8 right rows would pin one sort task. Keys whose row
-count exceeds ``hot_key_threshold`` (found by a tiny eager census — the same
-runtime-stats pattern AQE uses; pass ``hot_keys`` to skip the census) are
-pre-split into TIME SLABS of ``slab_seconds``: the window then runs per
+count exceeds ``_HOT_KEY_ROWS`` (found by a tiny eager census — the same
+runtime-stats pattern AQE uses) are pre-split into TIME SLABS of
+``slab_seconds``: the window then runs per
 (key, slab), and cross-slab lookback is restored by carrying into each left
 slab the single latest right row from all earlier slabs (one small
 per-(key, slab) aggregate + one window over it — no quadratic slab join).
@@ -29,6 +30,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+#: per-side row count above which a key is split into time slabs
+_HOT_KEY_ROWS = 50_000
 
 
 def _epoch(col, dtype: str):
@@ -43,20 +47,17 @@ def asof_join(
     right: DataFrame,
     on: str,
     by: str,
-    suffix: str = "_right",
-    allow_exact_matches: bool = False,
     slab_seconds: float | None = 86400.0,
-    hot_key_threshold: int = 50_000,
-    hot_keys: list | None = None,
 ) -> DataFrame:
     """See module docstring. ``slab_seconds=None`` disables hot-key slabbing
-    (single window partition per key — safe only without pathological keys).
+    (single window partition per key — the reference the slab path is tested
+    against; safe only without pathological keys).
     """
     renamed = right
     for c in right.columns:
         if c != by:
-            renamed = renamed.withColumnRenamed(c, c + suffix)
-    on_right = on + suffix
+            renamed = renamed.withColumnRenamed(c, c + "_right")
+    on_right = on + "_right"
     # equi-join semantics: null `on` never matches, and null `by` keys never
     # match EACH OTHER (Window.partitionBy would group nulls together,
     # silently diverging from DuckDB's ASOF equi-join)
@@ -74,28 +75,24 @@ def asof_join(
     lstruct = F.struct(*[F.col(c) for c in left_cols])
     lstruct_type = left.select(lstruct.alias("_l")).schema["_l"].dataType
 
-    # at equal `on`: strict -> right rows sort AFTER left (invisible to the
-    # preceding frame); exact-match -> right rows sort BEFORE left
-    l_flag, r_flag = (0, 1) if not allow_exact_matches else (1, 0)
-
     # ---- hot-key slab assignment -----------------------------------------
     carried = None
+    hot_keys = []
     if slab_seconds is not None:
-        if hot_keys is None:
-            def key_counts(df: DataFrame) -> DataFrame:
-                return df.select(F.col(by).alias("_k")).groupBy("_k").count()
+        def key_counts(df: DataFrame) -> DataFrame:
+            return df.select(F.col(by).alias("_k")).groupBy("_k").count()
 
-            hot_keys = [
-                r["_k"]
-                for r in (
-                    key_counts(left)
-                    .unionByName(key_counts(renamed))
-                    .groupBy("_k").agg(F.max("count").alias("_cnt"))
-                    .where(F.col("_cnt") > hot_key_threshold)
-                    .collect()
-                )
-            ]
-    if slab_seconds is not None and hot_keys:
+        hot_keys = [
+            r["_k"]
+            for r in (
+                key_counts(left)
+                .unionByName(key_counts(renamed))
+                .groupBy("_k").agg(F.max("count").alias("_cnt"))
+                .where(F.col("_cnt") > _HOT_KEY_ROWS)
+                .collect()
+            )
+        ]
+    if hot_keys:
         # each side's epoch conversion keys on ITS OWN dtype — deriving the
         # right side's from the left schema would mis-convert when the two
         # `on` columns differ (e.g. left double vs right timestamp_ntz)
@@ -135,11 +132,13 @@ def asof_join(
         r2 = renamed.withColumn("_slab", F.lit(0).cast("long"))
 
     # ---- one ordered stream per (key, slab), window carry ----------------
+    # at equal `on`, right rows (_f 1) sort AFTER left rows (_f 0): invisible
+    # to the preceding frame, so the match is strict
     rows_l = l2.select(
         F.col(by).alias("_by"),
         "_slab",
         F.col(on).alias("_t"),
-        F.lit(l_flag).alias("_f"),
+        F.lit(0).alias("_f"),
         lstruct.alias("_l"),
         F.lit(None).cast(rstruct_type).alias("_r"),
     )
@@ -147,7 +146,7 @@ def asof_join(
         F.col(by).alias("_by"),
         "_slab",
         F.col(on_right).alias("_t"),
-        F.lit(r_flag).alias("_f"),
+        F.lit(1).alias("_f"),
         F.lit(None).cast(lstruct_type).alias("_l"),
         rstruct.alias("_r"),
     )
@@ -157,7 +156,7 @@ def asof_join(
             F.col(by).alias("_by"),
             "_slab",
             F.col("_r").getField(on_right).alias("_t"),
-            F.lit(r_flag).alias("_f"),
+            F.lit(1).alias("_f"),
             F.lit(None).cast(lstruct_type).alias("_l"),
             "_r",
         )

@@ -40,12 +40,13 @@ def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc
     )
 
 
-def exact_dedup_keep(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """The deduplicated table itself: first id per content hash wins."""
-    keepers = exact_dedup_groups(df, text_col, id_col).select(
-        F.col("keeper_id").alias(id_col)
+def exact_dedup_keep(df: DataFrame) -> DataFrame:
+    """The deduplicated conversation table itself: first ``conv_id`` per
+    ``conv_text`` hash wins."""
+    keepers = exact_dedup_groups(df, "conv_text", "conv_id").select(
+        F.col("keeper_id").alias("conv_id")
     )
-    return df.join(keepers, id_col, "left_semi")
+    return df.join(keepers, "conv_id", "left_semi")
 
 
 def exploded_shingles(
@@ -123,17 +124,15 @@ def ordered_pairs(arr: Column, a_name: str = "id_a", b_name: str = "id_b") -> Co
     )
 
 
-def explode_ordered_pairs(
-    df: DataFrame,
-    arr_col: str,
-    a_name: str = "a",
-    b_name: str = "b",
-    small_cutoff: int = 256,
-) -> DataFrame:
+#: largest group explode_ordered_pairs enumerates as one flattened pair array
+_SMALL_GROUP = 256
+
+
+def explode_ordered_pairs(df: DataFrame, arr_col: str, a_name: str, b_name: str) -> DataFrame:
     """All i<j pairs of each row's SORTED ``arr_col``, safe for UNBOUNDED
     group sizes. Hybrid of two worker-side strategies:
 
-    - groups <= ``small_cutoff``: one flatten of the whole pair array
+    - groups <= ``_SMALL_GROUP``: one flatten of the whole pair array
       (``ordered_pairs``) — fastest, bounded at C(cutoff, 2) elements;
     - larger groups: TWO streaming generates (posexplode picks the left
       element, a second explode over the array's tail slice picks the
@@ -142,8 +141,8 @@ def explode_ordered_pairs(
       materializing a 5*10^11-element array.
 
     Returns a DataFrame with exactly (a_name, b_name)."""
-    small = df.where(F.size(arr_col) <= small_cutoff)
-    large = df.where(F.size(arr_col) > small_cutoff)
+    small = df.where(F.size(arr_col) <= _SMALL_GROUP)
+    large = df.where(F.size(arr_col) > _SMALL_GROUP)
     p_small = small.select(
         F.explode(ordered_pairs(F.col(arr_col), a_name, b_name)).alias("_p")
     ).select(f"_p.{a_name}", f"_p.{b_name}")
@@ -238,6 +237,11 @@ def ngram_jaccard_pairs(
     )
 
 
+#: most qualifying shingles the prefix path collects into a driver-side
+#: dictionary; a larger dictionary takes the broadcast-join fallback
+_DICT_MAX = 5_000_000
+
+
 def _prefix_filtered_ngram_pairs(
     df: DataFrame,
     text_col: str,
@@ -327,9 +331,8 @@ def _prefix_filtered_ngram_pairs(
     # collected once and shipped as a broadcast variable into ONE kernel that
     # emits each doc's sorted qualifying-sid array directly — no second
     # shingle explode, no dictionary join, no per-doc collect shuffle
-    # (measured −3s at sf1.0). Oversized dictionaries fall back to the
-    # broadcast-join + collect_list shape (identical results).
-    _DICT_MAX = 5_000_000
+    # (measured −3s at sf1.0). Dictionaries over _DICT_MAX shingles fall
+    # back to the broadcast-join + collect_list shape (identical results).
     # ONE construction job: TakeOrdered of at most max+1 rows — the +1 both
     # detects an oversized dictionary AND bounds driver memory (a separate
     # count() guard would run the frequency pipeline twice)
@@ -725,22 +728,24 @@ def minhash_lsh_pairs(
     return explode_ordered_pairs(groups, "ids", "id_a", "id_b").distinct()
 
 
+#: bucket count commit_minhash_bands gives a new band table
+_BAND_BUCKETS = 16
+
+
 def commit_minhash_bands(
     df: DataFrame | None,
     table: str,
     path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_hashes: int = 32,
     bands: int = 8,
     k: int = 5,
     hash_fn: str = "md5",
-    n_buckets: int = 16,
     mode: str = "overwrite",
     hot_band_cap: int | None = None,
     banded: DataFrame | None = None,
 ) -> None:
-    """Persist a corpus' LSH band keys as a ``band_hash``-bucketed table —
+    """Persist the LSH band keys of a ``(doc_id, text)`` corpus as a
+    ``band_hash``-bucketed table —
     the standing index a daily ingest dedups against. ``mode='append'``
     adds a new batch's keys after it has been dedup-checked, so the table
     only ever grows by accepted batches (the commit discipline lineage.py's
@@ -770,7 +775,7 @@ def commit_minhash_bands(
     if banded is None:
         if df is None:
             raise ValueError("pass df or banded")
-        banded = minhash_band_keys(df, text_col, id_col, n_hashes, bands, k, hash_fn)
+        banded = minhash_band_keys(df, "text", "doc_id", n_hashes, bands, k, hash_fn)
     spark = banded.sparkSession
     if mode == "append" and spark.catalog.tableExists(table):
         # appending keys built with different signature parameters would mix
@@ -780,7 +785,7 @@ def commit_minhash_bands(
         )
     if hot_band_cap is not None:
         banded = _cap_band_keys(banded, hot_band_cap)
-    gio.write_bucketed(banded, table, path, key="band_hash", n_buckets=n_buckets, mode=mode)
+    gio.write_bucketed(banded, table, path, key="band_hash", n_buckets=_BAND_BUCKETS, mode=mode)
     _write_signature_params(spark, table, n_hashes, bands, k, hash_fn)
 
 
@@ -844,9 +849,7 @@ def _cap_band_keys(banded: DataFrame, cap: int) -> DataFrame:
     )
 
 
-def recap_band_index(
-    spark, table: str, path: str, hot_band_cap: int, n_buckets: int | None = None
-) -> None:
+def recap_band_index(spark, table: str, path: str, hot_band_cap: int) -> None:
     """Table MAINTENANCE: rewrite the standing band index keeping at most
     ``hot_band_cap`` ids per (band, band_hash) GLOBALLY — per-commit caps
     drift upward under append-mode ingest (up to cap x batches per key);
@@ -857,14 +860,13 @@ def recap_band_index(
     / ``<table>_recap`` BEFORE the main table is overwritten, so a crash
     mid-publish never leaves the corpus' only signature record destroyed —
     the staged table survives for manual recovery. The bucket count is read
-    from the CATALOG (``n_buckets=None``), so maintenance preserves the
+    from the CATALOG, so maintenance preserves the
     physical layout the exchange-free ingest join was planned around.
     Requires ingest quiescence (an append landing between read and publish
     would be clobbered)."""
     from docling_gfcr_spark import io as gio
 
-    if n_buckets is None:
-        n_buckets = _table_bucket_count(spark, table) or 16
+    n_buckets = _table_bucket_count(spark, table) or _BAND_BUCKETS
     # the overwrite saveAsTable below recreates the table, dropping the
     # stamped signature parameters — carry them across the rewrite
     sig = _read_signature_params(spark, table)
@@ -903,8 +905,6 @@ def incremental_minhash_pairs(
     spark,
     table: str,
     new_df: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_hashes: int = 32,
     bands: int = 8,
     k: int = 5,
@@ -931,14 +931,14 @@ def incremental_minhash_pairs(
 
     ``new_banded`` lets a caller that already computed the batch's band
     keys (streaming ingest signs each batch exactly once) pass them in
-    instead of re-signaturing ``new_df``. A missing committed table is an
+    instead of re-signaturing ``new_df`` (a ``(doc_id, text)`` batch). A missing committed table is an
     ERROR unless ``allow_missing_table=True`` (the first-batch bootstrap) —
     silently deduping against nothing would commit duplicates undetected.
     """
     if new_banded is None:
         if new_df is None:
             raise ValueError("pass new_df or new_banded")
-        new_banded = minhash_band_keys(new_df, text_col, id_col, n_hashes, bands, k, hash_fn)
+        new_banded = minhash_band_keys(new_df, "text", "doc_id", n_hashes, bands, k, hash_fn)
     cross = None
     if spark.catalog.tableExists(table):
         _check_signature_params(
@@ -1031,11 +1031,13 @@ def _free_local_checkpoint(df: DataFrame) -> None:
         pass
 
 
-def connected_components(
-    edges: DataFrame, src: str = "id_a", dst: str = "id_b", max_iter: int = 50
-) -> DataFrame:
-    """Dedup clusters: connected components over near-dup pairs by iterative
-    min-label propagation (each node takes the smallest label among itself
+#: label-propagation rounds connected_components runs before giving up
+_CC_MAX_ITER = 50
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
+    """Dedup clusters: connected components over ``(id_a, id_b)`` near-dup
+    pairs by iterative min-label propagation (each node takes the smallest label among itself
     and its neighbors until fixpoint — O(diameter) rounds, so near-dup
     clusters converge in a handful).
 
@@ -1046,14 +1048,24 @@ def connected_components(
     so is the last one when the loop gives up.
 
     Returns ``(node, comp)`` where comp = min node id in the component.
-    Raises ``RuntimeError`` if the loop hits ``max_iter`` without reaching
-    the fixpoint — un-converged labels are silently WRONG clusters, and for
-    near-dup graphs a diameter > 50 means the input is not what this
+    An empty edge set converges in the first round to an empty table.
+    Raises ``RuntimeError`` if the loop hits ``_CC_MAX_ITER`` without
+    reaching the fixpoint — un-converged labels are silently WRONG clusters,
+    and for near-dup graphs a diameter > 50 means the input is not what this
     operator is for.
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    # both directions of every edge from ONE read of the input (one explode,
+    # not a self-union that plans the edge source twice)
     und = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        edges.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("id_a").alias("a"), F.col("id_b").alias("b")),
+                    F.struct(F.col("id_b").alias("a"), F.col("id_a").alias("b")),
+                )
+            ).alias("e")
+        )
+        .select("e.a", "e.b")
         .distinct()
         .localCheckpoint()
     )
@@ -1061,7 +1073,7 @@ def connected_components(
         "comp", F.col("node")
     ).localCheckpoint()
     converged = False
-    for _ in range(max_iter):
+    for _ in range(_CC_MAX_ITER):
         nbr = und.join(labels, und["b"] == labels["node"]).select(
             F.col("a").alias("node"), F.col("comp")
         )
@@ -1083,28 +1095,21 @@ def connected_components(
     if not converged:
         _free_local_checkpoint(labels)
         raise RuntimeError(
-            f"connected_components did not converge within max_iter={max_iter} "
-            "rounds; labels would be wrong — raise max_iter for high-diameter "
-            "graphs"
+            f"connected_components did not converge within {_CC_MAX_ITER} "
+            "rounds; labels would be wrong — raise _CC_MAX_ITER for "
+            "high-diameter graphs"
         )
     return labels
 
 
-def dedup_cluster_members(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = 32,
-    bands: int = 8,
-    k: int = 5,
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """MinHash-LSH pairs -> connected components -> full membership table
-    (every doc in a >=2-member near-dup cluster, labeled by its cluster's
-    min doc id — the keeper under keep-first policy)."""
-    pairs = minhash_lsh_pairs(df, text_col, id_col, n_hashes, bands, k, hash_fn=hash_fn)
+def dedup_cluster_members(df: DataFrame) -> DataFrame:
+    """MinHash-LSH pairs (md5, 32 hashes, 8 bands, 5-word shingles) of a
+    ``(doc_id, text)`` table -> connected components -> full membership
+    table (every doc in a >=2-member near-dup cluster, labeled by its
+    cluster's min doc id — the keeper under keep-first policy)."""
+    pairs = minhash_lsh_pairs(df, "text", "doc_id", 32, 8, 5, hash_fn="md5")
     comp = connected_components(pairs)
-    return comp.select(F.col("node").alias(id_col), F.col("comp").alias("cluster_id"))
+    return comp.select(F.col("node").alias("doc_id"), F.col("comp").alias("cluster_id"))
 
 
 # ---- SimHash (pandas UDF: bit packing is not relational) -----------------

@@ -1,8 +1,8 @@
 """Optional LLM enhancement stage (reference E1/B2 — default OFF).
 
-Mirrors /root/reference/scripts/openai_enhancer.py:114-248: three operations
-(``enhance`` / ``analyze`` / ``extract``) applied per document via an external
-LLM, with graceful per-row fallback to the original content on any error
+Mirrors the reference's scripts/openai_enhancer.py:114-248: the ``enhance``
+operation applied per document via an external LLM, with graceful per-row
+fallback to the original content on any error
 (reference lines 161-168) — the stage can never lose rows.
 
 Spark shape: ``mapInPandas`` with a per-partition client (one connection per
@@ -16,13 +16,10 @@ API client. No network code lives here.
 
 from __future__ import annotations
 
-import json
 from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-
-OPERATIONS = ("enhance", "analyze", "extract")
 
 ENHANCED_SCHEMA_SUFFIX = (
     "enhanced_text string, enhance_applied boolean, enhance_error string"
@@ -31,19 +28,16 @@ ENHANCED_SCHEMA_SUFFIX = (
 
 def enhance_documents(
     df: DataFrame,
-    text_col: str = "extracted_text",
-    operation: str = "enhance",
     client_factory: Callable[[], Callable[[str, str], str]] | None = None,
 ) -> DataFrame:
-    """Append (enhanced_text, enhance_applied, enhance_error) columns.
+    """Append (enhanced_text, enhance_applied, enhance_error) columns,
+    enhancing the ``text`` column.
 
-    ``client_factory()`` -> ``call(operation, text) -> str`` is created once
+    ``client_factory()`` -> ``call("enhance", text) -> str`` is created once
     per partition. Without a factory the stage is a passthrough marked
     not-applied (the reference's OPENAI_AVAILABLE=False path,
     convert.py:15-20).
     """
-    if operation not in OPERATIONS:
-        raise ValueError(f"operation must be one of {OPERATIONS}")
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     ) + ", " + ENHANCED_SCHEMA_SUFFIX
@@ -53,15 +47,15 @@ def enhance_documents(
         for pdf in batches:
             if call is None:
                 yield pdf.assign(
-                    enhanced_text=pdf[text_col],
+                    enhanced_text=pdf["text"],
                     enhance_applied=False,
                     enhance_error="enhancer unavailable",
                 )
                 continue
             outs, applied, errs = [], [], []
-            for text in pdf[text_col].tolist():
+            for text in pdf["text"].tolist():
                 try:
-                    outs.append(call(operation, text))
+                    outs.append(call("enhance", text))
                     applied.append(True)
                     errs.append(None)
                 except Exception as e:  # graceful fallback, row preserved
@@ -75,16 +69,12 @@ def enhance_documents(
 
 def fake_client_factory() -> Callable[[str, str], str]:
     """Deterministic stand-in used by tests (and by offline dry-runs):
-    enhance = uppercase first line; analyze/extract = JSON envelopes."""
+    enhance = uppercase first line."""
 
     def call(operation: str, text: str) -> str:
         if text is None:
             raise ValueError("null text")
-        if operation == "enhance":
-            head, sep, tail = text.partition("\n")
-            return head.upper() + sep + tail
-        if operation == "analyze":
-            return json.dumps({"n_chars": len(text), "n_words": len(text.split())})
-        return json.dumps({"keywords": sorted(set(text.split()))[:5]})
+        head, sep, tail = text.partition("\n")
+        return head.upper() + sep + tail
 
     return call

@@ -98,12 +98,13 @@ def decode_media(payload: bytes) -> dict:
     }
 
 
-def byte_histogram(payload: bytes, bins: int = 16) -> list[float]:
-    """Fraction of bytes per 16-wide value bin — a codec-free content feature."""
+def byte_histogram(payload: bytes) -> list[float]:
+    """Fraction of bytes per 16-wide value bin (16 bins) — a codec-free
+    content feature."""
     if not payload:
-        return [0.0] * bins
+        return [0.0] * 16
     arr = np.frombuffer(payload, dtype=np.uint8)
-    counts = np.bincount(arr >> 4, minlength=bins).astype(np.float64)
+    counts = np.bincount(arr >> 4, minlength=16).astype(np.float64)
     return [float(x) for x in counts / len(arr)]
 
 
@@ -133,11 +134,11 @@ def extract_media_features(df: DataFrame) -> DataFrame:
     return df.mapInPandas(op, schema=FEATURE_SCHEMA)
 
 
-def gen_media_payload(i: int, seed: int = 42) -> tuple[str, bytes]:
+def gen_media_payload(i: int) -> tuple[str, bytes]:
     """(modality, payload) for media_id ``i`` — REAL minimal containers,
-    deterministic in (i, seed); the shared unit both Spark generation and
-    local test oracles call."""
-    rng = np.random.RandomState(seed + int(i))
+    deterministic in ``i`` (seed 42); the shared unit both Spark generation
+    and local test oracles call."""
+    rng = np.random.RandomState(42 + int(i))
     m = int(i) % 4
     if m == 0:
         return "image", media.build_png(4 + int(i) % 28, 4 + (int(i) // 2) % 28, seed=int(i) & 0xFF)
@@ -149,18 +150,18 @@ def gen_media_payload(i: int, seed: int = 42) -> tuple[str, bytes]:
         )
     if rng.rand() < 0.1:  # plant undecodable payloads: O1 must keep the row
         return "video", rng.bytes(64)
-    return "video", media.build_mp4(0.5 + (int(i) % 50) / 10.0, timescale=1000, seed=int(i) & 0xFF)
+    return "video", media.build_mp4(0.5 + (int(i) % 50) / 10.0, seed=int(i) & 0xFF)
 
 
-def make_fake_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
-    """Deterministic media table of real minimal containers (see
+def make_fake_media(spark) -> DataFrame:
+    """Deterministic 128-row media table of real minimal containers (see
     ``gen_media_payload``); 'fake' refers to the content, not the format."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for i in pdf["id"].tolist():
-                modality, payload = gen_media_payload(int(i), seed)
+                modality, payload = gen_media_payload(int(i))
                 rows.append(
                     {
                         "media_id": int(i),
@@ -172,7 +173,7 @@ def make_fake_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
                 )
             yield pd.DataFrame(rows)
 
-    return spark.range(n).mapInPandas(gen, schema=MEDIA_SCHEMA)
+    return spark.range(128).mapInPandas(gen, schema=MEDIA_SCHEMA)
 
 
 def transform_payload(blob: bytes, max_side: int, frame_step: int) -> tuple[bytes, bool]:
@@ -189,13 +190,13 @@ def transform_payload(blob: bytes, max_side: int, frame_step: int) -> tuple[byte
     return blob, False
 
 
-def transform_media(df: DataFrame, max_side: int = 64, frame_step: int = 4) -> DataFrame:
+def transform_media(df: DataFrame) -> DataFrame:
     """Media transformation stage (mapInPandas): REAL pixel/PCM work where
     the container is stdlib-decodable, honest passthrough where not.
 
-    - PNG images larger than ``max_side``: nearest-neighbor downscale
+    - PNG images with a side over 20 px: nearest-neighbor downscale
       (full scanline unfilter incl. Paeth — kernels/media.py) and re-encode.
-    - WAV audio: keep every ``frame_step``-th PCM frame (decimation; sample
+    - WAV audio: keep every 4th PCM frame (decimation; sample
       rate divided so duration is preserved).
     - JPEG/MP4 payloads pass through unchanged with ``transformed=false`` —
       entropy-coded streams need real codecs (Pillow/av on executors in
@@ -212,7 +213,7 @@ def transform_media(df: DataFrame, max_side: int = 64, frame_step: int = 4) -> D
                 pdf["media_id"], pdf["modality"], pdf["payload"]
             ):
                 blob = bytes(payload) if payload is not None else b""
-                out, done = transform_payload(blob, max_side, frame_step)
+                out, done = transform_payload(blob, 20, 4)
                 rows.append(
                     {
                         "media_id": media_id,

@@ -46,82 +46,55 @@ def hash_sample(df: DataFrame, fraction: float, id_col: str = "doc_id", salt: st
     return df.where(sample_predicate(fraction, id_col, salt))
 
 
-def split_column(
-    id_col: str = "doc_id",
-    weights: tuple[float, ...] = (0.8, 0.1, 0.1),
-    names: tuple[str, ...] = ("train", "val", "test"),
-    salt: str = "split",
-) -> Column:
-    """'train'/'val'/'test' (or custom) assignment column."""
-    if len(weights) != len(names):
-        raise ValueError("weights and names must align")
-    h = _hex8(id_col, salt)
-    acc = 0.0
-    expr = None
-    for w, name in zip(weights[:-1], names[:-1]):
-        acc += w
-        # a cumulative weight reaching 1.0 before the last name must capture
-        # EVERY row (strict '<' against the hex clamp would leak 'ffffffff')
-        cond = F.lit(True) if acc >= 1.0 else h < _threshold_hex(acc)
-        expr = F.when(cond, name) if expr is None else expr.when(cond, name)
-    return (expr.otherwise(names[-1]) if expr is not None else F.lit(names[-1])).alias("split")
+def deterministic_split(df: DataFrame) -> DataFrame:
+    """Adds ``split``: 'train'/'val'/'test' at 80/10/10 by md5('split:'||doc_id)."""
+    h = _hex8("doc_id", "split")
+    split = (
+        F.when(h < _threshold_hex(0.8), "train")
+        .when(h < _threshold_hex(0.8 + 0.1), "val")  # cumulative weight
+        .otherwise("test")
+    )
+    return df.withColumn("split", split.alias("split"))
 
 
-def deterministic_split(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    weights: tuple[float, ...] = (0.8, 0.1, 0.1),
-    names: tuple[str, ...] = ("train", "val", "test"),
-    salt: str = "split",
-) -> DataFrame:
-    return df.withColumn("split", split_column(id_col, weights, names, salt))
-
-
-def source_mixing_predicate(
-    weights: dict[str, float],
-    default: float,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    salt: str = "mix",
-) -> Column:
+def source_mixing_predicate(weights: dict[str, float], default: float, id_col: str = "doc_id") -> Column:
     """Deterministic DATA-MIXING keep predicate: per-source sampling rates
     (the DoReMi/temperature-resampling shape — upweight curated sources,
     downsample the crawl) applied via the same md5-threshold rule as
     hash_sample, so the mix is reproducible across runs, partitionings and
-    engines. Rates >= 1.0 keep everything (no hex-clamp leak)."""
-    h = _hex8(id_col, salt)
+    engines. Rates >= 1.0 keep everything (no hex-clamp leak). The source is
+    the ``source`` column; the hash salt is 'mix'."""
+    h = _hex8(id_col, "mix")
 
     def keep(frac: float) -> Column:
         return F.lit(True) if frac >= 1.0 else h < _threshold_hex(frac)
 
     expr = None
     for src, frac in sorted(weights.items()):
-        cond = F.col(source_col) == src
+        cond = F.col("source") == src
         expr = F.when(cond, keep(frac)) if expr is None else expr.when(cond, keep(frac))
     tail = keep(default)
     return tail if expr is None else expr.otherwise(tail)
 
 
-def source_mixing_sql(
-    table: str,
-    weights: dict[str, float],
-    default: float,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    salt: str = "mix",
-) -> str:
-    """DuckDB twin of :func:`source_mixing_predicate` as a WHERE clause body
-    (generated from the same weights table — zero drift)."""
-    h = f"substr(md5('{salt}:' || CAST({id_col} AS VARCHAR)), 1, 8)"
+def source_mixing_sql(weights: dict[str, float], default: float) -> str:
+    """DuckDB twin of :func:`source_mixing_predicate` over ``doc_id`` as a
+    WHERE clause body (generated from the same weights table — zero drift)."""
+    h = "substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 8)"
 
     def keep(frac: float) -> str:
         return "TRUE" if frac >= 1.0 else f"{h} < '{_threshold_hex(frac)}'"
 
     cases = " ".join(
-        f"WHEN {source_col} = '{src}' THEN {keep(frac)}"
+        f"WHEN source = '{src}' THEN {keep(frac)}"
         for src, frac in sorted(weights.items())
     )
     return f"CASE {cases} ELSE {keep(default)} END"
+
+
+#: heldout doc count up to which ngram_decontaminate broadcasts the heldout
+#: shingle set; past it the shuffle-hash join runs
+_BROADCAST_MAX_DOCS = 100_000
 
 
 def ngram_decontaminate(
@@ -130,29 +103,22 @@ def ngram_decontaminate(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 8,
-    strategy: str = "auto",
-    broadcast_max_docs: int = 100_000,
 ) -> DataFrame:
     """GPT-3-style n-gram decontamination: flag training docs sharing any
     word k-gram with a heldout/benchmark set.
 
     The heldout shingle set is usually tiny relative to the corpus
-    (benchmarks are KBs, corpora are TBs), so the default path broadcasts it
-    and the training side is one scan + map-side hash probe — no corpus
-    shuffle. For heldout sets past the broadcast threshold there is a
-    shuffle-hash fallback with identical semantics (same oracle covers both).
-
-    ``strategy``: ``"broadcast"`` | ``"shuffle"`` | ``"auto"`` (count the
-    heldout DOCS — a cheap control-plane aggregate on the small side, never
-    the corpus — and broadcast iff under ``broadcast_max_docs``).
+    (benchmarks are KBs, corpora are TBs), so it is broadcast and the
+    training side is one scan + map-side hash probe — no corpus shuffle.
+    The shape is chosen from the data: the heldout DOCS are counted (a cheap
+    control-plane aggregate on the small side, never the corpus), and a
+    heldout set past ``_BROADCAST_MAX_DOCS`` takes a shuffle-hash join with
+    identical semantics instead (same oracle covers both).
     Returns (id, n_shared_shingles) for every contaminated training doc.
     """
     from docling_gfcr_spark.operators.dedup import exploded_shingles
 
-    if strategy not in ("auto", "broadcast", "shuffle"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    if strategy == "auto":
-        strategy = "broadcast" if heldout.count() <= broadcast_max_docs else "shuffle"
+    broadcast = heldout.count() <= _BROADCAST_MAX_DOCS
     # Both sides shingle through the Arrow-batched kernel (byte-identical to
     # a split/transform HOF, whose explode(transform(...)) form is
     # CodegenFallback — interpreted; see dedup.exploded_shingles). The
@@ -163,7 +129,7 @@ def ngram_decontaminate(
     held_sh = exploded_shingles(heldout, text_col, id_col, k, with_size=False).select(
         "shingle"
     ).distinct()
-    if strategy == "broadcast":
+    if broadcast:
         # r8: the broadcast path fuses shingling and probing into ONE kernel
         # with the heldout shingle set as a Spark broadcast variable — the
         # former shape exploded every training shingle through Arrow (2.7M
@@ -171,7 +137,7 @@ def ngram_decontaminate(
         # emits only per-doc match counts (3.5s -> 1.9s at sf1.0, identical
         # counts: |distinct-shingles-of-row ∩ H| per row, summed per id —
         # exactly what count(*) over the joined rows computed). The heldout
-        # set is driver-bounded BY DEFINITION of this strategy (it is what
+        # set is driver-bounded BY DEFINITION of this path (it is what
         # the broadcast hash relation held).
         id_type = train.schema[id_col].dataType.simpleString()
         sc = train.sparkSession.sparkContext
@@ -213,7 +179,6 @@ def pack_sequences(
     df: DataFrame,
     budget: int,
     id_col: str = "doc_id",
-    token_col: str = "n_tokens",
     bucket_size: int = 10_000,
     order_by: str = "id",
 ) -> DataFrame:
@@ -229,8 +194,8 @@ def pack_sequences(
     table) get the only global window, and the per-doc running sum is a
     window partitioned BY bucket plus the broadcast bucket offset. Semantics
     are identical to the corresponding global window (the DuckDB oracle
-    computes exactly that). Output: input columns + ``tokens_before`` +
-    ``seq_bin``.
+    computes exactly that). Output: ``id_col``, ``n_tokens``,
+    ``tokens_before`` and ``seq_bin``.
 
     ``order_by``:
 
@@ -244,7 +209,7 @@ def pack_sequences(
     """
     from pyspark.sql import Window
 
-    base_cols = [F.col(id_col), F.col(token_col)]
+    base_cols = [F.col(id_col), F.col("n_tokens")]
     if order_by == "id":
         base = df.select(*base_cols, F.floor(F.col(id_col) / bucket_size).alias("_bkt"))
         in_bucket_order = [F.col(id_col)]
@@ -254,7 +219,7 @@ def pack_sequences(
         in_bucket_order = [F.col("_h"), F.col(id_col)]
     else:
         raise ValueError(f"unknown order_by {order_by!r}")
-    bucket_tot = base.groupBy("_bkt").agg(F.sum(token_col).alias("_btot"))
+    bucket_tot = base.groupBy("_bkt").agg(F.sum("n_tokens").alias("_btot"))
     w_b = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
     offsets = bucket_tot.select(
         "_bkt", F.coalesce(F.sum("_btot").over(w_b), F.lit(0)).alias("_boff")
@@ -268,7 +233,7 @@ def pack_sequences(
         base.join(F.broadcast(offsets), "_bkt")
         .withColumn(
             "tokens_before",
-            (F.col("_boff") + F.coalesce(F.sum(token_col).over(w_in), F.lit(0))).cast("long"),
+            (F.col("_boff") + F.coalesce(F.sum("n_tokens").over(w_in), F.lit(0))).cast("long"),
         )
         .withColumn("seq_bin", F.floor(F.col("tokens_before") / budget).cast("long"))
         .drop("_bkt", "_boff")

@@ -8,8 +8,8 @@
   per-batch top-k, so the final window ranks ~batches x P x k survivors.
   Linear in corpus size, no shuffle or join of the corpus.
 - ``ivf_topk``: the approximate path — a spherical-k-means coarse quantizer;
-  each probe re-ranks exactly inside its ``n_probe`` nearest clusters, so it
-  scores ~n_probe/n_centroids of the corpus. Recall measured against
+  each probe re-ranks exactly inside its 4 nearest of 16 clusters, so it
+  scores ~1/4 of the corpus. Recall measured against
   cosine_topk in tests.
 - ``embedding_neardup_pairs``: all pairs above a cosine threshold inside
   random-hyperplane LSH buckets (signs of dot-products with seed-derived
@@ -25,6 +25,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from docling_gfcr_spark.operators.util import ensure_parallelism
+
+#: neighbours kept per probe by cosine_topk and ivf_topk
+_TOPK = 5
+#: ivf_topk's codebook size and the clusters each probe visits
+_IVF_CENTROIDS = 16
+_IVF_PROBE = 4
+#: rows of one per-bucket pair chunk in _bucket_pairs_kernel (peak memory)
+_PAIR_CHUNK = 200_000
+#: hard cap on the centroid trainer's driver-side sample
+_IVF_SAMPLE_LIMIT = 20_000
 
 
 def _dot(a, b) -> Column:
@@ -55,15 +65,9 @@ def _seq_sq_norms(m: np.ndarray) -> np.ndarray:
     return np.sqrt(acc)
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k neighbours of each probe (probe matrix shipped in the task
-    closure x one corpus scan).
+def cosine_topk(corpus: DataFrame, probes: DataFrame) -> DataFrame:
+    """Exact top-``_TOPK`` neighbours of each probe by ``embedding`` (probe
+    matrix shipped in the task closure x one corpus scan).
 
     Plan shape (r8): ONE narrow ``mapInPandas`` over the corpus computing all
     probe cosines per Arrow batch and keeping only each probe's per-batch
@@ -86,13 +90,12 @@ def cosine_topk(
     """
     from pyspark.sql import Window
 
-    id_type = corpus.schema[id_col].dataType.simpleString()
+    id_type = corpus.schema["vec_id"].dataType.simpleString()
     pdf = probes.select(
-        F.col(id_col).alias("probe_id"), F.col(vec_col).cast("array<double>").alias("pv")
+        F.col("vec_id").alias("probe_id"), F.col("embedding").cast("array<double>").alias("pv")
     ).toPandas()
     probe_ids = pdf["probe_id"].to_numpy()
     pv_list = pdf["pv"].tolist()
-    kk = int(k)
 
     def _topk_kernel(batches):
         n_probes = len(probe_ids)
@@ -147,7 +150,7 @@ def cosine_topk(
                     if v.size == 0:
                         continue
                     c = cos[v, p]
-                    order = np.lexsort((ids[v], -c))[:kk]
+                    order = np.lexsort((ids[v], -c))[:_TOPK]
                     sel = v[order]
                     out_p.extend([g_pids[p]] * sel.size)
                     out_n.extend(ids[sel].tolist())
@@ -161,8 +164,8 @@ def cosine_topk(
     reduced = (
         ensure_parallelism(corpus)
         .select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").cast("array<double>").alias("cv"),
         )
         .mapInPandas(
             _topk_kernel, f"probe_id {id_type}, neighbor_id {id_type}, cos double"
@@ -174,7 +177,7 @@ def cosine_topk(
         # NaN/NULL cosines never reach here (masked in the kernel); the
         # global window re-ranks the per-batch survivors exactly
         .withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= _TOPK)
         .select("probe_id", "rank", "neighbor_id", F.round("cos", 6).alias("cos"))
     )
 
@@ -183,7 +186,7 @@ def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     return np.random.RandomState(seed).standard_normal((n_planes, dim))
 
 
-def make_bucket_udf(dim: int, n_planes: int, seed: int = 42, n_tables: int = 1):
+def make_bucket_udf(dim: int, n_planes: int, n_tables: int):
     """Sign-LSH bucket ids, one per hash table (OR-construction).
 
     bit b of table t = sign of dot with hyperplane (t, b); the returned array
@@ -191,7 +194,7 @@ def make_bucket_udf(dim: int, n_planes: int, seed: int = 42, n_tables: int = 1):
     at angle θ collides in one table w.p. (1-θ/π)^n_planes, in ANY of L
     tables w.p. 1-(1-p)^L.
     """
-    planes = hyperplanes(dim, n_planes * n_tables, seed).reshape(n_tables, n_planes, dim)
+    planes = hyperplanes(dim, n_planes * n_tables).reshape(n_tables, n_planes, dim)
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def bucket(vecs: pd.Series) -> pd.Series:
@@ -205,12 +208,12 @@ def make_bucket_udf(dim: int, n_planes: int, seed: int = 42, n_tables: int = 1):
     return bucket
 
 
-def _bucket_pairs_kernel(threshold: float, pair_chunk: int = 200_000):
+def _bucket_pairs_kernel(threshold: float):
     """Grouped-map kernel: ALL qualifying pairs within one (table, bucket).
 
     Enumerates the triangle in numpy, cosine via the per-pair
     ``einsum('ij,ij->i')`` arithmetic the fixture oracle uses (bit-identical),
-    chunked so peak memory is bounded by ``pair_chunk``
+    chunked so peak memory is bounded by ``_PAIR_CHUNK``
     rows regardless of bucket size. Only pairs >= threshold leave the
     worker — the threshold filter happens BEFORE any shuffle.
     """
@@ -228,8 +231,8 @@ def _bucket_pairs_kernel(threshold: float, pair_chunk: int = 200_000):
         norms = np.linalg.norm(m, axis=1)
         ia, ib = np.triu_indices(n, 1)
         out_a, out_b, out_c = [], [], []
-        for lo in range(0, len(ia), pair_chunk):
-            sa, sb = ia[lo : lo + pair_chunk], ib[lo : lo + pair_chunk]
+        for lo in range(0, len(ia), _PAIR_CHUNK):
+            sa, sb = ia[lo : lo + _PAIR_CHUNK], ib[lo : lo + _PAIR_CHUNK]
             num = np.einsum("ij,ij->i", m[sa], m[sb])
             cos = num / (norms[sa] * norms[sb])
             keep = cos >= threshold
@@ -287,17 +290,14 @@ def train_ivf_centroids(
     n_centroids: int = 16,
     seed: int = 42,
     iters: int = 10,
-    sample_limit: int = 20_000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_rows: int | None = None,
 ) -> np.ndarray:
-    """Spherical k-means on a DETERMINISTIC md5-thresholded hash sample
+    """Spherical k-means over the ``embedding`` column, on a DETERMINISTIC md5-thresholded hash sample
     (sampling.sample_predicate, salt 'ivf') — a pure scan-side predicate:
     every executor decides keep/drop per row independently, so there is no
     global sort/top-K anywhere in the trainer's plan and the training input
     is identical across runs, partitionings and engines. The sample fraction
-    targets ~1.2x ``sample_limit`` rows (binomial around it); at 10^12
+    targets ~1.2x ``_IVF_SAMPLE_LIMIT`` rows (binomial around it); at 10^12
     vectors you train on a fixed sample anyway — the expensive part,
     assignment, stays distributed. Driver-side sort of the ~20k collected
     rows pins the numpy init order. Returns unit-norm centroids
@@ -309,19 +309,19 @@ def train_ivf_centroids(
     # surrogate-collision guard) pass it in — the fraction, and therefore the
     # sample and the centroids, are identical either way
     n = corpus.count() if n_rows is None else int(n_rows)
-    fraction = min(1.0, 1.2 * sample_limit / max(n, 1))
+    fraction = min(1.0, 1.2 * _IVF_SAMPLE_LIMIT / max(n, 1))
     pdf = (
-        corpus.where(sample_predicate(fraction, id_col=id_col, salt="ivf"))
-        .select(F.col(id_col), F.col(vec_col).cast("array<double>"))
+        corpus.where(sample_predicate(fraction, id_col="vec_id", salt="ivf"))
+        .select(F.col("vec_id"), F.col("embedding").cast("array<double>"))
         .toPandas()  # Arrow transfer: ~10x faster than row collect() here
-        .sort_values(id_col, kind="stable")
+        .sort_values("vec_id", kind="stable")
     )
-    # hard cap: the binomial sample is ~1.2x sample_limit in EXPECTATION but
+    # hard cap: the binomial sample is ~1.2x the limit in EXPECTATION but
     # unbounded in the tail — truncate (in id order, deterministic) so driver
     # memory is bounded by construction, not probabilistically. The fixture
     # oracle (tools/make_fixtures.py) mirrors the same truncation.
-    pdf = pdf.iloc[:sample_limit]
-    m = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]], dtype=np.float64)
+    pdf = pdf.iloc[:_IVF_SAMPLE_LIMIT]
+    m = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]], dtype=np.float64)
     return spherical_kmeans(m, n_centroids, seed, iters)
 
 
@@ -386,29 +386,16 @@ def make_ivf_assign_udf(centroids: np.ndarray):
     return assign
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    seed: int = 42,
-    iters: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_topk(corpus: DataFrame, probes: DataFrame) -> DataFrame:
     """IVF ANN: every corpus row is assigned its nearest centroid inside the
-    scoring kernel; each probe visits its ``n_probe`` closest clusters and
-    re-ranks exactly inside them. Scored fraction ≈ n_probe / n_centroids
-    of the corpus instead of all of it."""
+    scoring kernel; each probe visits its ``_IVF_PROBE`` closest clusters and
+    re-ranks exactly inside them. Scored fraction ≈ _IVF_PROBE /
+    _IVF_CENTROIDS of the corpus instead of all of it."""
     from pyspark.sql import Window
 
-    cent = np.ascontiguousarray(
-        train_ivf_centroids(corpus, n_centroids, seed, iters, id_col=id_col, vec_col=vec_col),
-        dtype=np.float64,
-    )
+    cent = np.ascontiguousarray(train_ivf_centroids(corpus, _IVF_CENTROIDS), dtype=np.float64)
     dim = cent.shape[1]
-    id_type = corpus.schema[id_col].dataType.simpleString()
+    id_type = corpus.schema["vec_id"].dataType.simpleString()
 
     def _order(m: np.ndarray, np_: int) -> np.ndarray:
         # identical arithmetic to make_ivf_assign_udf's _order (normalize,
@@ -420,7 +407,7 @@ def ivf_topk(
     # probe side: collected once (it was already collected for the broadcast
     # join this replaces); clusters via the same assignment arithmetic
     pdf = probes.select(
-        F.col(id_col).alias("probe_id"), F.col(vec_col).cast("array<double>").alias("pv")
+        F.col("vec_id").alias("probe_id"), F.col("embedding").cast("array<double>").alias("pv")
     ).toPandas()
     pv_list = pdf["pv"].tolist()
     p_valid = [
@@ -432,13 +419,12 @@ def ivf_topk(
         np.asarray([pv_list[i] for i in p_valid], dtype=np.float64)
         if p_valid else np.zeros((0, dim), dtype=np.float64)
     )
-    p_clusters = _order(pm, n_probe) if len(pm) else np.zeros((0, n_probe), dtype=np.int64)
+    p_clusters = _order(pm, _IVF_PROBE) if len(pm) else np.zeros((0, _IVF_PROBE), dtype=np.int64)
     # cluster -> probe positions visiting it
     cluster_probes: dict[int, np.ndarray] = {}
     for c in np.unique(p_clusters):
         rows, _cols = np.nonzero(p_clusters == c)
         cluster_probes[int(c)] = np.unique(rows)
-    kk = int(k)
 
     def _ivf_kernel(batches):
         """Per Arrow batch: assign rows to their nearest centroid (same
@@ -500,7 +486,7 @@ def ivf_topk(
             out_p, out_n, out_c = [], [], []
             for p in np.unique(cp):
                 sel = np.flatnonzero(cp == p)
-                order = np.lexsort((cn[sel], -cc[sel]))[:kk]
+                order = np.lexsort((cn[sel], -cc[sel]))[:_TOPK]
                 pick = sel[order]
                 out_p.extend([probe_ids[p]] * pick.size)
                 out_n.extend(cn[pick].tolist())
@@ -514,44 +500,35 @@ def ivf_topk(
     # r8 shape: ONE narrow MapInPandas over the corpus (assignment + scoring
     # + per-batch top-k fused; the former plan shipped (pv, cv) per candidate
     # row through a broadcast join into a second Python boundary and
-    # windowed ~n_probe/n_centroids x |corpus| x |probes| rows) + a window
+    # windowed ~_IVF_PROBE/_IVF_CENTROIDS x |corpus| x |probes| rows) + a window
     # over the tiny survivor set. Output bit-identical (same assignment
     # ints, same per-pair einsum cosine floats).
     reduced = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("cv"),
     ).mapInPandas(_ivf_kernel, f"probe_id {id_type}, neighbor_id {id_type}, cos double")
     w = Window.partitionBy("probe_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
         reduced
         .withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= _TOPK)
         .select("probe_id", "rank", "neighbor_id", F.round("cos", 6).alias("cos"))
     )
 
 
-def embedding_neardup_pairs(
-    corpus: DataFrame,
-    threshold: float = 0.95,
-    n_planes: int = 6,
-    n_tables: int = 4,
-    seed: int = 42,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Pairs with cosine >= threshold, candidates limited to same
-    (table, bucket) — multi-table OR-construction for recall. Skew note: a
-    degenerate bucket holding B vectors costs B^2/2 kernel work; the lever
-    is n_planes (bucket count 2^n_planes)."""
-    bucket = make_bucket_udf(dim, n_planes, seed, n_tables)
+def embedding_neardup_pairs(corpus: DataFrame, n_planes: int = 6, n_tables: int = 4) -> DataFrame:
+    """Pairs of 64-dim ``embedding`` rows with cosine >= 0.4, candidates
+    limited to same (table, bucket) — multi-table OR-construction for
+    recall. Skew note: a degenerate bucket holding B vectors costs B^2/2
+    kernel work; the lever is n_planes (bucket count 2^n_planes)."""
+    bucket = make_bucket_udf(64, n_planes, n_tables)
     # (id, v, table, bucket): one row per hash table
     tb = ensure_parallelism(corpus).select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-        F.posexplode(bucket(F.col(vec_col))).alias("table", "bucket"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").cast("array<double>").alias("v"),
+        F.posexplode(bucket(F.col("embedding"))).alias("table", "bucket"),
     )
-    return _neardup_from_buckets(tb, threshold)
+    return _neardup_from_buckets(tb, 0.4)
 
 
 def semantic_dedup_cluster_kernel(
@@ -610,8 +587,6 @@ def semantic_dedup(
     threshold: float = 0.4,
     seed: int = 42,
     iters: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: np.ndarray | None = None,
     max_cluster: int | None = None,
 ) -> DataFrame:
@@ -659,14 +634,12 @@ def semantic_dedup(
     cent = (
         np.ascontiguousarray(centroids, dtype=np.float64)
         if centroids is not None
-        else train_ivf_centroids(
-            corpus, n_centroids, seed, iters, id_col=id_col, vec_col=vec_col
-        )
+        else train_ivf_centroids(corpus, n_centroids, seed, iters)
     )
     assign = make_ivf_assign_udf(cent)
     assigned = corpus.select(
-        F.col(id_col).cast("long").alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
+        F.col("vec_id").cast("long").alias("vec_id"),
+        F.col("embedding").alias("embedding"),
     ).withColumn("cluster", F.element_at(assign(F.col("embedding")), 1))
 
     if max_cluster is not None:
@@ -863,10 +836,7 @@ def semantic_prune(
                 f"md5 surrogate-id collision: {n} docs -> {nd} distinct "
                 f"surrogates; semantic_prune would alias colliding docs"
             )
-        cent = train_ivf_centroids(
-            emb, n_centroids, seed, iters, id_col="vec_id", vec_col="embedding",
-            n_rows=n,
-        )
+        cent = train_ivf_centroids(emb, n_centroids, seed, iters, n_rows=n)
         dd = semantic_dedup(
             emb, n_centroids=n_centroids, threshold=threshold, seed=seed,
             iters=iters, max_cluster=max_cluster, centroids=cent,
@@ -898,7 +868,8 @@ def semantic_prune(
 
 _SEM_PARAM_KEYS = ("dim", "n_centroids", "threshold", "centroids_md5")
 
-SEM_INDEX_SCHEMA = "id string, vec_id long, cluster int, embedding array<double>"
+#: bucket count commit_semantic_index gives a new index table
+_SEM_INDEX_BUCKETS = 16
 
 
 def centroids_digest(centroids: np.ndarray) -> str:
@@ -962,23 +933,17 @@ def check_semantic_params(spark, table, dim, n_centroids, threshold, cent_md5, c
         )
 
 
-def embed_and_assign(
-    docs: DataFrame,
-    centroids: np.ndarray,
-    text_col: str = "conv_text",
-    id_col: str = "conv_id",
-    dim: int = 64,
-) -> DataFrame:
-    """One Arrow scan: ``(id, vec_id, cluster, embedding)`` for a text batch
-    — hashing-trick embedding, md5 surrogate, nearest stored centroid (the
+def embed_and_assign(docs: DataFrame, centroids: np.ndarray, dim: int = 64) -> DataFrame:
+    """One Arrow scan: ``(id, vec_id, cluster, embedding)`` for a
+    ``(conv_id, conv_text)`` batch — hashing-trick embedding, md5 surrogate, nearest stored centroid (the
     codebook rides in the UDF closure; dirty rows assign to the -1 sentinel
     cluster, which incremental verdicts pass through KEPT and the index
     append skips)."""
     assign = make_ivf_assign_udf(np.ascontiguousarray(centroids, dtype=np.float64))
-    emb = make_hashing_embed_udf(dim)(F.col(text_col).cast("string"))
+    emb = make_hashing_embed_udf(dim)(F.col("conv_text").cast("string"))
     return docs.select(
-        F.col(id_col).cast("string").alias("id"),
-        md5_surrogate_id(F.col(id_col).cast("string")).alias("vec_id"),
+        F.col("conv_id").cast("string").alias("id"),
+        md5_surrogate_id(F.col("conv_id").cast("string")).alias("vec_id"),
         emb.alias("embedding"),
     ).withColumn("cluster", F.element_at(assign(F.col("embedding")), 1))
 
@@ -1066,7 +1031,6 @@ def commit_semantic_index(
     n_centroids: int,
     threshold: float,
     centroids: np.ndarray,
-    n_buckets: int = 16,
     mode: str = "overwrite",
 ) -> None:
     """Persist kept docs' ``(id, vec_id, cluster, embedding)`` as a
@@ -1086,19 +1050,13 @@ def commit_semantic_index(
     rows = kept_assigned.where(F.col("cluster") >= 0).select(
         "id", "vec_id", "cluster", "embedding"
     )
-    gio.write_bucketed(rows, table, path, key="cluster", n_buckets=n_buckets, mode=mode)
+    gio.write_bucketed(
+        rows, table, path, key="cluster", n_buckets=_SEM_INDEX_BUCKETS, mode=mode
+    )
     _write_semantic_params(spark, table, dim, n_centroids, threshold, cent_md5)
 
 
-def recluster_semantic_index(
-    spark,
-    table: str,
-    path: str,
-    n_centroids: int | None = None,
-    seed: int = 42,
-    iters: int = 10,
-    n_buckets: int | None = None,
-) -> np.ndarray:
+def recluster_semantic_index(spark, table: str, path: str, n_centroids: int | None = None) -> np.ndarray:
     """Table MAINTENANCE for the kept-embedding index — the semantic twin of
     ``dedup.recap_band_index``: (1) dedupe the at-least-once append rows
     (one row per vec_id; duplicates are byte-identical, so any survivor is
@@ -1143,12 +1101,9 @@ def recluster_semantic_index(
         )
     dim, threshold = int(stamp["dim"]), float(stamp["threshold"])
     k = int(n_centroids if n_centroids is not None else stamp["n_centroids"])
-    if n_buckets is None:
-        n_buckets = _table_bucket_count(spark, table) or 16
+    n_buckets = _table_bucket_count(spark, table) or _SEM_INDEX_BUCKETS
     keepers = spark.table(table).dropDuplicates(["vec_id"])
-    cent = train_ivf_centroids(
-        keepers, k, seed=seed, iters=iters, id_col="vec_id", vec_col="embedding"
-    )
+    cent = train_ivf_centroids(keepers, k)
     assign = make_ivf_assign_udf(cent)
     reassigned = keepers.select(
         "id", "vec_id", "embedding",

@@ -36,7 +36,6 @@ LANG_STOPWORDS: dict[str, list[str]] = {
            "na", "por", "mais", "dos", "ao", "como"],
 }
 
-_WORD_RE = "[A-Za-z0-9]+"
 _BPE_ISH_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
@@ -45,10 +44,11 @@ def lang_hits(text_col: str, words: list[str]) -> Column:
     return F.regexp_count(F.lower(F.col(text_col)), F.lit(pat))
 
 
-def lang_id(text_col: str = "text") -> Column:
-    """argmax over per-language stopword hit counts; ties broken by language
-    code order (deterministic, mirrored in the SQL oracle's CASE chain)."""
-    scores = [(lang, lang_hits(text_col, ws)) for lang, ws in sorted(LANG_STOPWORDS.items())]
+def lang_id() -> Column:
+    """argmax over per-language stopword hit counts in ``text``; ties broken
+    by language code order (deterministic, mirrored in the SQL oracle's CASE
+    chain)."""
+    scores = [(lang, lang_hits("text", ws)) for lang, ws in sorted(LANG_STOPWORDS.items())]
     best = scores[0][1]
     for _, s in scores[1:]:
         best = F.greatest(best, s)
@@ -58,11 +58,12 @@ def lang_id(text_col: str = "text") -> Column:
     return expr
 
 
-def lang_margin(text_col: str = "text") -> Column:
-    """Confidence margin: best hit count minus runner-up hit count (0 on a
-    tie or an all-zero row) — the cheap signal curation sweeps threshold on.
-    Pure Catalyst: one sorted array of the per-language counts."""
-    hits = [lang_hits(text_col, ws) for _, ws in sorted(LANG_STOPWORDS.items())]
+def lang_margin() -> Column:
+    """Confidence margin of :func:`lang_id`: best hit count minus runner-up
+    hit count (0 on a tie or an all-zero row) — the cheap signal curation
+    sweeps threshold on. Pure Catalyst: one sorted array of the per-language
+    counts."""
+    hits = [lang_hits("text", ws) for _, ws in sorted(LANG_STOPWORDS.items())]
     ranked = F.sort_array(F.array(*hits), asc=False)
     return (ranked[0] - ranked[1]).cast("long")
 
@@ -75,22 +76,24 @@ def token_count_ws(text_col: str = "text") -> Column:
     return F.size(F.split(F.trim(F.col(text_col)), r"\s+")).cast("long")
 
 
-def token_count_bpe_ish(text_col: str = "text") -> Column:
-    """Sub-word-ish token count: alpha runs, digit runs, single punctuation."""
-    return F.size(F.regexp_extract_all(F.col(text_col), F.lit(_BPE_ISH_RE), F.lit(0))).cast("long")
+def token_count_bpe_ish() -> Column:
+    """Sub-word-ish token count of ``text``: alpha runs, digit runs, single
+    punctuation."""
+    return F.size(F.regexp_extract_all(F.col("text"), F.lit(_BPE_ISH_RE), F.lit(0))).cast("long")
 
 
-def quality_features(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Length/punct/stopword-ratio quality features + a 0-100 score.
+def quality_features(df: DataFrame) -> DataFrame:
+    """Length/punct/stopword-ratio quality features + a 0-100 score per
+    ``(doc_id, text)`` row.
 
     Score mirrors the reference's penalty style (A3: 100 - 20*issues):
     -20 for <10 words, -20 for punct ratio > 0.2, -20 for stopword ratio
     < 0.01 (word salad), -20 for mean word length > 12 (garbled).
     """
-    n_words = token_count_ws(text_col)
-    n_chars = F.length(F.col(text_col)).cast("long")
-    n_punct = F.regexp_count(F.col(text_col), F.lit(r"[^A-Za-z0-9\s]"))
-    n_stop = lang_hits(text_col, LANG_STOPWORDS["en"])
+    n_words = token_count_ws("text")
+    n_chars = F.length(F.col("text")).cast("long")
+    n_punct = F.regexp_count(F.col("text"), F.lit(r"[^A-Za-z0-9\s]"))
+    n_stop = lang_hits("text", LANG_STOPWORDS["en"])
     punct_ratio = F.round(n_punct / F.greatest(n_chars, F.lit(1)), 6)
     stop_ratio = F.round(n_stop / F.greatest(n_words, F.lit(1)), 6)
     mean_wlen = F.round(n_chars / F.greatest(n_words, F.lit(1)), 6)
@@ -102,7 +105,7 @@ def quality_features(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
         - F.when(mean_wlen > 12, 20).otherwise(0)
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_words.alias("n_words"),
         n_chars.alias("n_chars_m"),
         punct_ratio.alias("punct_ratio"),
@@ -112,32 +115,31 @@ def quality_features(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     )
 
 
-def repetition_features(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Gopher-style repetition signals (Rae et al. 2021 §A1.1 flavor), pure
-    Catalyst: duplicate-line fraction, duplicate-word fraction, mean line
+def repetition_features(df: DataFrame) -> DataFrame:
+    """Gopher-style repetition signals (Rae et al. 2021 §A1.1 flavor) per
+    ``(doc_id, text)`` row, pure Catalyst: duplicate-line fraction, duplicate-word fraction, mean line
     length, fraction of purely-alphabetic words. The standard cheap filters
     for boilerplate/spam in web-scale corpora."""
-    lines = F.split(F.col(text_col), "\n")
+    lines = F.split(F.col("text"), "\n")
     n_lines = F.size(lines).cast("long")
     n_uniq_lines = F.size(F.array_distinct(lines)).cast("long")
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
+    words = F.split(F.trim(F.col("text")), r"\s+")
     n_words = F.size(words).cast("long")
     n_uniq_words = F.size(F.array_distinct(words)).cast("long")
     n_alpha_words = F.size(F.filter(words, lambda w: w.rlike("^[A-Za-z]+$"))).cast("long")
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_lines.alias("n_lines"),
         F.round((n_lines - n_uniq_lines) / F.greatest(n_lines, F.lit(1)), 6).alias("dup_line_frac"),
         F.round((n_words - n_uniq_words) / F.greatest(n_words, F.lit(1)), 6).alias("dup_word_frac"),
-        F.round(F.length(F.col(text_col)) / F.greatest(n_lines, F.lit(1)), 6).alias("mean_line_len"),
+        F.round(F.length(F.col("text")) / F.greatest(n_lines, F.lit(1)), 6).alias("mean_line_len"),
         F.round(n_alpha_words / F.greatest(n_words, F.lit(1)), 6).alias("alpha_word_frac"),
     )
 
 
-def quality_model_scores(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", salt: str = "qm"
-) -> DataFrame:
-    """Hashing-trick LINEAR MODEL INFERENCE, pure Catalyst — the shape of a
+def quality_model_scores(df: DataFrame) -> DataFrame:
+    """Hashing-trick LINEAR MODEL INFERENCE over ``(doc_id, text)``, pure
+    Catalyst — the shape of a
     fasttext-style quality classifier scoring a 100 TB corpus: each token
     maps to a weight via a hash (here md5-derived, engine-portable; a real
     deployment swaps in trained weights via a broadcast lookup with the same
@@ -147,11 +149,11 @@ def quality_model_scores(
     Zero shuffle, zero Python: one scan through whole-stage codegen.
     """
     tokens = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != F.lit("")
+        F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != F.lit("")
     )
 
     def w(t: Column) -> Column:
-        h = F.conv(F.substring(F.md5(F.concat(F.lit(f"{salt}:"), t)), 1, 8), 16, 10)
+        h = F.conv(F.substring(F.md5(F.concat(F.lit("qm:"), t)), 1, 8), 16, 10)
         return F.pmod(h.cast("long"), F.lit(2001)) - F.lit(1000)
 
     n = F.size(tokens)
@@ -162,23 +164,20 @@ def quality_model_scores(
     # cross-engine rounding gotcha. The raw quotient hashes identically.
     score = w_sum / (F.lit(1000.0) * F.greatest(n, F.lit(1)))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n.cast("long").alias("n_tokens"),
         w_sum.alias("w_sum"),
         score.alias("model_score"),
     )
 
 
-def quality_model_sql(table: str, text_expr: str = "text", id_col: str = "doc_id",
-                      salt: str = "qm") -> str:
+def quality_model_sql(table: str) -> str:
     """DuckDB twin of :func:`quality_model_scores` (generated, zero drift)."""
-    toks = f"list_filter(string_split_regex(lower({text_expr}), '\\s+'), t -> t != '')"
-    wexpr = (
-        f"(CAST(concat('0x', substr(md5('{salt}:' || t), 1, 8)) AS BIGINT) % 2001) - 1000"
-    )
+    toks = "list_filter(string_split_regex(lower(text), '\\s+'), t -> t != '')"
+    wexpr = "(CAST(concat('0x', substr(md5('qm:' || t), 1, 8)) AS BIGINT) % 2001) - 1000"
     return f"""
-WITH t AS (SELECT {id_col}, {toks} AS toks FROM {table})
-SELECT {id_col},
+WITH t AS (SELECT doc_id, {toks} AS toks FROM {table})
+SELECT doc_id,
        CAST(len(toks) AS BIGINT) AS n_tokens,
        CAST(coalesce(list_sum(list_transform(toks, t -> {wexpr})), 0) AS BIGINT) AS w_sum,
        CAST(coalesce(list_sum(list_transform(toks, t -> {wexpr})), 0) AS BIGINT)
@@ -187,10 +186,10 @@ FROM t
 """
 
 
-def fingerprint(text_col: str = "text") -> Column:
-    """Content fingerprint: md5 of casefolded, alnum-only text — robust to
-    whitespace/punct/case edits; the cheap first stage before MinHash."""
-    return F.md5(F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9]", ""))
+def fingerprint() -> Column:
+    """Content fingerprint: md5 of casefolded, alnum-only ``text`` — robust
+    to whitespace/punct/case edits; the cheap first stage before MinHash."""
+    return F.md5(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]", ""))
 
 
 # PII redaction — the standard pre-training scrub pass. Patterns are kept to
@@ -219,8 +218,8 @@ PII_FAMILIES: tuple[tuple[str, str, str], ...] = (
 )
 
 
-def pii_scrub(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Per-doc PII counts + md5 of the redacted text.
+def pii_scrub(df: DataFrame) -> DataFrame:
+    """Per-doc PII counts + md5 of the redacted text, over ``(doc_id, text)``.
 
     Counts are PROGRESSIVE — each family is counted on the text with all
     earlier families already replaced, then replaced itself — so the counts
@@ -228,8 +227,8 @@ def pii_scrub(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     counts as 1 email, 0 ips). Pure Catalyst: codegen'd regexp ops, zero
     Python; the DuckDB twin is generated from the same PII_FAMILIES table.
     """
-    cur = F.col(text_col)
-    cols: list[Column] = [F.col(id_col)]
+    cur = F.col("text")
+    cols: list[Column] = [F.col("doc_id")]
     for name, pat, placeholder in PII_FAMILIES:
         cols.append(F.regexp_count(cur, F.lit(pat)).cast("long").alias(f"n_{name}"))
         cur = F.regexp_replace(cur, pat, placeholder)
@@ -237,30 +236,30 @@ def pii_scrub(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     return df.select(*cols)
 
 
-def pii_redacted_text(text_col: str = "text") -> Column:
-    """The fully-redacted TEXT itself (same chained family order as
+def pii_redacted_text() -> Column:
+    """The fully-redacted ``conv_text`` (same chained family order as
     :func:`pii_scrub`) — what a corpus-build pipeline carries forward after
-    the scrub stage; pii_scrub's md5 is md5 of exactly this column."""
-    cur = F.col(text_col)
+    the scrub stage; pii_scrub's md5 is md5 of exactly this redaction."""
+    cur = F.col("conv_text")
     for _name, pat, placeholder in PII_FAMILIES:
         cur = F.regexp_replace(cur, pat, placeholder)
     return cur
 
 
-def pii_redacted_text_sql(text_expr: str = "text") -> str:
-    """DuckDB twin of :func:`pii_redacted_text`, generated from the same
-    family table (zero drift)."""
-    cur = text_expr
+def pii_redacted_text_sql() -> str:
+    """DuckDB twin of :func:`pii_redacted_text` over ``text``, generated
+    from the same family table (zero drift)."""
+    cur = "text"
     for _name, pat, placeholder in PII_FAMILIES:
         cur = f"regexp_replace({cur}, '{pat}', '{placeholder}', 'g')"
     return cur
 
 
-def pii_scrub_sql(table: str, text_expr: str = "text", id_col: str = "doc_id") -> str:
+def pii_scrub_sql(table: str) -> str:
     """The exact DuckDB twin of :func:`pii_scrub`, generated from the same
     family table so the patterns can never drift between engines."""
-    cur = text_expr
-    cols = [id_col]
+    cur = "text"
+    cols = ["doc_id"]
     for name, pat, placeholder in PII_FAMILIES:
         cols.append(f"len(regexp_extract_all({cur}, '{pat}')) AS n_{name}")
         cur = f"regexp_replace({cur}, '{pat}', '{placeholder}', 'g')"

@@ -556,28 +556,31 @@ def with_stable_order(df: DataFrame) -> DataFrame:
     return df.withColumn("rn", F.row_number().over(w))
 
 
+#: turns per phase-1 slab of the two-phase conversation assembly
+_BUCKET_TURNS = 1024
+
+
 def _two_phase_assemble(
     df: DataFrame,
-    bucket_turns: int,
-    text_col: str = "extracted_text",
     extra_cols: tuple = (),
     phase1_extra: tuple = (),
     phase2_extra: tuple = (),
 ) -> DataFrame:
-    """Shared skew-safe two-phase concat core: phase 1 groups by (conv_id,
-    slab) — mega-conversations spread over many tasks; each slab sorts its
-    turns locally (array_sort on struct orders by turn_idx first) and
+    """Shared skew-safe two-phase concat core over ``extracted_text``: phase
+    1 groups by (conv_id, slab of ``_BUCKET_TURNS`` turns) —
+    mega-conversations spread over many tasks; each slab sorts its turns
+    locally (array_sort on struct orders by turn_idx first) and
     concatenates; phase 2 merges the few slabs per conv. Extra aggregate
     columns ride the SAME two groupBys (one DAG, no second pass)."""
-    slab = F.floor(F.col("turn_idx") / bucket_turns).alias("slab")
+    slab = F.floor(F.col("turn_idx") / _BUCKET_TURNS).alias("slab")
     phase1 = (
-        df.select("conv_id", slab, "turn_idx", F.col(text_col), *extra_cols)
+        df.select("conv_id", slab, "turn_idx", F.col("extracted_text"), *extra_cols)
         .groupBy("conv_id", "slab")
         .agg(
             F.array_join(
                 F.transform(
-                    F.array_sort(F.collect_list(F.struct("turn_idx", text_col))),
-                    lambda s: s[text_col],
+                    F.array_sort(F.collect_list(F.struct("turn_idx", "extracted_text"))),
+                    lambda s: s["extracted_text"],
                 ),
                 "\n",
             ).alias("slab_text"),
@@ -598,16 +601,14 @@ def _two_phase_assemble(
     )
 
 
-def assemble_conversations(df: DataFrame, bucket_turns: int = 1024) -> DataFrame:
+def assemble_conversations(df: DataFrame) -> DataFrame:
     """Per-conversation document assembly, skew-safe two-phase concat.
     Output: one row per conv with turns joined by newline in turn order.
     """
-    return _two_phase_assemble(df, bucket_turns)
+    return _two_phase_assemble(df)
 
 
-def assemble_multimodal_conversations(
-    df: DataFrame, mode: str = "agent", bucket_turns: int = 1024
-) -> DataFrame:
+def assemble_multimodal_conversations(df: DataFrame) -> DataFrame:
     """One packed MULTIMODAL training record per conversation — what a
     trainer actually consumes: text turns contribute their extracted
     markdown, image turns contribute a compact typed ref
@@ -619,7 +620,7 @@ def assemble_multimodal_conversations(
     ``media_refs`` is the ';'-joined ``turn_idx:<media:...>`` list in turn
     order (empty string for text-only conversations). Unparseable media
     payloads fall back to the text route's apology record — exactly the
-    per-turn semantics of :func:`extract_turns`.
+    per-turn semantics of :func:`extract_turns` in ``agent`` mode.
 
     Scale shape: the ref UDF runs ONLY over the filtered media turns (the
     text majority never enters that Python stage); the (conv_id, turn_idx)
@@ -632,7 +633,7 @@ def assemble_multimodal_conversations(
         df.where(F.col("tool").isin(sorted(IMAGE_KINDS)))
         .select("conv_id", "turn_idx", mm.media_ref_udf(F.col("text")).alias("media_ref"))
     )
-    ex = extract_turns(df, mode=mode)
+    ex = extract_turns(df, mode="agent")
     merged = ex.join(refs, ["conv_id", "turn_idx"], "left")
     # ONE downstream DAG: text slabs AND the media inventory ride the same
     # two-phase groupBys, so the ref UDF / join never evaluate twice
@@ -648,7 +649,6 @@ def assemble_multimodal_conversations(
     media_sorted = F.array_sort(F.flatten(F.collect_list("slab_media")))
     return _two_phase_assemble(
         base,
-        bucket_turns,
         extra_cols=("mi",),
         phase1_extra=(F.collect_list("mi").alias("slab_media"),),
         phase2_extra=(

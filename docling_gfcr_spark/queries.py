@@ -463,7 +463,7 @@ def events_session_window(spark, sf_dir):
     from docling_gfcr_spark import streaming as streaming_mod
 
     e = _t(spark, sf_dir, "events")
-    return streaming_mod.sessionized_user_activity(e, gap="20 minutes")
+    return streaming_mod.sessionized_user_activity(e)
 
 
 SESSION_WINDOW_SQL = """
@@ -734,7 +734,7 @@ def dedup_clusters(spark, sf_dir):
     = DuckDB-computed pairs + pure-Python union-find — an end-to-end
     independent path."""
     d = _t(spark, sf_dir, "documents")
-    return dedup.dedup_cluster_members(d, n_hashes=32, bands=8, k=5, hash_fn="md5")
+    return dedup.dedup_cluster_members(d)
 
 
 def dedup_simhash(spark, sf_dir):
@@ -748,8 +748,8 @@ def lang_id_docs(spark, sf_dir):
     return d.select(
         "doc_id",
         "lang",
-        text_analysis.lang_id("text").alias("lang_pred"),
-        text_analysis.lang_margin("text").alias("margin"),
+        text_analysis.lang_id().alias("lang_pred"),
+        text_analysis.lang_margin().alias("margin"),
     )
 
 
@@ -802,7 +802,7 @@ def token_counts(spark, sf_dir):
     return d.select(
         "doc_id",
         text_analysis.token_count_ws("text").alias("n_ws_tokens"),
-        text_analysis.token_count_bpe_ish("text").alias("n_bpe_tokens"),
+        text_analysis.token_count_bpe_ish().alias("n_bpe_tokens"),
     )
 
 
@@ -826,7 +826,7 @@ def pack_training_sequences(spark, sf_dir):
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", text_analysis.token_count_ws("text").cast("long").alias("n_tokens")
     )
-    return pack_sequences(d, budget=4096, token_col="n_tokens", bucket_size=100).select(
+    return pack_sequences(d, budget=4096, bucket_size=100).select(
         "doc_id", "n_tokens", "tokens_before", "seq_bin"
     )
 
@@ -932,13 +932,13 @@ def _source_mixing_sql() -> str:
 
     return (
         "SELECT doc_id, source FROM documents WHERE "
-        + source_mixing_sql("documents", _MIX_WEIGHTS, _MIX_DEFAULT)
+        + source_mixing_sql(_MIX_WEIGHTS, _MIX_DEFAULT)
     )
 
 
 def doc_fingerprint(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    return d.select("doc_id", text_analysis.fingerprint("text").alias("fp"))
+    return d.select("doc_id", text_analysis.fingerprint().alias("fp"))
 
 
 FP_SQL = """
@@ -1012,8 +1012,8 @@ def corpus_token_budget(spark, sf_dir):
         sampling.deterministic_split(d)
         .groupBy("lang", "split")
         .agg(
-            F.sum(text_analysis.token_count_bpe_ish("text")).alias("total_tokens"),
-            F.round(F.avg(text_analysis.token_count_bpe_ish("text")), 4).alias("avg_tokens"),
+            F.sum(text_analysis.token_count_bpe_ish()).alias("total_tokens"),
+            F.round(F.avg(text_analysis.token_count_bpe_ish()), 4).alias("avg_tokens"),
         )
     )
 
@@ -1078,7 +1078,7 @@ def split_contamination(spark, sf_dir):
     from docling_gfcr_spark.operators import sampling
 
     d = sampling.deterministic_split(_t(spark, sf_dir, "documents")).withColumn(
-        "fp", text_analysis.fingerprint("text")
+        "fp", text_analysis.fingerprint()
     )
     train_fps = d.where(F.col("split") == "train").select("fp").distinct()
     ev = d.where(F.col("split") != "train")
@@ -1118,10 +1118,7 @@ def ngram_decontamination(spark, sf_dir):
     d = sampling.deterministic_split(_t(spark, sf_dir, "documents"))
     train = d.where(F.col("split") == "train")
     heldout = d.where(F.col("split") == "test")
-    # explicit broadcast: the test split is ~10% by construction — skip the
-    # auto strategy's heldout count job (the fallback has its own oracle-
-    # equality + plan tests)
-    return sampling.ngram_decontaminate(train, heldout, k=3, strategy="broadcast")
+    return sampling.ngram_decontaminate(train, heldout, k=3)
 
 
 NGRAM_DECON_SQL = f"""
@@ -1154,10 +1151,7 @@ def enhanced_docs(spark, sf_dir):
     from docling_gfcr_spark.operators import enhancer
 
     d = _t(spark, sf_dir, "documents")
-    out = enhancer.enhance_documents(
-        d, text_col="text", operation="enhance",
-        client_factory=enhancer.fake_client_factory,
-    )
+    out = enhancer.enhance_documents(d, client_factory=enhancer.fake_client_factory)
     return out.select(
         "doc_id", "enhance_applied", F.md5("enhanced_text").alias("enhanced_md5")
     )
@@ -1264,7 +1258,7 @@ def office_bytes_roundtrip(spark, sf_dir):
 def ann_cosine_topk(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
     probes = e.where(F.col("vec_id") % 100 == 0)
-    return similarity.cosine_topk(e, probes, k=5)
+    return similarity.cosine_topk(e, probes)
 
 
 ANN_SQL = """
@@ -1289,7 +1283,7 @@ def ann_ivf_topk(spark, sf_dir):
     reimplements the candidate machinery without Spark."""
     e = _t(spark, sf_dir, "embeddings")
     probes = e.where(F.col("vec_id") % 100 == 0)
-    return similarity.ivf_topk(e, probes, k=5, n_centroids=16, n_probe=4)
+    return similarity.ivf_topk(e, probes)
 
 
 def emb_neardup_exact(spark, sf_dir):
@@ -1318,7 +1312,7 @@ WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.
 def emb_neardup_lsh(spark, sf_dir):
     """LSH-bucketed near-dup (the 100 TB path; recall vs exact in pytest)."""
     e = _t(spark, sf_dir, "embeddings")
-    return similarity.embedding_neardup_pairs(e, threshold=0.4, n_planes=6, n_tables=8)
+    return similarity.embedding_neardup_pairs(e, n_planes=6, n_tables=8)
 
 
 def semantic_dedup(spark, sf_dir):
@@ -1947,7 +1941,7 @@ def multimodal_features(spark, sf_dir):
     """Real container-header decode over binary media columns (PNG/JPEG/WAV/
     MP4 parsed with kernels/media.py); value-checked against a fixture
     computed by the pure-Python local oracle (tools/make_fixtures.py)."""
-    media = mm.make_fake_media(spark, n=128, seed=42)
+    media = mm.make_fake_media(spark)
     feats = mm.extract_media_features(media)
     return feats.select(
         "media_id", "modality", "n_bytes", "sha_prefix", "format",
@@ -1963,8 +1957,8 @@ def multimodal_features(spark, sf_dir):
 def multimodal_transformed(spark, sf_dir):
     """transform_media (real PNG resize + WAV decimation) -> features;
     value-checked against the local pure-Python oracle fixture."""
-    media = mm.make_fake_media(spark, n=128, seed=42)
-    feats = mm.extract_media_features(mm.transform_media(media, max_side=20, frame_step=4))
+    media = mm.make_fake_media(spark)
+    feats = mm.extract_media_features(mm.transform_media(media))
     return feats.select(
         "media_id", "modality", "n_bytes", "sha_prefix", "format",
         "width", "height", "n_frames", "duration_s",
@@ -1978,7 +1972,7 @@ def multimodal_assembled_convs(spark, sf_dir):
     oracle replays the IDENTICAL generator + kernels single-threaded
     (tools/make_fixtures.py) — conv_text is value-checked via md5."""
     tdf = transcripts.make_transcripts(spark, 100, mean_turns=6, seed=42)
-    conv = pipeline.assemble_multimodal_conversations(tdf, mode="agent")
+    conv = pipeline.assemble_multimodal_conversations(tdf)
     return conv.select(
         "conv_id",
         "n_turns",

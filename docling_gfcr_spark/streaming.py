@@ -15,21 +15,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-def sessionized_user_activity(
-    events: DataFrame, gap: str = "20 minutes", watermark: str = "1 hour"
-) -> DataFrame:
-    """Session-window aggregation per user (merge events closer than ``gap``).
+def sessionized_user_activity(events: DataFrame) -> DataFrame:
+    """Session-window aggregation per user (merge events closer than a
+    20-minute gap; 1-hour watermark).
 
     One declarative plan serves BOTH engines of the stream==batch invariant:
     on a streaming DF the watermark bounds session state and append mode
     emits each session once it can no longer grow; on a batch DF the
     watermark is a no-op and the result is the full session table. Session
     semantics: [first_ts, last_ts + gap) with merge-on-overlap — a new
-    session starts iff the inter-event gap is >= ``gap``.
+    session starts iff the inter-event gap is >= 20 minutes.
     """
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts", "1 hour")
+        .groupBy(F.session_window("ts", "20 minutes").alias("w"), "user_id")
         .agg(F.count("*").cast("long").alias("n_events"))
         .select(
             "user_id",

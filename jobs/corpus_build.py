@@ -168,15 +168,13 @@ def _decontaminate_docs(
 def _scrub_docs(docs: DataFrame) -> DataFrame:
     from docling_gfcr_spark.operators import text_analysis
 
-    return docs.withColumn("conv_text", text_analysis.pii_redacted_text("conv_text"))
+    return docs.withColumn("conv_text", text_analysis.pii_redacted_text())
 
 
 def _mix_docs(docs: DataFrame, weights: dict[str, float] | None, default: float) -> DataFrame:
     from docling_gfcr_spark.operators import sampling
 
-    pred = sampling.source_mixing_predicate(
-        weights or {}, default, source_col="source", id_col="conv_id", salt="mix"
-    )
+    pred = sampling.source_mixing_predicate(weights or {}, default, id_col="conv_id")
     return docs.where(pred)
 
 
@@ -184,9 +182,7 @@ def _pack_docs(docs: DataFrame, budget: int) -> DataFrame:
     from docling_gfcr_spark.operators import sampling, text_analysis
 
     withtok = docs.withColumn("n_tokens", text_analysis.token_count_ws("conv_text"))
-    return sampling.pack_sequences(
-        withtok, budget=budget, id_col="conv_id", token_col="n_tokens", order_by="hash"
-    )
+    return sampling.pack_sequences(withtok, budget=budget, id_col="conv_id", order_by="hash")
 
 
 class _StageRunner:
@@ -334,7 +330,7 @@ def _run_head_stages(r: _StageRunner, input_df: DataFrame, n_parts, n_waves, mod
     if "dedup_exact" not in r.done:
         r.publish(
             "dedup_exact",
-            dedup.exact_dedup_keep(r.read("assemble"), text_col="conv_text", id_col="conv_id"),
+            dedup.exact_dedup_keep(r.read("assemble")),
         )
 
 
@@ -421,23 +417,18 @@ def run_corpus_build(
     # -- 4. near dedup: LSH pairs -> connected components -> keep reps -----
     if "dedup_near" not in r.done:
         docs = r.read("dedup_exact")
-        # pin the mined pairs: the empty-probe AND connected components both
-        # consume them, and the minhash/banding shuffles are this stage's
-        # dominant cost — without the checkpoint they would run twice
+        # connected_components reads the mined pairs once (its first step
+        # checkpoints the undirected edge set); no pairs converge in one
+        # round to no labels, which drops no doc
         pairs = dedup.minhash_lsh_pairs(
             docs, text_col="conv_text", id_col="conv_id",
             n_hashes=n_hashes, bands=bands, k=k, hash_fn=hash_fn,
-        ).localCheckpoint()
-        try:
-            if pairs.take(1):
-                comps = dedup.connected_components(pairs)
-                losers = comps.where(F.col("node") != F.col("comp")).select(
-                    F.col("node").alias("conv_id")
-                )
-                docs = docs.join(F.broadcast(losers), "conv_id", "left_anti")
-            r.publish("dedup_near", docs)
-        finally:
-            dedup._free_local_checkpoint(pairs)
+        )
+        comps = dedup.connected_components(pairs)
+        losers = comps.where(F.col("node") != F.col("comp")).select(
+            F.col("node").alias("conv_id")
+        )
+        r.publish("dedup_near", docs.join(F.broadcast(losers), "conv_id", "left_anti"))
 
     # -- 4b (optional). semantic near dedup: embed -> SemDeDup -> survivors -
     near_stage = "dedup_near"
@@ -682,9 +673,7 @@ def run_corpus_ingest(
                 )
             # sign once: embeddings feed the verdicts AND (filtered to
             # survivors) the index append
-            ea = similarity.embed_and_assign(
-                docs, cent, text_col="conv_text", id_col="conv_id", dim=dim
-            ).localCheckpoint()
+            ea = similarity.embed_and_assign(docs, cent, dim=dim).localCheckpoint()
             try:
                 verdicts = similarity.incremental_semantic_verdicts(
                     spark, sem_table, ea, threshold, dim, n_centroids, cent,

@@ -131,7 +131,7 @@ def test_media_parsers_total_on_truncations_of_valid_files():
     files = [
         media.build_png(12, 9, seed=3),
         media.build_jpeg(30, 20, seed=1),
-        media.build_wav(300, 8000, 2, seed=2),
+        media.build_wav(300, 8000, seed=2),
         media.build_mp4(2.5),
         media.build_tiff(7, 5),
         media.build_webp(9, 4),

@@ -212,7 +212,15 @@ def test_golden_reference_pdf_extracts():
     TrueType + Identity-H/ToUnicode fonts). Best-effort bar per the round-4
     verdict: nonempty text from >=50 pages, never raise."""
     blob = open(GOLDEN_PDF, "rb").read()
-    pages = pdf_doc.parse_pdf_pages(blob, strict=False)
+    # best effort: a page that fails to parse counts as empty here, where
+    # the pipeline's parse_pdf_pages would void the whole document
+    doc = pdf_doc.PdfDocument(blob)
+    pages = []
+    for page, inh in doc.pages():
+        try:
+            pages.append(doc.page_text(page, inh))
+        except ValueError:
+            pages.append("")
     assert len(pages) == 189
     nonempty = sum(1 for p in pages if p.strip())
     assert nonempty >= 150, f"only {nonempty} nonempty pages"
@@ -240,10 +248,9 @@ def test_golden_reference_pdf_extracts():
     assert pdf_binary.pdf_bytes_to_pages(blob) == pdf_doc.parse_pdf_pages(blob)
 
 
-def test_missing_kid_raises_strict_skips_lenient():
+def test_missing_kid_raises():
     """A /Kids entry referencing a nonexistent object is a broken graph:
-    strict (the pipeline route) -> error envelope; lenient (golden mode)
-    -> best-effort skip."""
+    an error envelope, never a silently shorter document."""
     blob = (
         b"%PDF-1.4\n"
         b"1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n"
@@ -252,8 +259,7 @@ def test_missing_kid_raises_strict_skips_lenient():
         + (b"4 0 obj << /Length 6 >>\nstream\n(a) Tj\nendstream endobj\n")
     )
     with pytest.raises(ValueError, match="missing page object 99"):
-        pdf_doc.parse_pdf_pages(blob, strict=True)
-    assert pdf_doc.parse_pdf_pages(blob, strict=False) == ["a"]
+        pdf_doc.parse_pdf_pages(blob)
 
 
 def test_bfrange_overflow_keeps_valueerror_contract():
@@ -285,7 +291,7 @@ def test_free_xref_entry_masks_older_object():
     assert d.get(4) is None  # freed, not the stale stream
     # and the page now extracts as empty rather than 'original'
     with pytest.raises(ValueError):
-        pdf_doc.parse_pdf_pages(blob, strict=True)  # missing content object
+        pdf_doc.parse_pdf_pages(blob)  # missing content object
 
 
 def test_form_xobject_text_rendered():
@@ -347,7 +353,7 @@ def test_form_render_budget_bounds_crafted_fanout():
         extra_objs=objs,
     )
     t0 = time.time()
-    pages = pdf_doc.parse_pdf_pages(blob, strict=False)
+    pages = pdf_doc.parse_pdf_pages(blob)
     assert time.time() - t0 < 30, "render budget failed to bound form fanout"
     assert len(pages) == 1
 
@@ -618,8 +624,8 @@ def _hybrid_pdf(content_ops: bytes, cmap_body: bytes) -> bytes:
 def test_hybrid_xrefstm_takes_precedence_over_free_tombstones():
     """The section's /XRefStm must be applied BEFORE its table entries:
     hybrids list ObjStm-compressed objects as free in the classic table, and
-    table-first order masked them to null (r5 ADVICE low) — strict parse
-    failed and lenient silently returned empty text."""
+    table-first order masked them to null (r5 ADVICE low) and the parse
+    failed."""
     blob = _hybrid_pdf(b"BT /F1 12 Tf <00410042> Tj ET", _CMAP)
     assert b"\nxref\n" in b"\n" + blob[-400:]  # startxref targets the table
-    assert pdf_doc.parse_pdf_pages(blob, strict=True) == ["ZÉ"]
+    assert pdf_doc.parse_pdf_pages(blob) == ["ZÉ"]

@@ -35,10 +35,10 @@ def test_exact_dedup(spark, planted_docs):
     groups = dedup.exact_dedup_groups(planted_docs).toPandas()
     assert len(groups) == 75  # 80 rows, 5 exact dups collapse
     assert (groups.n_dups > 1).sum() == 5
-    kept = dedup.exact_dedup_keep(planted_docs)
+    kept = dedup.exact_dedup_keep(planted_docs.toDF("conv_id", "conv_text"))
     assert kept.count() == 75
-    # keeper is the min doc_id of each group
-    assert kept.where(F.col("doc_id") >= 200).count() == 0
+    # keeper is the min id of each group
+    assert kept.where(F.col("conv_id") >= 200).count() == 0
 
 
 @pytest.mark.parametrize("hash_fn", ["md5", "fast"])
@@ -112,11 +112,13 @@ def test_ngram_jaccard_exact_values(spark, planted_docs):
         assert (j, 100 + j) in got and 0.7 < got[(j, 100 + j)] < 1.0
 
 
-def test_ngram_prefix_path_matches_naive(spark):
+def test_ngram_prefix_path_matches_naive(spark, monkeypatch):
     """r8: the prefix-filtered path (threshold > 0) must produce the EXACT
     row set (ids, n_common, jaccard floats) of the naive count-all-pairs
     shape across thresholds, corpora and caps — prefix filtering is a
-    provably lossless candidate prune, not an approximation."""
+    provably lossless candidate prune, not an approximation. Both shingle
+    dictionary shapes are covered: the driver-collected dictionary and, with
+    ``_DICT_MAX`` at 0, the broadcast-join fallback."""
     import pandas as pd
 
     from docling_gfcr_spark.operators.dedup import (
@@ -138,7 +140,15 @@ def test_ngram_prefix_path_matches_naive(spark):
         fast = _prefix_filtered_ngram_pairs(
             ensure_parallelism(d), "text", "doc_id", k, t, cap
         )
-        assert canon(fast) == canon(naive(d, k, t, cap)), (k, t, cap)
+        want = canon(naive(d, k, t, cap))
+        assert canon(fast) == want, (k, t, cap)
+        if k == 3:
+            with monkeypatch.context() as m:
+                m.setattr(dedup, "_DICT_MAX", 0)
+                joined = _prefix_filtered_ngram_pairs(
+                    ensure_parallelism(d), "text", "doc_id", k, t, cap
+                )
+                assert canon(joined) == want, "dictionary fallback"
 
 
 def test_ngram_jaccard_null_and_short_text_parity(spark):
@@ -210,7 +220,19 @@ def test_cc_propagation_equals_union_find_on_random_graphs(spark):
         assert prop == want, f"seed {seed}: {sorted(want ^ prop)}"
 
 
-def test_connected_components_raises_without_leaking_checkpoint(spark):
+def test_connected_components_empty_edges_converge_to_no_labels(spark):
+    """No pairs: the first round finds no change, so the result is an empty
+    label table, not an error, and no checkpoint outlives the call but the
+    returned labels."""
+    edges = spark.createDataFrame([], "id_a long, id_b long")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    comp = dedup.connected_components(edges)
+    assert comp.columns == ["node", "comp"] and comp.count() == 0
+    assert len(set(jsc.getPersistentRDDs().keys()) - before) <= 1
+
+
+def test_connected_components_raises_without_leaking_checkpoint(spark, monkeypatch):
     """A 12-edge path needs more than 3 rounds: the loop must raise AND free
     its last label checkpoint; with the default bound it closes the path.
     Compared as id sets: the context cleaner may free earlier tests' RDDs
@@ -218,8 +240,9 @@ def test_connected_components_raises_without_leaking_checkpoint(spark):
     edges = spark.createDataFrame([(i, i + 1) for i in range(12)], "id_a long, id_b long")
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keys())
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(edges, max_iter=3)
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="did not converge"):
+        m.setattr(dedup, "_CC_MAX_ITER", 3)
+        dedup.connected_components(edges)
     leaked = set(jsc.getPersistentRDDs().keys()) - before
     assert not leaked, leaked
     comp = dedup.connected_components(edges).toPandas()
@@ -229,7 +252,7 @@ def test_connected_components_raises_without_leaking_checkpoint(spark):
 def test_dedup_cluster_members_on_planted_dups(spark, planted_docs):
     """Exact dups + near dups of the same base doc land in ONE cluster keyed
     by the min doc id."""
-    members = dedup.dedup_cluster_members(planted_docs, k=3).toPandas()
+    members = dedup.dedup_cluster_members(planted_docs).toPandas()
     by_doc = members.set_index("doc_id")["cluster_id"]
     for j in range(5):  # doc j has near-dup 100+j and exact dup 200+j
         assert by_doc[j] == j and by_doc[100 + j] == j and by_doc[200 + j] == j
@@ -253,7 +276,7 @@ def test_simhash_pairs_find_neardups(spark, planted_docs):
 def test_cosine_topk_rank1_is_max_cos(spark):
     e = spark.read.parquet(f"{SF}/embeddings.parquet").cache()
     probes = e.where(F.col("vec_id") % 50 == 0)
-    exact = similarity.cosine_topk(e, probes, k=5).toPandas()
+    exact = similarity.cosine_topk(e, probes).toPandas()
     assert len(exact) > 0
     # exact ranking must be internally consistent: rank 1 has max cos
     top1 = exact[exact["rank"] == 1].set_index("probe_id")["cos"]
@@ -261,7 +284,7 @@ def test_cosine_topk_rank1_is_max_cos(spark):
         assert grp["cos"].max() == top1[pid]
 
 
-def _local_asof_oracle(left_rows, right_rows, allow_exact=False):
+def _local_asof_oracle(left_rows, right_rows):
     """Pure-Python nearest-predecessor oracle: for ties on ts the winner is
     the max under (ts, remaining columns) — the operator's pinned rule."""
     out = []
@@ -269,7 +292,7 @@ def _local_asof_oracle(left_rows, right_rows, allow_exact=False):
         cands = [
             (rts, rid)
             for (ruid, rts, rid) in right_rows
-            if ruid == uid and (rts <= lts if allow_exact else rts < lts)
+            if ruid == uid and rts < lts
         ]
         if cands:
             rts, rid = max(cands)
@@ -277,11 +300,12 @@ def _local_asof_oracle(left_rows, right_rows, allow_exact=False):
     return sorted(out)
 
 
-def test_asof_slab_path_matches_oracle_and_plain_path(spark):
+def test_asof_slab_path_matches_oracle_and_plain_path(spark, monkeypatch):
     """Hot key (one user owns ~20k right rows) through the slab pre-split:
     per-group memory is bounded by one slab, output identical to the
     unsplit path and to the local oracle — including cross-slab lookback
     over empty slabs."""
+    from docling_gfcr_spark.operators import asof
     from docling_gfcr_spark.operators.asof import asof_join
 
     rng = np.random.RandomState(3)
@@ -298,14 +322,13 @@ def test_asof_slab_path_matches_oracle_and_plain_path(spark):
         [(u, t, i) for u, t, i in right_rows], "user_id int, ts double, click long"
     ).repartition(8)
 
-    slab = asof_join(
-        left, right, on="ts", by="user_id", slab_seconds=1000.0, hot_key_threshold=5000
-    ).toPandas()  # threshold below the hot user's 20k rows -> slab path active
+    # threshold below the hot user's 20k rows -> slab path active
+    monkeypatch.setattr(asof, "_HOT_KEY_ROWS", 5000)
+    slab = asof_join(left, right, on="ts", by="user_id", slab_seconds=1000.0).toPandas()
     plain = asof_join(left, right, on="ts", by="user_id", slab_seconds=None).toPandas()
     # cold threshold: nothing hot -> single group per key, same output
-    cold = asof_join(
-        left, right, on="ts", by="user_id", slab_seconds=1000.0, hot_key_threshold=10**9
-    ).toPandas()
+    monkeypatch.setattr(asof, "_HOT_KEY_ROWS", 10**9)
+    cold = asof_join(left, right, on="ts", by="user_id", slab_seconds=1000.0).toPandas()
     want = _local_asof_oracle(left_rows, right_rows)
     for got in (slab, plain, cold):
         rows = sorted(
@@ -378,8 +401,8 @@ def test_zero_norm_vectors_never_rank(spark):
     )
     probes = e.where(F.col("vec_id") < 3)
     for fn in (
-        lambda: similarity.cosine_topk(e, probes, k=5),
-        lambda: similarity.ivf_topk(e, probes, k=5, n_centroids=4, n_probe=4),
+        lambda: similarity.cosine_topk(e, probes),
+        lambda: similarity.ivf_topk(e, probes),
     ):
         out = fn().toPandas()
         assert 999 not in set(out["neighbor_id"]), fn
@@ -389,8 +412,8 @@ def test_zero_norm_vectors_never_rank(spark):
 def test_ivf_topk_recall_vs_bruteforce(spark):
     e = spark.read.parquet(f"{SF}/embeddings.parquet").cache()
     probes = e.where(F.col("vec_id") % 50 == 0)
-    exact = similarity.cosine_topk(e, probes, k=5).toPandas()
-    approx = similarity.ivf_topk(e, probes, k=5, n_centroids=16, n_probe=4).toPandas()
+    exact = similarity.cosine_topk(e, probes).toPandas()
+    approx = similarity.ivf_topk(e, probes).toPandas()
     ex = set(map(tuple, exact[["probe_id", "neighbor_id"]].values.tolist()))
     ap = set(map(tuple, approx[["probe_id", "neighbor_id"]].values.tolist()))
     recall = len(ex & ap) / len(ex)
@@ -398,7 +421,7 @@ def test_ivf_topk_recall_vs_bruteforce(spark):
     # must still beat the 25% scan-fraction floor
     assert recall >= 0.3, f"IVF recall collapsed: {recall}"
     # deterministic: retraining + rerunning yields the identical result
-    again = similarity.ivf_topk(e, probes, k=5, n_centroids=16, n_probe=4).toPandas()
+    again = similarity.ivf_topk(e, probes).toPandas()
     import pandas as pd
 
     key = ["probe_id", "rank"]
@@ -437,12 +460,12 @@ def test_multimodal_real_decode_matches_local_oracle(spark):
     the pure-Python header parsers say about the same deterministic bytes —
     real dimensions/durations, not fakes."""
     feats = (
-        multimodal.extract_media_features(multimodal.make_fake_media(spark, n=48))
+        multimodal.extract_media_features(multimodal.make_fake_media(spark))
         .toPandas()
         .sort_values("media_id")
         .reset_index(drop=True)
     )
-    assert len(feats) == 48
+    assert len(feats) == 128
     assert set(feats.modality) == {"image", "audio", "video"}
     for r in feats.itertuples():
         modality, payload = multimodal.gen_media_payload(r.media_id)
@@ -464,30 +487,34 @@ def test_multimodal_real_decode_matches_local_oracle(spark):
 
 
 def test_transform_media_real_resize_and_decimation(spark):
-    """PNG payloads really shrink (re-decoded dims <= max_side, corner pixel
+    """PNG payloads really shrink (re-decoded dims <= 20, corner pixel
     preserved by nearest-neighbor); WAV payloads are really decimated
-    (frames/step, duration preserved); entropy-coded formats pass through."""
+    (every 4th frame, duration preserved); entropy-coded formats pass
+    through."""
     from docling_gfcr_spark.kernels import media as mk
 
-    src = multimodal.make_fake_media(spark, n=32)
+    src = multimodal.make_fake_media(spark)
     out = multimodal.extract_media_features(
-        multimodal.transform_media(src, max_side=12, frame_step=5)
+        multimodal.transform_media(src)
     ).toPandas().set_index("media_id")
-    for i in range(32):
+    shrunk = 0
+    for i in range(128):
         modality, payload = multimodal.gen_media_payload(i)
         r = out.loc[i]
         if payload.startswith(b"\x89PNG"):
             w0, h0 = mk.parse_png(payload)["width"], mk.parse_png(payload)["height"]
-            assert r.width <= 12 and r.height <= 12
-            if max(w0, h0) > 12:
+            assert r.width <= 20 and r.height <= 20
+            if max(w0, h0) > 20:
                 assert (r.width, r.height) != (w0, h0)
+                shrunk += 1
         elif payload[:4] == b"RIFF":
             orig = mk.parse_wav(payload)
-            assert r.n_frames == len(range(0, orig["n_frames"], 5))
-            assert abs(r.duration_s - orig["duration_s"]) <= 5 / orig["sample_rate"] * 5
+            assert r.n_frames == len(range(0, orig["n_frames"], 4))
+            assert abs(r.duration_s - orig["duration_s"]) <= 5 / orig["sample_rate"] * 4
         else:  # jpeg / mp4 / junk: untouched
             d = multimodal.decode_media(payload)
             assert (r.width, r.height, r.n_frames) == (d["width"], d["height"], d["n_frames"])
+    assert shrunk > 0  # the resize branch actually ran
 
 
 def test_mime_sniff():
@@ -506,29 +533,26 @@ def test_enhancer_stage(spark):
     from docling_gfcr_spark.operators import enhancer
 
     tdf = tr.make_transcripts(spark, 4, mean_turns=3, seed=6, parallelism=2)
-    ex = pl.extract_turns(tdf).select("conv_id", "turn_idx", "extracted_text")
+    ex = pl.extract_turns(tdf).select(
+        "conv_id", "turn_idx", F.col("extracted_text").alias("text")
+    )
     # default off: passthrough, marked not applied (reference convert.py:15-20)
     off = enhancer.enhance_documents(ex).toPandas()
     assert (~off.enhance_applied).all()
-    assert (off.enhanced_text == off.extracted_text).all()
+    assert (off.enhanced_text == off.text).all()
     # with injected fake client: applied, deterministic
     on = enhancer.enhance_documents(
         ex, client_factory=enhancer.fake_client_factory
     ).toPandas()
     assert on.enhance_applied.all()
-    a = enhancer.enhance_documents(
-        ex, operation="analyze", client_factory=enhancer.fake_client_factory
-    ).toPandas()
-    import json
-
-    parsed = a.enhanced_text.map(json.loads)
-    assert all("n_words" in p for p in parsed)
+    want = [enhancer.fake_client_factory()("enhance", t) for t in on.text]
+    assert on.enhanced_text.tolist() == want
 
 
 def test_enhancer_error_falls_back_to_original(spark):
     from docling_gfcr_spark.operators import enhancer
 
-    df = spark.createDataFrame([(1, "keep me")], "id long, extracted_text string")
+    df = spark.createDataFrame([(1, "keep me")], "id long, text string")
 
     def flaky_factory():
         def call(op, text):
@@ -699,8 +723,8 @@ def test_lang_id_classifies_real_sentences(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, want string, text string")
     out = (
-        df.select("doc_id", "want", ta.lang_id("text").alias("got"),
-                  ta.lang_margin("text").alias("margin"))
+        df.select("doc_id", "want", ta.lang_id().alias("got"),
+                  ta.lang_margin().alias("margin"))
         .toPandas().sort_values("doc_id")
     )
     assert out["got"].tolist() == out["want"].tolist()
@@ -755,11 +779,15 @@ def test_pack_sequences_rejects_unknown_order():
         pack_sequences(None, budget=10, order_by="nope")
 
 
-def test_ngram_decontaminate_shuffle_equals_broadcast(spark):
+def test_ngram_decontaminate_shuffle_equals_broadcast(spark, monkeypatch):
     """The non-broadcast fallback (heldout too big to ship to every executor)
-    must produce exactly the broadcast path's output; 'auto' picks broadcast
-    under the doc threshold and shuffle above it."""
+    must produce exactly the broadcast path's output; the heldout doc count
+    picks broadcast under ``_BROADCAST_MAX_DOCS`` and shuffle above it."""
+    from docling_gfcr_spark.operators import sampling
     from docling_gfcr_spark.operators.sampling import ngram_decontaminate
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
 
     rng = np.random.RandomState(5)
     vocab = "aa bb cc dd ee ff gg hh ii jj kk ll".split()
@@ -771,22 +799,20 @@ def test_ngram_decontaminate_shuffle_equals_broadcast(spark):
         [(i, " ".join(rng.choice(vocab, size=25))) for i in range(20)],
         "doc_id long, text string",
     )
-    kw = dict(k=4)
-    b = ngram_decontaminate(train, heldout, strategy="broadcast", **kw).toPandas()
-    s = ngram_decontaminate(train, heldout, strategy="shuffle", **kw).toPandas()
-    a_small = ngram_decontaminate(train, heldout, strategy="auto", **kw).toPandas()
-    a_big = ngram_decontaminate(train, heldout, strategy="auto", broadcast_max_docs=5, **kw).toPandas()
+    b_df = ngram_decontaminate(train, heldout, k=4)  # 20 heldout docs
+    assert "Join" not in plan(b_df)
+    monkeypatch.setattr(sampling, "_BROADCAST_MAX_DOCS", 5)
+    s_df = ngram_decontaminate(train, heldout, k=4)
+    assert "Join" in plan(s_df)
     key = "doc_id"
     import pandas as pd
 
-    for got in (s, a_small, a_big):
-        pd.testing.assert_frame_equal(
-            got.sort_values(key).reset_index(drop=True),
-            b.sort_values(key).reset_index(drop=True),
-        )
+    b = b_df.toPandas()
+    pd.testing.assert_frame_equal(
+        s_df.toPandas().sort_values(key).reset_index(drop=True),
+        b.sort_values(key).reset_index(drop=True),
+    )
     assert len(b) > 0  # the tiny vocab guarantees shared 4-grams
-    with pytest.raises(ValueError):
-        ngram_decontaminate(train, heldout, strategy="bogus")
 
 
 def test_cc_labels_self_loop_only_nodes(spark):
@@ -1111,7 +1137,9 @@ def test_pii_redacted_text_matches_scrub_md5(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     joined = text_analysis.pii_scrub(df).join(
-        df.select("doc_id", F.md5(text_analysis.pii_redacted_text("text")).alias("direct_md5")),
+        df.withColumnRenamed("text", "conv_text").select(
+            "doc_id", F.md5(text_analysis.pii_redacted_text()).alias("direct_md5")
+        ),
         "doc_id",
     )
     bad = joined.where(F.col("scrubbed_md5") != F.col("direct_md5")).count()
@@ -1554,7 +1582,7 @@ def test_incremental_semantic_verdicts_matches_batch_union(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def test_recluster_semantic_index_maintenance(spark, tmp_path):
+def test_recluster_semantic_index_maintenance(spark, tmp_path, monkeypatch):
     """Index maintenance (the semantic recap twin): dedupes at-least-once
     append rows to one per vec_id, retrains/reassigns with a new centroid
     count, preserves the bucket layout, restamps the new codebook digest,
@@ -1577,12 +1605,14 @@ def test_recluster_semantic_index_maintenance(spark, tmp_path):
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     try:
         ea = similarity.embed_and_assign(df, cent, dim=dim)
-        similarity.commit_semantic_index(spark, table, path, ea, dim, K, thr, cent, n_buckets=4)
-        # simulate the at-least-once crash window: append one keeper's rows twice
-        dup = ea.where(F.col("id") == "d03")
-        similarity.commit_semantic_index(
-            spark, table, path, dup, dim, K, thr, cent, n_buckets=4, mode="append"
-        )
+        with monkeypatch.context() as m:  # a non-default layout to preserve
+            m.setattr(similarity, "_SEM_INDEX_BUCKETS", 4)
+            similarity.commit_semantic_index(spark, table, path, ea, dim, K, thr, cent)
+            # simulate the at-least-once crash window: append one keeper's rows twice
+            dup = ea.where(F.col("id") == "d03")
+            similarity.commit_semantic_index(
+                spark, table, path, dup, dim, K, thr, cent, mode="append"
+            )
         spark.catalog.refreshTable(table)
         assert spark.table(table).count() == 21  # the duplicate row landed
 
@@ -1653,7 +1683,7 @@ def test_incremental_semantic_hot_cluster_cap_semantics(spark, tmp_path):
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     try:
         ea = similarity.embed_and_assign(df, cent, dim=dim)
-        similarity.commit_semantic_index(spark, table, path, ea, dim, 1, thr, cent, n_buckets=2)
+        similarity.commit_semantic_index(spark, table, path, ea, dim, 1, thr, cent)
 
         surr = {c: int(_h.md5(c.encode()).hexdigest()[:15], 16) for c, _ in rows}
         by_rank = sorted(rows, key=lambda r: surr[r[0]])

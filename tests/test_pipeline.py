@@ -104,8 +104,9 @@ def test_stable_order_and_rn(extracted):
     assert bad == 0  # turn_idx is dense from 0 in the generator
 
 
-def test_assemble_conversations_order(spark, extracted):
-    conv = pipeline.assemble_conversations(extracted, bucket_turns=4).toPandas()
+def test_assemble_conversations_order(spark, extracted, monkeypatch):
+    monkeypatch.setattr(pipeline, "_BUCKET_TURNS", 4)  # several slabs per conv
+    conv = pipeline.assemble_conversations(extracted).toPandas()
     assert len(conv) == N_CONV
     # reconstruct one conversation locally and compare exactly
     exp = local_oracle()
@@ -440,7 +441,7 @@ def test_extract_batch_equals_per_row_on_adversarial_input():
     check()
 
 
-def test_mega_conversation_assembly(spark):
+def test_mega_conversation_assembly(spark, monkeypatch):
     """A single 10k-turn conversation must assemble in exact order through
     the slab-based two-phase path (the skew case salting exists for)."""
     from pyspark.sql import functions as F
@@ -455,7 +456,8 @@ def test_mega_conversation_assembly(spark):
         F.current_timestamp().alias("ts"),
     ).repartition(16)  # deliberately scattered
     ex = pipeline.extract_turns(tdf, mode="cli")
-    conv = pipeline.assemble_conversations(ex, bucket_turns=256).toPandas()
+    monkeypatch.setattr(pipeline, "_BUCKET_TURNS", 256)
+    conv = pipeline.assemble_conversations(ex).toPandas()
     assert len(conv) == 1 and conv.iloc[0]["n_turns"] == n
     body = conv.iloc[0]["conv_text"].splitlines()
     assert body[0] == "turn 0 body" and body[-1] == f"turn {n - 1} body"
@@ -533,7 +535,7 @@ def test_assemble_multimodal_conversations(spark):
     )
     out = {
         r.conv_id: r
-        for r in pipeline.assemble_multimodal_conversations(df, mode="agent").collect()
+        for r in pipeline.assemble_multimodal_conversations(df).collect()
     }
     m = out["cM"]
     parts = m.conv_text.split("\n")

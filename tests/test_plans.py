@@ -129,7 +129,7 @@ def test_neardup_single_shuffle_no_candidate_join(spark):
     from docling_gfcr_spark.operators import similarity
 
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    p = plan_of(similarity.embedding_neardup_pairs(e, threshold=0.4, n_planes=4, n_tables=4))
+    p = plan_of(similarity.embedding_neardup_pairs(e, n_planes=4, n_tables=4))
     assert "SortMergeJoin" not in p and "BroadcastHashJoin" not in p
     assert "FlatMapGroupsInPandas" in p or "FlatMapGroupsInArrow" in p
     # exchanges: one for the groupBy, one for the post-threshold distinct
@@ -179,27 +179,30 @@ def test_topk_corpus_scan_has_no_join(spark):
 
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
     probes = e.where(F.col("vec_id") % 100 == 0)
-    p = plan_of(similarity.cosine_topk(e, probes, k=3))
+    p = plan_of(similarity.cosine_topk(e, probes))
     assert "MapInPandas" in p
     assert "Join" not in p and "CartesianProduct" not in p
     # only the window's exchange remains, over per-batch top-k survivors
     assert p.count("Exchange hashpartitioning") <= 1
 
 
-def test_decontamination_default_broadcasts_heldout(spark):
-    """Default/auto path: the heldout shingle set ships as a broadcast
-    variable into ONE fused probe kernel (r8 — map-side probe, zero corpus
-    shuffle before the tiny count agg, no join at all); the explicit
-    shuffle fallback must NOT broadcast — it hash-partitions both sides."""
+def test_decontamination_default_broadcasts_heldout(spark, monkeypatch):
+    """A heldout set under ``_BROADCAST_MAX_DOCS`` ships its shingle set as
+    a broadcast variable into ONE fused probe kernel (r8 — map-side probe,
+    zero corpus shuffle before the tiny count agg, no join at all); past the
+    bound the shuffle fallback must NOT broadcast — it hash-partitions both
+    sides."""
     from pyspark.sql import functions as F
 
+    from docling_gfcr_spark.operators import sampling
     from docling_gfcr_spark.operators.sampling import ngram_decontaminate
 
     d = spark.read.parquet(f"{SF}/documents.parquet")
     held = d.where(F.col("doc_id") % 50 == 0)
-    p_b = plan_of(ngram_decontaminate(d, held, k=8, strategy="broadcast"))
+    p_b = plan_of(ngram_decontaminate(d, held, k=8))
     assert "MapInPandas" in p_b and "Join" not in p_b
-    p_s = plan_of(ngram_decontaminate(d, held, k=8, strategy="shuffle"))
+    monkeypatch.setattr(sampling, "_BROADCAST_MAX_DOCS", 0)
+    p_s = plan_of(ngram_decontaminate(d, held, k=8))
     assert "BroadcastHashJoin" not in p_s
     assert "ShuffledHashJoin" in p_s or "SortMergeJoin" in p_s
 
@@ -397,7 +400,7 @@ def test_incremental_semantic_committed_side_exchange_free(spark, tmp_path):
         similarity.commit_semantic_index(
             spark, table, str(tmp_path / "idx"),
             similarity.embed_and_assign(df, cent, dim=dim),
-            dim, K, thr, cent, n_buckets=4,
+            dim, K, thr, cent,
         )
         new = spark.createDataFrame(
             [(f"n{i:03d}", " ".join(f"w{i}_{j}" for j in range(8))) for i in range(10)],

@@ -59,7 +59,7 @@ def test_session_window_stream_equals_batch(spark, tmp_path):
     ev.unionByName(sentinel).write.mode("overwrite").parquet(src)
 
     stream = spark.readStream.schema(EVENTS_SCHEMA).format("parquet").load(src)
-    agg = streaming.sessionized_user_activity(stream, gap="20 minutes", watermark="10 minutes")
+    agg = streaming.sessionized_user_activity(stream)
     q = agg.writeStream.outputMode("append").format("memory").queryName("sess_eq_t").start()
     q.processAllAvailable()
     q.stop()
@@ -69,7 +69,7 @@ def test_session_window_stream_equals_batch(spark, tmp_path):
         .sort_values(key).reset_index(drop=True)
     )
     want = (
-        streaming.sessionized_user_activity(ev, gap="20 minutes").toPandas()
+        streaming.sessionized_user_activity(ev).toPandas()
         .sort_values(key).reset_index(drop=True)
     )
     assert len(want) > 0

@@ -386,7 +386,7 @@ def compute_multimodal_features() -> pd.DataFrame:
 
     rows = []
     for i in range(128):
-        modality, payload = mm.gen_media_payload(i, seed=42)
+        modality, payload = mm.gen_media_payload(i)
         d = mm.decode_media(payload)
         rows.append(
             {
@@ -419,7 +419,7 @@ def compute_multimodal_transformed() -> pd.DataFrame:
 
     rows = []
     for i in range(128):
-        modality, payload = mm.gen_media_payload(i, seed=42)
+        modality, payload = mm.gen_media_payload(i)
         blob, _ = mm.transform_payload(payload, max_side=20, frame_step=4)
         d = mm.decode_media(blob)
         rows.append(
@@ -521,7 +521,7 @@ def _oracle_scrub_tokens(docs: dict) -> pd.DataFrame:
         ),
     )
     return con.execute(
-        f"WITH s AS (SELECT doc_id, source, {pii_redacted_text_sql('text')} AS text FROM docs) "
+        f"WITH s AS (SELECT doc_id, source, {pii_redacted_text_sql()} AS text FROM docs) "
         "SELECT doc_id, source, "
         "len(string_split_regex(trim(text), '\\s+')) AS n_tokens FROM s"
     ).fetchdf()

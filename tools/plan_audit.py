@@ -93,7 +93,7 @@ def main() -> None:
             "ONE hashpartitioning exchange (the (table,bucket) groupBy) into "
             "FlatMapGroupsInPandas; the threshold filter runs inside the "
             "kernel so only qualifying pairs reach the final distinct.",
-            similarity.embedding_neardup_pairs(emb, threshold=0.4, n_planes=4, n_tables=4),
+            similarity.embedding_neardup_pairs(emb, n_planes=4, n_tables=4),
         ),
         (
             "Exact cosine top-k (probe-kernel path, r8)",
@@ -102,7 +102,7 @@ def main() -> None:
             "oracle, per-batch top-k) + a window over the tiny survivor "
             "set. No join, no |corpus|x|probes| row blowup. Pinned by "
             "test_plans::test_topk_corpus_scan_has_no_join.",
-            similarity.cosine_topk(emb, emb.where(F.col("vec_id") % 100 == 0), k=5),
+            similarity.cosine_topk(emb, emb.where(F.col("vec_id") % 100 == 0)),
         ),
         (
             "IVF top-k (fused assign+score kernel, r8)",
@@ -110,8 +110,7 @@ def main() -> None:
             "bit-identical to the fixture oracle) and per-batch top-k are "
             "fused into ONE MapInPandas; the former cluster broadcast join "
             "and second Python boundary are gone.",
-            similarity.ivf_topk(emb, emb.where(F.col("vec_id") % 100 == 0),
-                                k=5, n_centroids=16, n_probe=4),
+            similarity.ivf_topk(emb, emb.where(F.col("vec_id") % 100 == 0)),
         ),
         (
             "Semantic dedup (SemDeDup greedy pruning)",
@@ -168,7 +167,7 @@ def main() -> None:
             __import__(
                 "docling_gfcr_spark.operators.sampling", fromlist=["ngram_decontaminate"]
             ).ngram_decontaminate(
-                docs, docs.where(F.col("doc_id") % 50 == 0), k=8, strategy="broadcast"
+                docs, docs.where(F.col("doc_id") % 50 == 0), k=8
             ),
         ),
         (
@@ -233,7 +232,7 @@ def main() -> None:
             "left join), and the text slabs AND media inventory aggregate in "
             "the same two-phase pass — the UDF/join sub-DAG is never "
             "evaluated twice.",
-            pipeline.assemble_multimodal_conversations(tdf, mode="agent"),
+            pipeline.assemble_multimodal_conversations(tdf),
         )
     )
 
