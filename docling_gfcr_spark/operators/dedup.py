@@ -6,8 +6,8 @@ Scale notes (the whole point):
 - n-gram Jaccard: exact pairwise similarity, but ONLY within candidate pairs
   that share a shingle (the explode/self-join trick). Guard against hot
   shingles (stop-shingle cap) or the self-join explodes quadratically.
-- MinHash+LSH: the 100 TB path. Signature = K independent min-hashes (Arrow
-  shingle scan + codegen'd salted hashes + partially-aggregated min, r8);
+- MinHash+LSH: the 100 TB path. Signature = K independent min-hashes, all
+  computed per doc in one Arrow kernel (no aggregate, no shuffle);
   banding turns near-dup search into an equi-join on (band, band_hash).
   Cost: one shuffle on band keys; no quadratic blowup.
 - SimHash: 64-bit fingerprint via a vectorized pandas UDF (bit packing isn't
@@ -49,6 +49,19 @@ def exact_dedup_keep(df: DataFrame) -> DataFrame:
     return df.join(keepers, "conv_id", "left_semi")
 
 
+def _doc_shingles(text: str, k: int) -> list[str]:
+    """The DISTINCT word-k-grams of one non-NULL ``text``, in first-occurrence
+    order — the shingling every Arrow kernel in this module shares.
+    ``str.split(" ")``/join match ``F.split``/``concat_ws`` exactly, including
+    empty tokens; a text of fewer than k words yields its one truncated tail
+    shingle, and ``""`` yields the ``""`` shingle. Each caller applies its own
+    NULL rule before calling."""
+    words = text.split(" ")
+    n = max(1, len(words) - (k - 1))
+    # dict preserves first-occurrence order == array_distinct
+    return list(dict.fromkeys(" ".join(words[i : i + k]) for i in range(n)))
+
+
 def exploded_shingles(
     df: DataFrame,
     text_col: str = "text",
@@ -63,9 +76,8 @@ def exploded_shingles(
     so ``explode(transform(...))`` drops the whole stage out of codegen onto
     the interpreted row path — measured 2.4x slower than this mapInPandas at
     sf0.1 (1.1s vs 2.7s for the exploded scan) with byte-identical shingles
-    (``str.split(" ")``/join match ``F.split``/``concat_ws`` exactly, incl.
-    empty tokens and the truncated tail shingle; NULL text explodes to
-    nothing, matching ``explode(NULL)``). ``sz`` is the per-doc distinct
+    (``_doc_shingles``; NULL text explodes to nothing, matching
+    ``explode(NULL)``). ``sz`` is the per-doc distinct
     shingle count riding along as payload. Peak python memory is one Arrow
     batch's shingles (~maxRecordsPerBatch x k words), independent of corpus
     size; the kernel is a narrow transform — no shuffle.
@@ -80,10 +92,7 @@ def exploded_shingles(
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
                 if text is None:  # parity: F.split(NULL) rows explode to nothing
                     continue
-                words = text.split(" ")
-                n = max(1, len(words) - (k - 1))
-                # dict preserves first-occurrence order == array_distinct
-                seen = dict.fromkeys(" ".join(words[i : i + k]) for i in range(n))
+                seen = _doc_shingles(text, k)
                 sz = len(seen)
                 ids.extend([doc_id] * sz)
                 if with_size:
@@ -485,47 +494,49 @@ def minhash_signatures(
     k: int = 5,
     hash_fn: str = "md5",
 ) -> DataFrame:
-    """K min-hashes per doc: Arrow shingle scan + codegen'd hash/min agg.
+    """K min-hashes per doc, ``(id, sig array<string>)``, from ONE narrow
+    Arrow ``mapInPandas`` kernel.
 
     hash_j(s) = md5(j || ':' || s); the signature element is the min over
-    shingles — a uniform order statistic. 'md5' is the only signature
-    family: engine-portable, the DuckDB oracle computes identical strings.
-    The 'fast' family never builds per-hash signatures (see
-    _fast_band_keys); any other ``hash_fn`` raises ValueError.
+    the doc's distinct shingles — a uniform order statistic. 'md5' is the
+    only signature family: engine-portable, the DuckDB oracle computes
+    identical strings. The 'fast' family never builds per-hash signatures
+    (see _fast_band_keys); any other ``hash_fn`` raises ValueError.
+
+    The kernel takes the minimum over raw 16-byte digests and emits its
+    lowercase hex; hex order equals byte order, so each element is the
+    string Spark's ``min(md5(...))`` would pick. NULL text hashes as the
+    ``""`` shingle, so a NULL-text doc collides with an empty one.
+
+    One output row per INPUT row: a duplicated id yields one signature per
+    row, as the DuckDB oracle does, not one merged signature. Every caller
+    passes a unique id (``doc_id``; ``conv_id`` after ``assemble``).
+
+    Plan shape: scan -> MapInPandas, with no aggregate and no hash shuffle.
+    Why not JVM columns: n_hashes ``min(md5(...))`` columns per shingle run
+    with no md5 intrinsic under the C1-only driver JIT, and ``min`` over
+    strings plans a SortAggregate behind an exchange. On the seed-1
+    perfbench ``corpus_build`` (4 cores) that form's MinHash pair mining
+    took 8.3 s against 3.4 s for this kernel.
     """
     if hash_fn != "md5":
         raise ValueError(f"unknown hash_fn {hash_fn!r}")
     df = ensure_parallelism(df)
-    # r8 restructure (measured at sf1.0, 40k docs / 2.0M distinct shingles,
-    # 32 cores): the former one-pass HOF form (transform each shingle to its
-    # n_hashes salted hashes, elementwise-min fold) ran the ENTIRE scan on
-    # the interpreted expression path (higher-order functions are
-    # CodegenFallback) — 10.4s of shingle construction alone, 12.1s with the
-    # hashes. The Arrow shingle kernel (exploded_shingles — byte-identical
-    # distinct shingles, shared with the ngram/decontamination family)
-    # produces the same rows in 1.95s; the n_hashes salted hashes then run
-    # as plain codegen'd columns + partially-aggregated min() (3.1s total).
-    # Signatures are bit-identical: min over the same distinct shingle set,
-    # same hash expressions, and the old fold's top sentinel was unreachable
-    # (every doc has >= 1 shingle). NULL text parity: the HOF form collapsed
-    # NULL to the "" shingle (split(NULL) -> NULL -> concat_ws -> ""), the
-    # kernel skips NULL rows — coalesce to '' reproduces the "" shingle.
-    # The groupBy shuffle is n_docs x n_hashes AFTER map-side partial min.
-    sh = exploded_shingles(
-        df.select(
-            F.col(id_col).alias("id"),
-            F.coalesce(F.col(text_col), F.lit("")).alias("_t"),
-        ),
-        "_t", "id", k, with_size=False,
-    )
-    hcols = [
-        F.min(F.md5(F.concat(F.lit(f"{j}:"), F.col("shingle")))).alias(f"_h{j}")
-        for j in range(n_hashes)
-    ]
-    return (
-        sh.groupBy("id")
-        .agg(*hcols)
-        .select("id", F.array(*[F.col(f"_h{j}") for j in range(n_hashes)]).alias("sig"))
+    id_type = df.schema[id_col].dataType.simpleString()
+    salts = [f"{j}:".encode() for j in range(n_hashes)]
+
+    def _kernel(batches):
+        for pdf in batches:
+            sigs = []
+            for text in pdf[text_col]:
+                sh = [s.encode() for s in _doc_shingles("" if text is None else text, k)]
+                sigs.append(
+                    [min([hashlib.md5(p + s).digest() for s in sh]).hex() for p in salts]
+                )
+            yield pd.DataFrame({"id": pdf[id_col], "sig": sigs})
+
+    return df.select(id_col, text_col).mapInPandas(
+        _kernel, f"id {id_type}, sig array<string>"
     )
 
 
@@ -562,20 +573,19 @@ def _fast_band_keys(
     """Band keys via ONE base hash per shingle + a vectorized salt-mix family,
     as a single Arrow ``mapInPandas`` kernel.
 
-    The JVM md5 family computes n_hashes independent hashes PER SHINGLE:
-    O(shingles x n_hashes) hash evaluations. The standard practical MinHash
-    (Broder's resemblance sketch as implemented by e.g. the datasketch
-    library) instead hashes each shingle ONCE and derives the K
-    permutations from it with a cheap mixing family; here hash_j(s) =
-    mix64(base(s) ^ salt_j) with base = pandas' deterministic siphash
-    (``pd.util.hash_array``, fixed key, C speed) and mix64 = splitmix64's
-    finalizer. Uniformity of each hash_j follows from the
+    The md5 family (minhash_signatures) computes n_hashes independent md5
+    digests PER SHINGLE: O(shingles x n_hashes) hash evaluations. The
+    standard practical MinHash (Broder's resemblance sketch as implemented
+    by e.g. the datasketch library) instead hashes each shingle ONCE and
+    derives the K permutations from it with a cheap mixing family; here
+    hash_j(s) = mix64(base(s) ^ salt_j) with base = pandas' deterministic
+    siphash (``pd.util.hash_array``, fixed key, C speed) and mix64 =
+    splitmix64's finalizer. Uniformity of each hash_j follows from the
     mixer's avalanche; the planted-neardup recall tests pin the quality.
 
-    Shingling is byte-identical to ``exploded_shingles`` (split(" ") incl.
-    empty tokens, truncated tail shingle, dict-distinct). NULL text emits
-    no band keys (such docs can never be near-dup candidates); empty text
-    emits the "" shingle, so all-empty docs still collide, matching
+    Shingles come from ``_doc_shingles``, as in the md5 family. NULL text
+    emits no band keys (such docs can never be near-dup candidates); empty
+    text emits the "" shingle, so all-empty docs still collide, matching
     exact-dup semantics. Band hash = mix64 fold over the band's signature
     rows. Keys are NOT comparable with md5 keys — the stamped ``hash_fn``
     on committed band tables (_check_signature_params) refuses cross-family
@@ -592,7 +602,7 @@ def _fast_band_keys(
     df = ensure_parallelism(df)
     id_type = df.schema[id_col].dataType.simpleString()
     rows = n_hashes // bands
-    n_used = bands * rows  # JVM parity: sig[b*rows+r] ignores trailing hashes
+    n_used = bands * rows  # md5 parity: sig[b*rows+r] ignores trailing hashes
     salts = _fast_salts(n_hashes)
     band_ids = np.arange(bands, dtype=np.int32)
     flush_at = _FAST_CHUNK_SHINGLES  # driver-side capture: tests shrink it
@@ -638,9 +648,7 @@ def _fast_band_keys(
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
                 if text is None:
                     continue
-                words = text.split(" ")
-                n = max(1, len(words) - (k - 1))
-                seen = dict.fromkeys(" ".join(words[i : i + k]) for i in range(n))
+                seen = _doc_shingles(text, k)
                 offsets.append(len(shingles))
                 shingles.extend(seen)
                 ids.append(doc_id)
@@ -892,12 +900,22 @@ def recap_band_index(spark, table: str, path: str, hot_band_cap: int) -> None:
 
 
 def _table_bucket_count(spark, table: str) -> int | None:
+    """The catalog's bucket count for ``table``; None when the table is
+    missing or not bucketed. Any other failure of the catalog read raises:
+    the maintenance rewrites must not guess a layout for a standing index."""
+    from pyspark.errors import AnalysisException
+
+    from docling_gfcr_spark.lineage import is_missing_input
+
     try:
-        for r in spark.sql(f"DESCRIBE EXTENDED {table}").collect():
-            if str(r.col_name).strip() == "Num Buckets":
-                return int(str(r.data_type).strip())
-    except Exception:
+        rows = spark.sql(f"DESCRIBE EXTENDED {table}").collect()
+    except AnalysisException as e:
+        if not is_missing_input(e):
+            raise
         return None
+    for r in rows:
+        if str(r.col_name).strip() == "Num Buckets":
+            return int(str(r.data_type).strip())
     return None
 
 

@@ -62,6 +62,39 @@ def test_minhash_rejects_unknown_family(spark, planted_docs):
         dedup.minhash_band_keys(planted_docs, hash_fn="xxhash64")
 
 
+def test_md5_signatures_bit_identical_to_per_doc_reference(spark):
+    """The md5 signature kernel equals an independent per-row hashlib
+    reference — min over the md5 HEX strings of 'j:' || shingle, the
+    string minimum Spark's ``min(md5(...))`` and DuckDB's ``list_min``
+    take — on NULL text (the "" shingle), "", fewer than k words,
+    repeated shingles, runs of spaces (empty tokens) and multi-byte UTF-8,
+    under any input partitioning. A duplicated id yields one row per input
+    row, each with its own text's signature."""
+    n_hashes, k = 16, 3
+    rows = [
+        (1, None), (2, ""), (3, "a b"), (4, "a b c d e f g"),
+        (5, "x y x y x y x y x y"), (6, "  two  spaces  "),
+        (7, "naïve café — 日本語 テキスト straße ümlaut"),
+        (8, "duplicate id first text"), (8, "duplicate id second text"),
+    ]
+    d = spark.createDataFrame(rows, "doc_id long, text string")
+
+    def ref_sig(text):
+        words = ("" if text is None else text).split(" ")
+        shingles = {" ".join(words[i : i + k]) for i in range(max(1, len(words) - k + 1))}
+        return tuple(
+            min(hashlib.md5(f"{j}:{s}".encode("utf-8")).hexdigest() for s in shingles)
+            for j in range(n_hashes)
+        )
+
+    want = sorted((i, ref_sig(t)) for i, t in rows)
+    for inp in (d, d.repartition(7)):
+        got = dedup.minhash_signatures(inp, n_hashes=n_hashes, k=k).collect()
+        assert sorted((r.id, tuple(r.sig)) for r in got) == want
+    # the NULL text hashes as the "" shingle, not as a missing row
+    assert dict(want)[1] == dict(want)[2]
+
+
 def test_fast_minhash_corner_semantics_and_partition_invariance(spark):
     """Corner parity with the JVM families: NULL text emits no band keys,
     empty text emits the "" shingle (all-empty docs collide, matching exact
@@ -1038,6 +1071,25 @@ def test_recap_band_index_tightens_append_drift(spark, tmp_path):
     ids = sorted(int(r.id) for r in spark.table(table).select("id").distinct().collect())
     assert ids == [0, 1, 2]
     spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_table_bucket_count_raises_on_failing_catalog_read(spark, monkeypatch):
+    """Only a missing table reads as "no bucket layout". Any other failure
+    of the DESCRIBE EXTENDED read propagates, so the maintenance rewrites
+    never re-bucket a standing index with the default count."""
+    assert dedup._table_bucket_count(spark, "no_such_bucketed_table") is None
+    real_sql = spark.sql
+
+    def failing_describe(query, *args, **kwargs):
+        if query.startswith("DESCRIBE EXTENDED"):
+            raise RuntimeError("metastore read failed")
+        return real_sql(query, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "sql", failing_describe)
+    with pytest.raises(RuntimeError, match="metastore read failed"):
+        dedup._table_bucket_count(spark, "any_table")
+    with pytest.raises(RuntimeError, match="metastore read failed"):
+        dedup.recap_band_index(spark, "any_table", "/nonexistent/bands", hot_band_cap=3)
 
 
 def test_recap_band_index_removes_duplicate_rows(spark, tmp_path):

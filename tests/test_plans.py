@@ -94,18 +94,24 @@ def test_assembly_two_phase_shuffles(spark):
 
 
 def test_minhash_signature_shape(spark):
-    """r8 shape: ONE Arrow shingle kernel (MapInPandas, shared with the
-    ngram family) feeding codegen'd salted hashes + a partially-aggregated
-    min — never a per-row Python UDF, never the interpreted HOF fold
-    (measured 12.1s vs 3.1s at sf1.0 for the band-key scan)."""
+    """md5 signatures are ONE narrow Arrow kernel: exactly one MapInPandas,
+    no aggregate, no per-row Python UDF, and no exchange — apart from the
+    round-robin fan-out ``ensure_parallelism`` gives a single-split input."""
     from docling_gfcr_spark.operators import dedup
 
-    d = spark.read.parquet(f"{SF}/documents.parquet")
-    p = plan_of(dedup.minhash_signatures(d, n_hashes=8))
-    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
-    assert p.count("MapInPandas") == 1
-    # md5 (string min) falls back to SortAggregate
-    assert "Aggregate" in p
+    n_par = spark.sparkContext.defaultParallelism
+    split = spark.read.parquet(f"{SF}/documents.parquet")
+    fanned = spark.range(0, 64, 1, n_par).selectExpr(
+        "id AS doc_id", "concat('doc ', id, ' a b c d e') AS text"
+    )
+    for d, n_fanout in ((split, 1), (fanned, 0)):
+        p = plan_of(dedup.minhash_signatures(d, n_hashes=8))
+        assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
+        assert p.count("MapInPandas") == 1
+        assert "Aggregate" not in p
+        exchanges = [l for l in p.splitlines() if "Exchange" in l]
+        assert len(exchanges) == n_fanout, exchanges
+        assert all("RoundRobinPartitioning" in l for l in exchanges), exchanges
 
 
 def test_fast_minhash_band_keys_single_map_no_shuffle(spark):

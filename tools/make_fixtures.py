@@ -319,7 +319,7 @@ def compute_ann_ivf_topk() -> pd.DataFrame:
     plain numpy loops — no joins, no UDFs, no Spark."""
     import duckdb
 
-    from docling_gfcr_spark.operators.similarity import spherical_kmeans
+    from docling_gfcr_spark.operators.similarity import _IVF_SAMPLE_LIMIT, spherical_kmeans
 
     k, n_centroids, n_probe, seed, iters = 5, 16, 4, 42, 10
     emb = duckdb.connect().execute(
@@ -332,7 +332,7 @@ def compute_ann_ivf_topk() -> pd.DataFrame:
     # rows sorted by id) — mirror the exact rule here
     import hashlib as _hashlib
 
-    sample_limit = 20_000
+    sample_limit = _IVF_SAMPLE_LIMIT
     fraction = min(1.0, 1.2 * sample_limit / max(len(ids), 1))
     if fraction < 1.0:
         thr = format(min(int(fraction * 2**32), 2**32 - 1), "08x")
@@ -1081,6 +1081,7 @@ def compute_semantic_dedup() -> pd.DataFrame:
     import hashlib as _hashlib
 
     from docling_gfcr_spark.operators.similarity import (
+        _IVF_SAMPLE_LIMIT,
         semantic_dedup_cluster_kernel,
         spherical_kmeans,
     )
@@ -1091,7 +1092,7 @@ def compute_semantic_dedup() -> pd.DataFrame:
     ).fetchdf()
     ids = emb["vec_id"].to_numpy(dtype=np.int64)
     m = np.asarray([np.asarray(v, dtype=np.float64) for v in emb["embedding"]])
-    sample_limit = 20_000
+    sample_limit = _IVF_SAMPLE_LIMIT
     fraction = min(1.0, 1.2 * sample_limit / max(len(ids), 1))
     if fraction < 1.0:
         thr = format(min(int(fraction * 2**32), 2**32 - 1), "08x")

@@ -80,12 +80,11 @@ def main() -> None:
         ),
         (
             "MinHash LSH pairs",
-            "Signatures (r8): ONE Arrow shingle kernel feeding codegen'd "
-            "salted hashes + partially-aggregated min — the O(shingles x "
-            "n_hashes) hash work is whole-stage-codegen, never interpreted "
-            "HOFs, never a per-row UDF. Band buckets are one groupBy "
-            "shuffle; pair enumeration is the hybrid flatten/streaming-"
-            "generate split — no joins.",
+            "Signatures: ONE narrow Arrow kernel (MapInPandas) hashes each "
+            "doc's distinct shingles and takes the per-hash min digest — no "
+            "aggregate and no shuffle before the band keys, never a per-row "
+            "UDF. Band buckets are one groupBy shuffle; pair enumeration is "
+            "the hybrid flatten/streaming-generate split — no joins.",
             dedup.minhash_lsh_pairs(docs, n_hashes=8, bands=4, k=3),
         ),
         (
