@@ -22,3 +22,7 @@ Layout
 """
 
 __version__ = "0.1.0"
+
+# first thing in every Python worker that runs a package UDF: stops each task
+# re-reading every zip on the worker's sys.path (see zipcache)
+from docling_gfcr_spark import zipcache  # noqa: E402,F401

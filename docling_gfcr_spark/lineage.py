@@ -312,4 +312,4 @@ def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{out_dir}/lineage")
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(f"{out_dir}/lineage")

@@ -320,10 +320,19 @@ def _run_head_stages(r: _StageRunner, input_df: DataFrame, n_parts, n_waves, mod
             n_parts=n_parts, n_waves=n_waves, mode=mode, run_id=r.run_id,
             input_fingerprint=r.fingerprint,
         )
-        # the one stage whose n_out is a re-read: parts committed by an
-        # earlier, crashed run count too, and only the files hold them all
-        n_out = lineage.read_extracted(r.spark, stage_dir(r.out_dir, "extract")).count()
-        r.committed("extract", n_out)
+        # parts committed by an earlier, crashed run count too: sum the
+        # n_turns each part's latest committed lineage row counted from its
+        # files at commit (a schema'd read of a few small files, no re-read)
+        rows = (
+            lineage.read_lineage(r.spark, stage_dir(r.out_dir, "extract"))
+            .where(F.col("status") == "committed")
+            .select("part_id", "n_turns", "committed_at")
+            .collect()
+        )
+        n_turns = {
+            row.part_id: row.n_turns for row in sorted(rows, key=lambda row: row.committed_at)
+        }
+        r.committed("extract", sum(n_turns.values()))
     if "assemble" not in r.done:
         ex = lineage.read_extracted(r.spark, stage_dir(r.out_dir, "extract")).drop("part_id")
         r.publish("assemble", _assemble_with_source(ex))
