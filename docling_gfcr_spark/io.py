@@ -11,6 +11,13 @@
   exchange-free).
 - ``local_frame``: the one way the driver builds a small frame it will
   write (lineage rows, identity stamps, codebooks).
+- stamps: every resumable artifact records the parameters it was built
+  with, and a later run with different ones is refused.
+  ``check_stamp`` is the one comparison; ``read_table_stamp`` /
+  ``write_table_stamp`` keep a stamp as ``<prefix>.<key>`` catalog table
+  properties (the band and semantic indexes); ``read_dir_stamp`` /
+  ``write_dir_stamp`` keep it as a one-row parquet dir (a job output's
+  ``batch_identity`` and ``input_identity``).
 """
 
 from __future__ import annotations
@@ -85,3 +92,61 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFram
     struct = StructType.fromDDL(schema)
     cols = [list(c) for c in zip(*rows)]
     return spark.createDataFrame(pa.table(dict(zip(struct.names, cols))), struct)
+
+
+def check_stamp(have: dict[str, str | None], want: dict[str, str], refusal: str) -> list[str]:
+    """Compare an artifact's stamp ``have`` with this run's values ``want``.
+
+    A key stamped with a different value raises ``ValueError``: ``refusal``
+    (why the artifact cannot be reused) followed by the key and both
+    values. Returns the keys of ``want`` the stamp lacks (``None`` counts as
+    lacking), so the caller can adopt an artifact written before the key
+    existed by stamping it."""
+    for key, value in want.items():
+        if have.get(key) is not None and have[key] != value:
+            raise ValueError(f"{refusal} (stamped {key}={have[key]!r}, this run {key}={value!r})")
+    return [key for key in want if have.get(key) is None]
+
+
+def read_table_stamp(spark: SparkSession, table: str, prefix: str) -> dict[str, str]:
+    """The ``<prefix>.<key>`` properties of ``table`` as ``{key: value}``.
+
+    Callers guard table existence. A failing properties read raises: a
+    swallowed metastore error would switch the guard off for the very run
+    it exists to refuse. A table written before stamps existed simply has
+    no such keys."""
+    start = f"{prefix}."
+    return {
+        str(r.key)[len(start):]: str(r.value)
+        for r in spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
+        if str(r.key).startswith(start)
+    }
+
+
+def write_table_stamp(spark: SparkSession, table: str, prefix: str, stamp: dict[str, str]) -> None:
+    props = ", ".join(f"'{prefix}.{key}'='{value}'" for key, value in stamp.items())
+    spark.sql(f"ALTER TABLE {table} SET TBLPROPERTIES ({props})")
+
+
+def read_dir_stamp(spark: SparkSession, path: str, keys: tuple[str, ...]) -> dict[str, str | None]:
+    """The one-row stamp under ``path``: ``{}`` when the dir is missing,
+    ``None`` for a key whose column an older stamp lacks. Read with an
+    all-string schema, so no schema-inference job runs. Only a missing
+    path means "not stamped"; any other read failure raises."""
+    from pyspark.errors import AnalysisException
+
+    from docling_gfcr_spark.lineage import is_missing_input
+
+    schema = ", ".join(f"{key} string" for key in keys)
+    try:
+        rows = spark.read.schema(schema).parquet(path).collect()
+    except AnalysisException as e:
+        if not is_missing_input(e):
+            raise
+        return {}
+    return rows[0].asDict() if rows else {}
+
+
+def write_dir_stamp(spark: SparkSession, path: str, stamp: dict[str, str]) -> None:
+    schema = ", ".join(f"{key} string" for key in stamp)
+    local_frame(spark, [tuple(stamp.values())], schema).write.mode("overwrite").parquet(path)

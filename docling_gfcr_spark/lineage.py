@@ -13,6 +13,12 @@ sizes. Parts are processed in waves; each wave
 2. then appends one lineage row per part ``(run_id, part_id, n_parts, status,
    n_turns, nodes_classified, spans_emitted, parse_failures, committed_at)``.
 
+A part's metrics are counted from the files the wave wrote, read back with
+the written frame's schema (no schema-inference job): the per-part
+aggregate is collected to the driver (one row per part, at most the wave's
+part count) and the wave's lineage rows, zeros for a part that holds no
+rows, are built there as an Arrow-backed local frame.
+
 A crash between (1) and (2) leaves data without lineage; resume reprocesses
 that part and the overwrite makes it idempotent. On restart, committed parts
 are excluded via a broadcast left-anti join — no reprocessing. ``n_parts`` is
@@ -43,6 +49,7 @@ import uuid
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: AnalysisException conditions meaning "the input does not exist yet" —
 #: the ONLY failures that may degrade to first-run/empty semantics. Anything
@@ -82,8 +89,6 @@ LINEAGE_SCHEMA = (
     "nodes_classified long, spans_emitted long, parse_failures long, errors long, "
     "committed_at double"
 )
-_LINEAGE_COLS = [f.split(" ")[0] for f in LINEAGE_SCHEMA.split(", ")]
-INPUT_IDENTITY_SCHEMA = "fingerprint string"
 
 
 def batch_fingerprint(input_df: DataFrame) -> str:
@@ -125,8 +130,8 @@ class ParquetStorage:
     def append_lineage(self, df: DataFrame) -> None:
         df.coalesce(1).write.mode("append").parquet(self.lineage_dir)
 
-    def read_data(self) -> DataFrame:
-        return self.spark.read.parquet(self.data_dir)
+    def read_data(self, schema: StructType) -> DataFrame:
+        return self.spark.read.schema(schema).parquet(self.data_dir)
 
     def read_lineage(self) -> DataFrame | None:
         try:
@@ -140,20 +145,10 @@ class ParquetStorage:
             return None
 
     def read_input_fingerprint(self) -> str | None:
-        try:
-            rows = self.spark.read.schema(INPUT_IDENTITY_SCHEMA).parquet(self.identity_dir).collect()
-        except AnalysisException as e:
-            if not is_missing_input(e):
-                raise
-            return None
-        return rows[0].fingerprint if rows else None
+        return io.read_dir_stamp(self.spark, self.identity_dir, ("fingerprint",)).get("fingerprint")
 
     def stamp_input_fingerprint(self, fingerprint: str) -> None:
-        (
-            io.local_frame(self.spark, [(fingerprint,)], INPUT_IDENTITY_SCHEMA)
-            .write.mode("overwrite")
-            .parquet(self.identity_dir)
-        )
+        io.write_dir_stamp(self.spark, self.identity_dir, {"fingerprint": fingerprint})
 
 
 def with_part_id(df: DataFrame, n_parts: int) -> DataFrame:
@@ -225,16 +220,14 @@ def run_extraction_job(
     storage = storage or ParquetStorage(spark, out_dir)
 
     fingerprint = input_fingerprint or batch_fingerprint(input_df)
-    stamped = storage.read_input_fingerprint()
-    if stamped is not None and stamped != fingerprint:
-        raise ValueError(
-            f"output dir {out_dir!r} holds the extraction of a different input "
-            f"(stamped fingerprint {stamped}, this input {fingerprint}) — "
-            "resuming would skip every committed part and write none of this "
-            "input's rows. Use a fresh output directory per input."
-        )
+    unstamped = io.check_stamp(
+        {"fingerprint": storage.read_input_fingerprint()}, {"fingerprint": fingerprint},
+        f"output dir {out_dir!r} holds the extraction of a different input — resuming "
+        "would skip every committed part and write none of this input's rows. Use a "
+        "fresh output directory per input",
+    )
     done = committed_parts(storage, n_parts)
-    if stamped is None:
+    if unstamped:
         storage.stamp_input_fingerprint(fingerprint)
     todo = [p for p in range(n_parts) if p not in done]
     src = with_part_id(input_df, n_parts)
@@ -251,51 +244,35 @@ def run_extraction_job(
         storage.overwrite_data_partitions(extracted.repartition(max(len(wave), 1), "part_id"))
         # a wave whose parts hold NO rows (sparse corpus vs large n_parts)
         # writes nothing — on the very first such wave the data dir does not
-        # exist yet, so the metrics read must degrade to all-zero rows. ONLY
-        # the missing-path/table case may degrade: any other read failure
-        # (permissions, corrupt footer) must fail the wave, not commit it
-        # with fabricated all-zero metrics
+        # exist yet, so every part's metrics are zero. ONLY the missing-path
+        # case may degrade: any other read failure (permissions, corrupt
+        # footer) must fail the wave, not commit it with fabricated metrics
         try:
-            data = storage.read_data()
+            data = storage.read_data(extracted.schema)
         except AnalysisException as e:
-            # missing dir -> PATH_NOT_FOUND; dir created but no files yet ->
-            # UNABLE_TO_INFER_SCHEMA
             if not is_missing_input(e):
                 raise
             data = None
-        agg = (
-            data.where(F.col("part_id").isin(wave))
+        per_part = {} if data is None else {
+            r[0]: tuple(v or 0 for v in r[1:])
+            for r in data.where(F.col("part_id").isin(wave))
             .groupBy("part_id")
             .agg(
-                F.count("*").alias("n_turns"),
-                F.sum("n_nodes").alias("nodes_classified"),
-                F.sum("n_spans").alias("spans_emitted"),
-                F.sum(F.col("parse_failed").cast("long")).alias("parse_failures"),
-                F.sum((~F.col("success")).cast("long")).alias("errors"),
+                F.count("*"),
+                F.sum("n_nodes"),
+                F.sum("n_spans"),
+                F.sum(F.col("parse_failed").cast("long")),
+                F.sum((~F.col("success")).cast("long")),
             )
-            if data is not None
-            else None
-        )
+            .collect()
+        }
         # empty parts must still commit (else they would be retried forever)
-        wave_parts = io.local_frame(spark, [(p,) for p in wave], "part_id int")
-        if agg is None:
-            wave_parts = (
-                wave_parts.withColumn("n_turns", F.lit(0).cast("long"))
-                .withColumn("nodes_classified", F.lit(0).cast("long"))
-                .withColumn("spans_emitted", F.lit(0).cast("long"))
-                .withColumn("parse_failures", F.lit(0).cast("long"))
-                .withColumn("errors", F.lit(0).cast("long"))
-            )
-        metrics = (
-            (wave_parts if agg is None else wave_parts.join(agg, "part_id", "left"))
-            .na.fill(0)
-            .withColumn("run_id", F.lit(run_id))
-            .withColumn("n_parts", F.lit(n_parts))
-            .withColumn("status", F.lit("committed"))
-            .withColumn("committed_at", F.lit(time.time()))
-            .select(*_LINEAGE_COLS)
-        )
-        storage.append_lineage(metrics)
+        committed_at = time.time()
+        rows = [
+            (run_id, p, n_parts, "committed", *per_part.get(p, (0,) * 5), committed_at)
+            for p in wave
+        ]
+        storage.append_lineage(io.local_frame(spark, rows, LINEAGE_SCHEMA))
         processed.extend(wave)
         if fail_after_wave is not None and wi + 1 >= fail_after_wave:
             raise RuntimeError(f"injected crash after wave {wi + 1}")

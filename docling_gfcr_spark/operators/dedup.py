@@ -588,7 +588,7 @@ def _fast_band_keys(
     text emits the "" shingle, so all-empty docs still collide, matching
     exact-dup semantics. Band hash = mix64 fold over the band's signature
     rows. Keys are NOT comparable with md5 keys — the stamped ``hash_fn``
-    on committed band tables (_check_signature_params) refuses cross-family
+    on committed band tables (_check_signature_stamp) refuses cross-family
     joins.
 
     Plan shape: one narrow MapInPandas (no shuffle, no self-join). Peak
@@ -785,60 +785,38 @@ def commit_minhash_bands(
             raise ValueError("pass df or banded")
         banded = minhash_band_keys(df, "text", "doc_id", n_hashes, bands, k, hash_fn)
     spark = banded.sparkSession
+    stamp = _signature_stamp(n_hashes, bands, k, hash_fn)
     if mode == "append" and spark.catalog.tableExists(table):
         # appending keys built with different signature parameters would mix
         # incomparable band hashes into one index — refuse before writing
-        _check_signature_params(
-            spark, table, n_hashes, bands, k, hash_fn, "commit_minhash_bands"
-        )
+        _check_signature_stamp(spark, table, stamp, "commit_minhash_bands")
     if hot_band_cap is not None:
         banded = _cap_band_keys(banded, hot_band_cap)
     gio.write_bucketed(banded, table, path, key="band_hash", n_buckets=_BAND_BUCKETS, mode=mode)
-    _write_signature_params(spark, table, n_hashes, bands, k, hash_fn)
+    gio.write_table_stamp(spark, table, "minhash", stamp)
 
 
 _SIG_PARAM_KEYS = ("n_hashes", "bands", "k", "hash_fn")
 
 
-def _write_signature_params(spark, table: str, n_hashes, bands, k, hash_fn) -> None:
-    """Stamp the minhash signature parameters on the committed band table
-    (TBLPROPERTIES) so later ingests can prove their keys are comparable."""
-    props = ", ".join(
-        f"'minhash.{key}'='{val}'"
-        for key, val in zip(_SIG_PARAM_KEYS, (n_hashes, bands, k, hash_fn))
-    )
-    spark.sql(f"ALTER TABLE {table} SET TBLPROPERTIES ({props})")
+def _signature_stamp(n_hashes, bands, k, hash_fn) -> dict[str, str]:
+    """The ``minhash.*`` table stamp on a committed band table."""
+    return dict(zip(_SIG_PARAM_KEYS, map(str, (n_hashes, bands, k, hash_fn))))
 
 
-def _read_signature_params(spark, table: str) -> dict[str, str]:
-    # callers guard table existence; a FAILING properties read must raise,
-    # not silently disable the param-mismatch guard (a swallowed metastore
-    # error here would let incomparable band keys dedup against nothing —
-    # the exact failure the stamp exists to prevent). Pre-stamping legacy
-    # tables still pass: SHOW succeeds and simply lacks the minhash.* keys.
-    rows = spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-    props = {str(r.key): str(r.value) for r in rows}
-    return {
-        key: props[f"minhash.{key}"]
-        for key in _SIG_PARAM_KEYS
-        if f"minhash.{key}" in props
-    }
-
-
-def _check_signature_params(spark, table: str, n_hashes, bands, k, hash_fn, context: str) -> None:
+def _check_signature_stamp(spark, table: str, stamp: dict[str, str], context: str) -> None:
     """Band keys are only comparable when BOTH sides used the same
     (n_hashes, bands, k, hash_fn): a mismatch makes the index join silently
     yield ~no candidates and duplicates get committed undetected — the same
     failure class the allow_missing_table guard exists for. Tables written
     before stamping existed (no properties) are allowed through."""
-    have = _read_signature_params(spark, table)
-    want = dict(zip(_SIG_PARAM_KEYS, (str(n_hashes), str(bands), str(k), str(hash_fn))))
-    if have and have != want:
-        raise ValueError(
-            f"{context}: committed band table {table!r} was built with minhash "
-            f"params {have} but this call uses {want} — band keys would be "
-            "incomparable and dedup would silently find nothing"
-        )
+    from docling_gfcr_spark import io as gio
+
+    gio.check_stamp(
+        gio.read_table_stamp(spark, table, "minhash"), stamp,
+        f"{context}: committed band table {table!r} was built with other minhash "
+        "params — band keys would be incomparable and dedup would silently find nothing",
+    )
 
 
 def _cap_band_keys(banded: DataFrame, cap: int) -> DataFrame:
@@ -877,7 +855,7 @@ def recap_band_index(spark, table: str, path: str, hot_band_cap: int) -> None:
     n_buckets = _table_bucket_count(spark, table) or _BAND_BUCKETS
     # the overwrite saveAsTable below recreates the table, dropping the
     # stamped signature parameters — carry them across the rewrite
-    sig = _read_signature_params(spark, table)
+    sig = gio.read_table_stamp(spark, table, "minhash")
     tmp_table, tmp_path = f"{table}_recap", path.rstrip("/") + "_recap"
     # distinct BEFORE capping: the documented at-least-once band append can
     # leave duplicate (id, band, band_hash) rows, which would both count
@@ -895,7 +873,7 @@ def recap_band_index(spark, table: str, path: str, hot_band_cap: int) -> None:
     )
     spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
     if len(sig) == len(_SIG_PARAM_KEYS):
-        _write_signature_params(spark, table, *[sig[key] for key in _SIG_PARAM_KEYS])
+        gio.write_table_stamp(spark, table, "minhash", sig)
     spark.catalog.refreshTable(table)
 
 
@@ -959,8 +937,9 @@ def incremental_minhash_pairs(
         new_banded = minhash_band_keys(new_df, "text", "doc_id", n_hashes, bands, k, hash_fn)
     cross = None
     if spark.catalog.tableExists(table):
-        _check_signature_params(
-            spark, table, n_hashes, bands, k, hash_fn, "incremental_minhash_pairs"
+        _check_signature_stamp(
+            spark, table, _signature_stamp(n_hashes, bands, k, hash_fn),
+            "incremental_minhash_pairs",
         )
         committed = spark.table(table)
         # new-vs-corpus: every committed id sharing a band key with a batch id

@@ -703,8 +703,7 @@ def semantic_dedup(
     # the groupBy, same shuffled bytes; still the plan's ONE hash exchange).
     n_parts = assigned.sparkSession.sparkContext.defaultParallelism
     return (
-        ensure_parallelism(assigned)
-        .repartition(n_parts, *group_cols)
+        assigned.repartition(n_parts, *group_cols)
         .groupBy(*group_cols)
         .applyInPandas(dedup_cluster, schema)
     )
@@ -903,34 +902,20 @@ def load_semantic_centroids(spark, path: str) -> np.ndarray:
     return np.asarray([r.vector for r in rows], dtype=np.float64)
 
 
-def _write_semantic_params(spark, table, dim, n_centroids, threshold, cent_md5) -> None:
-    props = ", ".join(
-        f"'semantic.{key}'='{val}'"
-        for key, val in zip(_SEM_PARAM_KEYS, (dim, n_centroids, threshold, cent_md5))
-    )
-    spark.sql(f"ALTER TABLE {table} SET TBLPROPERTIES ({props})")
+def _semantic_stamp(dim, n_centroids, threshold, cent_md5) -> dict[str, str]:
+    """The ``semantic.*`` table stamp on a committed semantic index."""
+    return dict(zip(_SEM_PARAM_KEYS, map(str, (dim, n_centroids, threshold, cent_md5))))
 
 
-def check_semantic_params(spark, table, dim, n_centroids, threshold, cent_md5, context) -> None:
-    """Refuse incomparable index joins — the semantic twin of
-    dedup._check_signature_params. A failing properties read must raise,
-    not silently disable the guard."""
-    rows = spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-    props = {str(r.key): str(r.value) for r in rows}
-    have = {
-        key: props[f"semantic.{key}"]
-        for key in _SEM_PARAM_KEYS
-        if f"semantic.{key}" in props
-    }
-    want = dict(
-        zip(_SEM_PARAM_KEYS, (str(dim), str(n_centroids), str(threshold), str(cent_md5)))
+def _check_semantic_stamp(spark, table, stamp: dict[str, str], context: str) -> None:
+    """Refuse incomparable index joins; an unstamped (legacy) index passes."""
+    from docling_gfcr_spark import io as gio
+
+    gio.check_stamp(
+        gio.read_table_stamp(spark, table, "semantic"), stamp,
+        f"{context}: committed semantic index {table!r} was built with other "
+        "params — cluster assignments and keep decisions would be incomparable",
     )
-    if have and have != want:
-        raise ValueError(
-            f"{context}: committed semantic index {table!r} was built with "
-            f"params {have} but this call uses {want} — cluster assignments "
-            "and keep decisions would be incomparable"
-        )
 
 
 def embed_and_assign(docs: DataFrame, centroids: np.ndarray, dim: int = 64) -> DataFrame:
@@ -1042,18 +1027,16 @@ def commit_semantic_index(
     later ingest with different params refuses."""
     from docling_gfcr_spark import io as gio
 
-    cent_md5 = centroids_digest(centroids)
+    stamp = _semantic_stamp(dim, n_centroids, threshold, centroids_digest(centroids))
     if mode == "append" and spark.catalog.tableExists(table):
-        check_semantic_params(
-            spark, table, dim, n_centroids, threshold, cent_md5, "commit_semantic_index"
-        )
+        _check_semantic_stamp(spark, table, stamp, "commit_semantic_index")
     rows = kept_assigned.where(F.col("cluster") >= 0).select(
         "id", "vec_id", "cluster", "embedding"
     )
     gio.write_bucketed(
         rows, table, path, key="cluster", n_buckets=_SEM_INDEX_BUCKETS, mode=mode
     )
-    _write_semantic_params(spark, table, dim, n_centroids, threshold, cent_md5)
+    gio.write_table_stamp(spark, table, "semantic", stamp)
 
 
 def recluster_semantic_index(spark, table: str, path: str, n_centroids: int | None = None) -> np.ndarray:
@@ -1088,12 +1071,8 @@ def recluster_semantic_index(spark, table: str, path: str, n_centroids: int | No
     from docling_gfcr_spark import io as gio
     from docling_gfcr_spark.operators.dedup import _table_bucket_count
 
-    rows_all = spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-    props = {str(r.key): str(r.value) for r in rows_all}
-    stamp = {
-        key: props.get(f"semantic.{key}") for key in _SEM_PARAM_KEYS
-    }
-    if any(v is None for v in stamp.values()):
+    stamp = gio.read_table_stamp(spark, table, "semantic")
+    if any(key not in stamp for key in _SEM_PARAM_KEYS):
         raise ValueError(
             f"recluster_semantic_index: {table!r} carries no semantic param "
             "stamp — only indexes written by commit_semantic_index can be "
@@ -1122,7 +1101,9 @@ def recluster_semantic_index(spark, table: str, path: str, n_centroids: int | No
         mode="overwrite",
     )
     save_semantic_centroids(spark, f"{path.rstrip('/')}_centroids", cent)
-    _write_semantic_params(spark, table, dim, k, threshold, centroids_digest(cent))
+    gio.write_table_stamp(
+        spark, table, "semantic", _semantic_stamp(dim, k, threshold, centroids_digest(cent))
+    )
     spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
     spark.catalog.refreshTable(table)
     return cent
@@ -1170,8 +1151,9 @@ def incremental_semantic_verdicts(
     through KEPT.
     """
     if spark.catalog.tableExists(table):
-        check_semantic_params(
-            spark, table, dim, n_centroids, threshold, centroids_digest(centroids),
+        _check_semantic_stamp(
+            spark, table,
+            _semantic_stamp(dim, n_centroids, threshold, centroids_digest(centroids)),
             "incremental_semantic_verdicts",
         )
         committed = spark.table(table).select("vec_id", "cluster", "embedding")

@@ -44,7 +44,8 @@ not re-read from the written files, and the one-row lineage frame is an
 Arrow-backed local relation (``io.local_frame``), so committing runs no
 Python workers. The next stage reads the written dir with the schema this
 run wrote, skipping the Parquet schema-inference job; a resumed stage
-infers it.
+infers it. ``assemble`` reads the extraction's files with the schema
+derived from the input's plan, so it never infers.
 """
 
 from __future__ import annotations
@@ -93,7 +94,7 @@ def read_stage_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
     from docling_gfcr_spark import lineage
 
     try:
-        return spark.read.parquet(_stage_lineage_dir(out_dir))
+        return spark.read.schema(STAGE_LINEAGE_SCHEMA).parquet(_stage_lineage_dir(out_dir))
     except Exception as e:
         # ONLY a missing dir means "first run". A transient/permissions
         # failure must propagate: swallowing it would restart every stage
@@ -232,34 +233,21 @@ class _StageRunner:
         fp = self.fingerprint = lineage.batch_fingerprint(input_df)
         chain = "|".join(self.stages)
         path = _batch_identity_path(self.out_dir)
-        stamped = stamped_chain = None
-        try:
-            row = self.spark.read.parquet(path).collect()[0]
-            stamped = row.fingerprint
-            stamped_chain = getattr(row, "stage_chain", None)
-        except Exception as e:
-            if not lineage.is_missing_input(e):
-                raise
-        if stamped is not None and stamped != fp:
-            raise ValueError(
-                f"output dir {self.out_dir!r} belongs to a different input "
-                f"batch (stamped fingerprint {stamped}, this input {fp}) — "
-                "resuming would skip every committed stage and silently "
-                "drop this batch's documents. Use a fresh --output per "
-                "batch."
-            )
-        if stamped_chain is not None and stamped_chain != chain:
-            raise ValueError(
-                f"output dir {self.out_dir!r} was built with stage chain "
-                f"{stamped_chain!r} but this run uses {chain!r} — resuming "
-                "across a different chain would silently skip or "
-                "double-apply stages. Re-run with the original options or "
-                "use a fresh --output."
-            )
-        if stamped is None or stamped_chain is None:
-            io.local_frame(
-                self.spark, [(fp, chain)], "fingerprint string, stage_chain string"
-            ).write.mode("overwrite").parquet(path)
+        stamped = io.read_dir_stamp(self.spark, path, ("fingerprint", "stage_chain"))
+        unstamped = io.check_stamp(
+            stamped, {"fingerprint": fp},
+            f"output dir {self.out_dir!r} belongs to a different input batch — "
+            "resuming would skip every committed stage and silently drop this "
+            "batch's documents. Use a fresh --output per batch",
+        ) + io.check_stamp(
+            stamped, {"stage_chain": chain},
+            f"output dir {self.out_dir!r} was built with another stage chain — "
+            "resuming across a different chain would silently skip or "
+            "double-apply stages. Re-run with the original options or use a "
+            "fresh --output",
+        )
+        if unstamped:
+            io.write_dir_stamp(self.spark, path, {"fingerprint": fp, "stage_chain": chain})
 
     @property
     def skipped(self) -> list[str]:
@@ -311,7 +299,7 @@ def _run_head_stages(r: _StageRunner, input_df: DataFrame, n_parts, n_waves, mod
     """Stages 1-3, shared by build and ingest: wave-committed extraction
     (part-level resume INSIDE the stage), conversation assembly + source
     tag, batch-internal exact dedup."""
-    from docling_gfcr_spark import lineage
+    from docling_gfcr_spark import lineage, pipeline
     from docling_gfcr_spark.operators import dedup
 
     if "extract" not in r.done:
@@ -334,7 +322,13 @@ def _run_head_stages(r: _StageRunner, input_df: DataFrame, n_parts, n_waves, mod
         }
         r.committed("extract", sum(n_turns.values()))
     if "assemble" not in r.done:
-        ex = lineage.read_extracted(r.spark, stage_dir(r.out_dir, "extract")).drop("part_id")
+        # the schema extraction wrote, derived from the plan (no job)
+        schema = lineage.with_part_id(pipeline.extract_turns(input_df), n_parts).schema
+        ex = (
+            lineage.ParquetStorage(r.spark, stage_dir(r.out_dir, "extract"))
+            .read_data(schema)
+            .drop("part_id")
+        )
         r.publish("assemble", _assemble_with_source(ex))
     if "dedup_exact" not in r.done:
         r.publish(

@@ -129,7 +129,7 @@ def run_tool(params: dict) -> dict:
             "n_parts_processed": len(report["parts_processed"]),
             "n_parts_skipped": len(report["resumed_parts_skipped"]),
         }
-        data = lineage.ParquetStorage(spark, output_dir).read_data()
+        data = lineage.read_extracted(spark, output_dir)
         result["n_turns"] = data.count()
         if return_content:
             rows = (

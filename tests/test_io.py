@@ -6,6 +6,21 @@ from pyspark.sql import functions as F
 from docling_gfcr_spark import io, pipeline, transcripts
 
 
+def test_check_stamp_refuses_names_and_adopts():
+    """The one stamp comparison (no JVM): an equal stamp passes, a key
+    stamped with another value raises naming the key, and a key the stamp
+    lacks (absent or None) is handed back for the caller to adopt."""
+    want = {"fingerprint": "12:345", "stage_chain": "extract|pack"}
+    assert io.check_stamp(dict(want), want, "refused") == []
+    with pytest.raises(ValueError, match="different input.*stage_chain='extract'"):
+        io.check_stamp(
+            {**want, "stage_chain": "extract"}, want, "different input"
+        )
+    assert io.check_stamp({"fingerprint": "12:345"}, want, "refused") == ["stage_chain"]
+    assert io.check_stamp({"fingerprint": None}, want, "refused") == list(want)
+    assert io.check_stamp({}, want, "refused") == list(want)
+
+
 def test_validate_input_schema_accepts_generator(spark):
     tdf = transcripts.make_transcripts(spark, 3, seed=1, parallelism=1)
     assert io.validate_input_schema(tdf) is tdf

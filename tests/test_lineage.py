@@ -640,6 +640,48 @@ def test_stage_publish_job_budget(spark, tmp_path, monkeypatch):
     )
 
 
+def test_extraction_wave_job_budget(spark, tmp_path, monkeypatch):
+    """A two-wave extraction on a fresh dir runs 11 Spark jobs: the input
+    stamp, then per wave the data write (shuffle map + write), the per-part
+    metrics collect (shuffle map + result) and the lineage append. Reading
+    the wave's files back with inferred schema adds one footer-inference
+    job per wave (13). Every driver-built frame (stamp, lineage rows) must
+    take the Arrow path: SparkContext.parallelize is made to fail."""
+    import uuid
+
+    from pyspark import SparkContext
+
+    tdf = transcripts.make_transcripts(spark, 12, mean_turns=3, seed=21, parallelism=2)
+    fingerprint = lineage.batch_fingerprint(tdf)
+
+    def python_rdd(*a, **kw):
+        raise AssertionError("a driver-built frame went through a Python RDD")
+
+    monkeypatch.setattr(SparkContext, "parallelize", python_rdd)
+    out = str(tmp_path / "waves")
+    sc = spark.sparkContext
+    group = f"wave-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "two-wave extraction")
+    try:
+        lineage.run_extraction_job(
+            spark, tdf, out, n_parts=8, n_waves=2, run_id="budget",
+            input_fingerprint=fingerprint,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 11
+    monkeypatch.undo()
+
+    lin = lineage.read_lineage(spark, out).toPandas().set_index("part_id")
+    assert sorted(lin.index) == list(range(8))
+    got = lineage.read_extracted(spark, out).groupBy("part_id").agg(
+        F.count("*").alias("n"), F.sum("n_nodes").alias("nodes")
+    ).toPandas().set_index("part_id")
+    for p, row in lin.iterrows():
+        assert row.n_turns == got["n"].get(p, 0)
+        assert row.nodes_classified == got["nodes"].get(p, 0)
+
+
 _RETRY_SCRIPT = """
 import json, sys
 sys.path.insert(0, sys.argv[2])
@@ -773,6 +815,9 @@ def test_read_stage_lineage_propagates_non_missing_failures(spark, tmp_path, mon
     real_reader = spark.read
 
     class _FailingRead:
+        def schema(self, schema):
+            return self
+
         def parquet(self, path):
             raise AnalysisException("permission denied: " + path)
 

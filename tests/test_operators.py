@@ -1124,9 +1124,11 @@ def test_incremental_signature_params_stamped_and_validated(spark, tmp_path):
     batch = spark.createDataFrame(
         [(100, "alpha beta gamma delta epsilon word1")], "doc_id long, text string"
     )
+    from docling_gfcr_spark import io as gio
+
     table, path = "sigcheck_bands", str(tmp_path / "bands")
     dedup.commit_minhash_bands(docs, table, path, n_hashes=32, bands=8, k=3, hash_fn="md5")
-    assert dedup._read_signature_params(spark, table) == {
+    assert gio.read_table_stamp(spark, table, "minhash") == {
         "n_hashes": "32", "bands": "8", "k": "3", "hash_fn": "md5",
     }
     # mismatched mine: every divergent parameter refuses
@@ -1146,7 +1148,7 @@ def test_incremental_signature_params_stamped_and_validated(spark, tmp_path):
     assert len(got) >= 1
     # maintenance rewrite carries the stamp across the overwrite
     dedup.recap_band_index(spark, table, path, hot_band_cap=3)
-    assert dedup._read_signature_params(spark, table)["hash_fn"] == "md5"
+    assert gio.read_table_stamp(spark, table, "minhash")["hash_fn"] == "md5"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 def test_band_cap_must_be_positive(spark):
