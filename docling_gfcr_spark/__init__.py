@@ -16,6 +16,9 @@ Layout
                  two-phase assembly and stable turn ordering.
 - ``transcripts.py``  deterministic distributed synthetic transcripts generator.
 - ``lineage.py``  per-partition lineage checkpointing + resume (anti-join).
+- ``session.py`` / ``daemon.py``  the local SparkSession factory and the
+                 Python worker daemon it starts, which imports the workers'
+                 modules once before forking them.
 - ``operators/``  large-scale training-data ops: dedup (exact / MinHash-LSH /
                  SimHash / n-gram Jaccard / embedding-cosine), similarity
                  search, text analysis, multimodal column plumbing.
@@ -23,6 +26,7 @@ Layout
 
 __version__ = "0.1.0"
 
-# first thing in every Python worker that runs a package UDF: stops each task
-# re-reading every zip on the worker's sys.path (see zipcache)
+# runs in the worker daemon before it forks (see daemon), or else first in
+# every Python worker that runs a package UDF: stops each task re-reading
+# every zip on the worker's sys.path (see zipcache)
 from docling_gfcr_spark import zipcache  # noqa: E402,F401

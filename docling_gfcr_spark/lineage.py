@@ -14,7 +14,9 @@ sizes. Parts are processed in waves; each wave
    n_turns, nodes_classified, spans_emitted, parse_failures, committed_at)``.
 
 A part's metrics are counted from the files the wave wrote, read back with
-the written frame's schema (no schema-inference job): the per-part
+the schema :func:`data_schema` derives from the input's (no
+schema-inference job, no re-planning); lineage rows are read with
+``LINEAGE_SCHEMA`` the same way. The per-part
 aggregate is collected to the driver (one row per part, at most the wave's
 part count) and the wave's lineage rows, zeros for a part that holds no
 rows, are built there as an Arrow-backed local frame.
@@ -49,7 +51,7 @@ import uuid
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, StructType
 
 #: AnalysisException conditions meaning "the input does not exist yet" —
 #: the ONLY failures that may degrade to first-run/empty semantics. Anything
@@ -135,7 +137,7 @@ class ParquetStorage:
 
     def read_lineage(self) -> DataFrame | None:
         try:
-            return self.spark.read.parquet(self.lineage_dir)
+            return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.lineage_dir)
         except AnalysisException as e:
             # ONLY a missing lineage dir means "first run": swallowing e.g.
             # a corrupt footer would re-extract every committed part and
@@ -155,21 +157,22 @@ def with_part_id(df: DataFrame, n_parts: int) -> DataFrame:
     return df.withColumn("part_id", F.pmod(F.xxhash64("conv_id"), F.lit(n_parts)).cast("int"))
 
 
+def data_schema(input_schema: StructType) -> StructType:
+    """The schema of a job's ``data/``, ``with_part_id(extract_turns(df))``
+    for an input of ``input_schema``, without planning it."""
+    return pipeline.extracted_schema(input_schema).add("part_id", IntegerType())
+
+
 def committed_parts(storage: ParquetStorage, n_parts: int) -> set[int]:
     """Committed part ids, validating the persisted hash scheme.
 
     Raises ``ValueError`` if the lineage table was written under a different
-    ``n_parts`` — its part ids would map to different conv_id sets now.
+    ``n_parts`` — its part ids would map to different conv_id sets now — or
+    holds a committed row written before ``n_parts`` was recorded.
     """
     lineage = storage.read_lineage()
     if lineage is None:
         return set()
-    if "n_parts" not in lineage.columns:
-        raise ValueError(
-            "lineage table predates n_parts tracking — its part ids cannot be "
-            "validated against this run's hash scheme; rerun the whole job "
-            "into a fresh output directory"
-        )
     rows = (
         lineage.where(F.col("status") == "committed")
         .select("part_id", "n_parts")
@@ -177,6 +180,13 @@ def committed_parts(storage: ParquetStorage, n_parts: int) -> set[int]:
         .collect()
     )
     seen_n_parts = {r.n_parts for r in rows}
+    # the schema'd read gives files written before n_parts existed a NULL
+    if None in seen_n_parts:
+        raise ValueError(
+            "lineage table predates n_parts tracking — its part ids cannot be "
+            "validated against this run's hash scheme; rerun the whole job "
+            "into a fresh output directory"
+        )
     if seen_n_parts - {n_parts}:
         raise ValueError(
             f"lineage table was committed with n_parts={sorted(seen_n_parts)} "
@@ -232,6 +242,7 @@ def run_extraction_job(
     todo = [p for p in range(n_parts) if p not in done]
     src = with_part_id(input_df, n_parts)
 
+    schema = data_schema(input_df.schema)
     waves = [todo[i::n_waves] for i in range(n_waves)]
     waves = [w for w in waves if w]
     processed: list[int] = []
@@ -248,7 +259,7 @@ def run_extraction_job(
         # case may degrade: any other read failure (permissions, corrupt
         # footer) must fail the wave, not commit it with fabricated metrics
         try:
-            data = storage.read_data(extracted.schema)
+            data = storage.read_data(schema)
         except AnalysisException as e:
             if not is_missing_input(e):
                 raise
@@ -290,3 +301,19 @@ def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.schema(LINEAGE_SCHEMA).parquet(f"{out_dir}/lineage")
+
+
+def committed_turns(spark: SparkSession, out_dir: str) -> int:
+    """Rows under ``out_dir``'s ``data/``: the sum over parts of the
+    ``n_turns`` in each part's latest committed lineage row, which its wave
+    counted from the part's files at commit. Parts an earlier, crashed run
+    committed count too. A read of a few small lineage files, not of
+    ``data/``."""
+    rows = (
+        read_lineage(spark, out_dir)
+        .where(F.col("status") == "committed")
+        .select("part_id", "n_turns", "committed_at")
+        .collect()
+    )
+    n_turns = {r.part_id: r.n_turns for r in sorted(rows, key=lambda r: r.committed_at)}
+    return sum(n_turns.values())

@@ -487,6 +487,19 @@ def extract_batch(
     return pd.DataFrame(out)
 
 
+#: the input columns :func:`extract_turns` carries through unchanged
+_KEPT_COLS = ("conv_id", "turn_idx", "role", "tool", "ts")
+
+#: the columns :func:`extract_turns` computes beside the UDF, nullable as
+#: Catalyst derives them (``octet_length`` over a ``coalesce`` with a
+#: literal is never NULL, a division may be)
+_SIZE_FIELDS = (
+    T.StructField("size_bytes", T.LongType(), False),
+    T.StructField("size_mb", T.DoubleType()),
+    T.StructField("estimated_pages", T.LongType(), False),
+)
+
+
 def extract_turns(
     df: DataFrame,
     mode: str = "agent",
@@ -522,31 +535,19 @@ def extract_turns(
         )
     )
     return out.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "tool",
-        "ts",
-        "x.extracted_text",
-        "x.method",
-        "x.success",
-        "x.error",
-        "x.spans",
-        "x.n_nodes",
-        "x.n_kept",
-        "x.n_spans",
-        "x.parse_failed",
-        "x.headers_count",
-        "x.paragraphs_count",
-        "x.lists_count",
-        "x.word_count",
-        "x.char_count",
-        "x.issues",
-        "x.quality_score",
-        "x.valid",
-        "size_bytes",
-        "size_mb",
-        "estimated_pages",
+        *_KEPT_COLS,
+        *(f"x.{f.name}" for f in EXTRACT_TYPE.fields),
+        *(f.name for f in _SIZE_FIELDS),
+    )
+
+
+def extracted_schema(input_schema: T.StructType) -> T.StructType:
+    """The schema :func:`extract_turns` returns for an input of
+    ``input_schema``, without planning it: the kept input columns as the
+    input types them (``ts`` may be ``timestamp`` or ``timestamp_ntz``),
+    then the UDF's fields, then the size columns."""
+    return T.StructType(
+        [input_schema[c] for c in _KEPT_COLS] + EXTRACT_TYPE.fields + list(_SIZE_FIELDS)
     )
 
 

@@ -11,15 +11,17 @@ the method lazy, so the stdlib is left alone there.
 
 The replacement re-reads an archive only when its ``(st_ino, st_size,
 st_mtime_ns)`` differs from the stat taken when its directory was last read,
-so an archive rewritten in place (``addPyFile``) is still picked up. Every
-package UDF pickles package functions by reference, so the package's
-``__init__`` (which imports this module) runs inside each Python worker
-during its first task's ``read_udfs``, right after that task's own
-``invalidate_caches()`` read every cached archive: installing stamps those
-archives, and from the worker's second task on nothing is re-read. Do not
-drop the stamp or the version gate: without the first every worker's second
-package task still re-reads, without the second 3.12's lazy reads are
-replaced by eager ones.
+so an archive rewritten in place (``addPyFile``) is still picked up. Under
+``session.get_spark`` the worker daemon (``docling_gfcr_spark.daemon``)
+imports the package, and with it this module, before it forks: workers
+inherit the patched method and the stamps, and no task re-reads. Elsewhere
+every package UDF pickles package functions by reference, so the package's
+``__init__`` runs inside each Python worker during its first task's
+``read_udfs``, right after that task's own ``invalidate_caches()`` read
+every cached archive: installing stamps those archives, and from the
+worker's second task on nothing is re-read. Do not drop the stamp or the
+version gate: without the first every worker's second package task still
+re-reads, without the second 3.12's lazy reads are replaced by eager ones.
 """
 
 from __future__ import annotations

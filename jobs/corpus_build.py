@@ -299,7 +299,7 @@ def _run_head_stages(r: _StageRunner, input_df: DataFrame, n_parts, n_waves, mod
     """Stages 1-3, shared by build and ingest: wave-committed extraction
     (part-level resume INSIDE the stage), conversation assembly + source
     tag, batch-internal exact dedup."""
-    from docling_gfcr_spark import lineage, pipeline
+    from docling_gfcr_spark import lineage
     from docling_gfcr_spark.operators import dedup
 
     if "extract" not in r.done:
@@ -308,25 +308,11 @@ def _run_head_stages(r: _StageRunner, input_df: DataFrame, n_parts, n_waves, mod
             n_parts=n_parts, n_waves=n_waves, mode=mode, run_id=r.run_id,
             input_fingerprint=r.fingerprint,
         )
-        # parts committed by an earlier, crashed run count too: sum the
-        # n_turns each part's latest committed lineage row counted from its
-        # files at commit (a schema'd read of a few small files, no re-read)
-        rows = (
-            lineage.read_lineage(r.spark, stage_dir(r.out_dir, "extract"))
-            .where(F.col("status") == "committed")
-            .select("part_id", "n_turns", "committed_at")
-            .collect()
-        )
-        n_turns = {
-            row.part_id: row.n_turns for row in sorted(rows, key=lambda row: row.committed_at)
-        }
-        r.committed("extract", sum(n_turns.values()))
+        r.committed("extract", lineage.committed_turns(r.spark, stage_dir(r.out_dir, "extract")))
     if "assemble" not in r.done:
-        # the schema extraction wrote, derived from the plan (no job)
-        schema = lineage.with_part_id(pipeline.extract_turns(input_df), n_parts).schema
         ex = (
             lineage.ParquetStorage(r.spark, stage_dir(r.out_dir, "extract"))
-            .read_data(schema)
+            .read_data(lineage.data_schema(input_df.schema))
             .drop("part_id")
         )
         r.publish("assemble", _assemble_with_source(ex))

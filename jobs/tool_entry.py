@@ -129,11 +129,12 @@ def run_tool(params: dict) -> dict:
             "n_parts_processed": len(report["parts_processed"]),
             "n_parts_skipped": len(report["resumed_parts_skipped"]),
         }
-        data = lineage.read_extracted(spark, output_dir)
-        result["n_turns"] = data.count()
+        result["n_turns"] = lineage.committed_turns(spark, output_dir)
         if return_content:
             rows = (
-                data.select("conv_id", "turn_idx", "method", "extracted_text")
+                lineage.ParquetStorage(spark, output_dir)
+                .read_data(lineage.data_schema(input_df.schema))
+                .select("conv_id", "turn_idx", "method", "extracted_text")
                 .orderBy("conv_id", "turn_idx")
                 .limit(content_limit)
                 .collect()

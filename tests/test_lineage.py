@@ -55,6 +55,17 @@ def test_part_id_stability(spark):
     )
 
 
+@pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
+def test_data_schema_equals_the_planned_schema(spark, ts_type):
+    """The schema a job's data/ is read with, derived without planning the
+    extraction, is the one with_part_id(extract_turns(df)) plans, for either
+    timestamp type of the input."""
+    tdf = transcripts.make_transcripts(spark, 2, mean_turns=2, seed=1, parallelism=1)
+    tdf = tdf.withColumn("ts", F.col("ts").cast(ts_type))
+    planned = lineage.with_part_id(pipeline.extract_turns(tdf), 8).schema
+    assert lineage.data_schema(tdf.schema) == planned
+
+
 def test_completed_job_is_noop_on_rerun(spark, tmp_path):
     out = str(tmp_path / "job2")
     tdf = transcripts.make_transcripts(spark, 6, mean_turns=3, seed=2, parallelism=2)
@@ -207,6 +218,8 @@ def test_tool_entry_envelope(spark, tmp_path):
     assert resp["success"] is True, resp
     assert resp["conversion_method"] == "spark_pipeline"
     assert resp["n_turns"] > 0 and len(resp["content"]) == 5
+    # n_turns comes from the committed lineage rows, not from data/ itself
+    assert resp["n_turns"] == spark.read.parquet(f"{out}/data").count()
     assert {"conv_id", "turn_idx", "method", "extracted_text"} <= set(resp["content"][0])
     # bad stdin JSON -> error envelope, not a traceback
     proc2 = subprocess.run(
@@ -241,6 +254,19 @@ def test_resume_refuses_unreadable_lineage(spark, tmp_path):
         lineage.run_extraction_job(spark, tdf, str(out), n_parts=8, n_waves=2)
     assert not isinstance(err.value, ValueError)  # the read failed, not the n_parts check
     assert snapshot() == before
+
+
+def test_resume_refuses_lineage_without_n_parts(spark, tmp_path):
+    """A lineage table written before n_parts was recorded cannot have its
+    part ids checked against this run's hash scheme, so resuming it raises
+    rather than trusting them."""
+    out = str(tmp_path / "legacy")
+    legacy = "run_id string, part_id int, status string, n_turns long, committed_at double"
+    spark.createDataFrame([("old", 0, "committed", 3, 0.0)], legacy).write.parquet(
+        f"{out}/lineage"
+    )
+    with pytest.raises(ValueError, match="predates n_parts tracking"):
+        lineage.committed_parts(lineage.ParquetStorage(spark, out), 4)
 
 
 # ---------------------------------------------------------------------------
