@@ -21,12 +21,13 @@ not come through here and set their own JVM flags.
 
 Python workers fork from ``docling_gfcr_spark.daemon``
 (``spark.python.daemon.module``), which imports pandas, pyarrow's pandas
-bridge and the package kernels once, before it forks. A session used to
-pay those imports in every worker, once per core. In fresh ``local[4]``
-sessions on a 4-core host, a worker's CPU from fork to its first package
-UDF call fell from 0.67 to 0.005 s, and the daemon's own start grew from
-1.25 to 1.69 CPU-s: about 2.2 CPU-s less per session. Like the JIT cap,
-the conf is set here only; cluster sessions keep ``pyspark.daemon``.
+bridge and the package kernels once, before it forks. Under the bare
+``pyspark.daemon`` every worker pays those imports, once per core. In
+fresh ``local[4]`` sessions on a 4-core host, a worker's CPU from fork to
+its first package UDF call fell from 0.67 to 0.005 s, and the daemon's
+own start grew from 1.25 to 1.69 CPU-s: about 2.2 CPU-s less per session.
+Like the JIT cap, the conf is set here only; cluster sessions keep
+``pyspark.daemon``.
 """
 
 from __future__ import annotations
